@@ -25,9 +25,15 @@ Workloads (one client, closed loop):
   ``materialize(resume=True)``, then a seeded query mix over
   ``current_view``; the timed operation is the resume step.
 
-Every workload ends with the seeded query mix, 4 light queries to 1
-heavy, over the knowledge graph it produced, for the query latency
-metrics.
+Every workload ends with rounds of seeded queries, one of each light
+and heavy shape per round, over the knowledge graph it produced, for
+the query metrics. Query cost falls for the first dozen or so queries
+of a session as the JVM compiles the planner's hot paths, so setup runs
+a warm round first and the metrics are medians over the rounds.
+
+The end-to-end metrics other than ``setup_s`` are CPU seconds of the
+process tree, not wall time (``CpuMeter`` says why); the wall times of
+the same ops and queries are in the stamp line.
 """
 
 from __future__ import annotations
@@ -57,14 +63,13 @@ MIN_OPS = 2  # timed ops per run, however long they take
 
 
 _MEASURED = ("java", "python", "python3")
+_TICK = os.sysconf("SC_CLK_TCK")
 
 
-def _tree_rss(root_pid: int) -> dict:
-    """{pid: (command name, RSS bytes)} of the client Python process, the
-    JVM and the Python workers under root_pid. A JVM child between fork and exec
-    carries the forking thread's name and the JVM's whole RSS; it is
-    skipped, so the transient copy is not counted twice."""
-    children, stat = {}, {}
+def _proc_table() -> dict:
+    """{pid: (ppid, command name, RSS bytes, CPU s)} of every process;
+    CPU s is user + system time, with that of reaped children."""
+    out = {}
     page = os.sysconf("SC_PAGE_SIZE")
     for d in os.listdir("/proc"):
         if not d.isdigit():
@@ -72,18 +77,76 @@ def _tree_rss(root_pid: int) -> dict:
         try:
             with open(f"/proc/{d}/stat") as fh:
                 head, tail = fh.read().rsplit(")", 1)
-            fields = tail.split()
-            children.setdefault(int(fields[1]), []).append(int(d))
-            stat[int(d)] = (head.split("(", 1)[1], int(fields[21]) * page)
+            f = tail.split()
+            cpu = sum(int(x) for x in f[11:15]) / _TICK
+            out[int(d)] = (int(f[1]), head.split("(", 1)[1], int(f[21]) * page, cpu)
         except (OSError, IndexError, ValueError):
             continue
-    out, stack = {}, [root_pid]
-    while stack:
-        p = stack.pop()
-        stack += children.get(p, [])
-        if p in stat and stat[p][0] in _MEASURED:
-            out[p] = stat[p]
     return out
+
+
+def _descendants(root_pid: int, table: dict | None = None) -> list:
+    table = _proc_table() if table is None else table
+    children: dict = {}
+    for pid, row in table.items():
+        children.setdefault(row[0], []).append(pid)
+    out, stack = [], [root_pid]
+    while stack:
+        for c in children.get(stack.pop(), []):
+            out.append(c)
+            stack.append(c)
+    return out
+
+
+def _tree_rss(root_pid: int) -> dict:
+    """{pid: (command name, RSS bytes)} of the client Python process, the
+    JVM and the Python workers under root_pid. A JVM child between fork and exec
+    carries the forking thread's name and the JVM's whole RSS; it is
+    skipped, so the transient copy is not counted twice."""
+    table = _proc_table()
+    return {
+        p: table[p][1:3]
+        for p in [root_pid] + _descendants(root_pid, table)
+        if p in table and table[p][1] in _MEASURED
+    }
+
+
+def _stat_cpu_s(path: str) -> float:
+    with open(path) as fh:
+        f = fh.read().rsplit(")", 1)[1].split()
+    return (int(f[11]) + int(f[12])) / _TICK
+
+
+class CpuMeter:
+    """CPU seconds spent on the program's work so far: the client's main
+    thread, the JVM and the Python workers, less the JVM's JIT compiler
+    threads.
+
+    The end-to-end metrics are CPU time, not wall time: on a shared
+    4-core host the hypervisor hands our cores to other tenants (CPU
+    steal of up to 15%), which stretched the wall time of the same op
+    by up to 80% and of a light query by up to 2x from run to run. CPU
+    time leaves the stolen time out; it still grows, by less, when a
+    tenant shares a core's caches. The JIT's compile work, more than
+    half the JVM's CPU time even after the warm iterations, is a
+    warm-up cost that falls from op to op, so it is left out as well;
+    the session keeps every compiler thread alive, so none takes its
+    time with it when it ends. The client's other threads (the RSS
+    sampler) are not counted."""
+
+    def __init__(self):
+        table = _proc_table()
+        jvm = next(p for p in _descendants(os.getpid(), table) if table[p][1] == "java")
+        self.jit = []
+        for tid in os.listdir(f"/proc/{jvm}/task"):
+            with open(f"/proc/{jvm}/task/{tid}/comm") as fh:
+                if fh.read().startswith(("C1 CompilerThre", "C2 CompilerThre")):
+                    self.jit.append(f"/proc/{jvm}/task/{tid}/stat")
+
+    def read(self) -> float:
+        table = _proc_table()
+        tree = sum(table[p][3] for p in _descendants(os.getpid(), table) if p in table)
+        return tree - sum(_stat_cpu_s(f) for f in self.jit) + time.thread_time()
 
 
 def cpu_steal_share() -> tuple:
@@ -91,23 +154,6 @@ def cpu_steal_share() -> tuple:
     with open("/proc/stat") as fh:
         vals = [int(x) for x in fh.readline().split()[1:]]
     return vals[7], sum(vals)
-
-
-def _descendants(root_pid: int) -> list:
-    out, stack = [], [root_pid]
-    children = {}
-    for d in os.listdir("/proc"):
-        if d.isdigit():
-            try:
-                with open(f"/proc/{d}/stat") as fh:
-                    children.setdefault(int(fh.read().rsplit(")", 1)[1].split()[1]), []).append(int(d))
-            except (OSError, IndexError, ValueError):
-                continue
-    while stack:
-        for c in children.get(stack.pop(), []):
-            out.append(c)
-            stack.append(c)
-    return out
 
 
 class RssSampler:
@@ -188,12 +234,15 @@ class Workload:
         self.spark, self.work, self.seed, self.tracer = spark, work, seed, tracer
         self.p = spec["params"]
         self.warm = spec["warm_iterations"]
+        self.query_warm_rounds = spec["query_warm_rounds"]
         self.query_rounds = spec["query_rounds"]
         self.pipe = KGPipeline(spark, import_map={})
         self.rng = random.Random(f"{seed}:queries")
         self.failures = 0
         self.attempts = 0
-        self.query_lat: list = []
+        self.query_lat: list = []  # (shape, wall s)
+        self.query_cpu: list = []  # CPU s per query, one value per recorded round
+        self.cpu = CpuMeter()
         self.layer_counts: dict = {}  # per-iteration counts, summed
         self.once: dict = {}  # counts of the single post-loop phase
 
@@ -218,48 +267,60 @@ class Workload:
         )
         return doc, ind, types[0]
 
-    def query_mix(self, triples, expected, shapes):
-        """One query of each shape, each collected and checked."""
+    def query_mix(self, triples, expected, shapes) -> float:
+        """One query of each shape, each collected and checked. Returns
+        the CPU seconds of the group, read around the queries only, so
+        the pure-Python expected results and checks stay out of it."""
         from check import query_expected, query_text, rows_of
         from yamlpyowl_spark.operators import sparql
 
         ns, ind, cls = self.query_params(expected)
         facts = expected.facts()
+        wants = [query_expected(shape, facts, ns, ind, cls) for shape in shapes]
+        results = []
+        c0 = self.cpu.read()
         for shape in shapes:
-            want = query_expected(shape, facts, ns, ind, cls)
             self.attempts += 1
             t0 = time.perf_counter()
             try:
                 with self.tracer.span(f"query.{shape}", shape):
                     got = sparql.make_query(triples, query_text(shape, ns, ind, cls)).collect()
-                dt = time.perf_counter() - t0
-                got = rows_of(shape, got)
-                ok = got == want
-                if not ok:
-                    print(f"query {shape}: {len(got)} rows, expected {len(want)}; "
-                          f"unexpected {sorted(got - want)[:3]}, missing {sorted(want - got)[:3]}", file=sys.stderr)
             except Exception as err:  # a failing query is counted, the loop goes on
                 print(f"query {shape} raised: {err!r}", file=sys.stderr)
-                dt, ok = time.perf_counter() - t0, False
-            self.query_lat.append((shape, dt))
-            if not ok:
+                got = None
+            self.query_lat.append((shape, time.perf_counter() - t0))
+            results.append(got)
+        cpu_s = self.cpu.read() - c0
+        for shape, want, got in zip(shapes, wants, results):
+            got = None if got is None else rows_of(shape, got)
+            if got != want:
+                if got is not None:
+                    print(f"query {shape}: {len(got)} rows, expected {len(want)}; "
+                          f"unexpected {sorted(got - want)[:3]}, missing {sorted(want - got)[:3]}", file=sys.stderr)
                 self.fail(f"query {shape}")
+        return cpu_s
 
     def query_mixes(self, triples):
-        """``query_rounds`` rounds of one mix per heavy shape: 4 light
-        queries and that heavy one."""
+        """``query_rounds`` rounds of one query of every shape. The CPU
+        time is read per round, which takes one to two seconds of CPU:
+        the 10 ms resolution of the kernel's CPU counters stays below 1%
+        of a reading, and a collector pause or a burst of background
+        work weighs less than in a reading per query."""
         from check import HEAVY_SHAPES, LIGHT_SHAPES
 
+        shapes = LIGHT_SHAPES + HEAVY_SHAPES
         for _ in range(self.query_rounds):
-            for heavy in HEAVY_SHAPES:
-                self.query_mix(triples, self.expected, LIGHT_SHAPES + (heavy,))
+            self.query_cpu.append(self.query_mix(triples, self.expected, shapes) / len(shapes))
 
     def warm_queries(self):
-        """Every query shape once, unrecorded: the first run of a shape
-        compiles its plans, which would split the latencies in two."""
+        """``query_warm_rounds`` rounds of every shape, unrecorded: the
+        first queries of a session compile plans and warm the JVM, which
+        would put a falling trend into the latencies."""
         from check import HEAVY_SHAPES, LIGHT_SHAPES
 
-        self.query_mix(self.query_target(), self.expected, LIGHT_SHAPES + HEAVY_SHAPES)
+        target = self.query_target()
+        for _ in range(self.query_warm_rounds):
+            self.query_mix(target, self.expected, LIGHT_SHAPES + HEAVY_SHAPES)
         self.query_lat.clear()
 
     def materialize_counts(self, out: str, run_id: str, expected):
@@ -300,6 +361,7 @@ class Build(Workload):
         if self.expected.error_keys != self.bad:
             self.fail("sequential parse errors differ from the injected malformed documents")
         self.n = 0
+        self.updated = False
 
     def write_source(self, name: str) -> str:
         import gen
@@ -362,17 +424,24 @@ class Build(Workload):
         self.distinct.update(new)
         return len(new) + len(edited)
 
-    def query_target(self):
+    def current_view(self):
         from yamlpyowl_spark.plans import KGPipeline
 
         spark = self.spark
         return KGPipeline.current_view(spark.read.parquet(f"{self.out}/triples"), spark.read.parquet(self.src))
 
+    def query_target(self):
+        """The last graph's triples. After an update step the table also
+        holds the superseded rows of edited documents, so the queries go
+        through ``current_view``."""
+        return self.current_view() if self.updated else self.spark.read.parquet(f"{self.out}/triples")
+
     def finish(self):
-        """The query mixes over ``current_view`` of the last graph. In a
-        traced run an update step comes first: a delta source and
-        ``materialize(resume=True)``, so the resume layer is measured and
-        checked there (timed runs skip it to keep a run short)."""
+        """The check of ``current_view``, then the query rounds over the
+        last graph. In a traced run an update step comes first: a delta
+        source and ``materialize(resume=True)``, so the resume layer is
+        measured and checked there (timed runs skip it to keep a run
+        short)."""
         from check import Expected, TRIPLE_COLS, spark_digest
 
         spark, traced = self.spark, self.tracer.enabled
@@ -383,17 +452,17 @@ class Build(Workload):
             self.attempts += 1
             res = self.pipe.materialize(spark.read.parquet(self.src), self.out, resume=True)
             self.tracer.enabled = False
+            self.updated = True
             if res["n_new_docs"] != delta:
                 self.fail(f"resume parsed {res['n_new_docs']} docs, the delta is {delta}")
             self.once["resume.docs_scanned"] = self.expected.n_docs
             self.once["resume.docs_new"] = res["n_new_docs"]
-        view = self.query_target()
         self.tracer.enabled = False
         self.attempts += 1
-        if spark_digest(view, TRIPLE_COLS) != self.expected.triple_digest:
+        if spark_digest(self.current_view(), TRIPLE_COLS) != self.expected.triple_digest:
             self.fail("current_view differs from a fresh parse of the current source")
         self.tracer.enabled = traced
-        self.query_mixes(view)
+        self.query_mixes(self.query_target())
 
 
 class Reason(Workload):
@@ -485,8 +554,9 @@ def start_session(work: str):
             "spark.local.dir": os.path.join(work, "spark-local"),
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
             # a fixed heap keeps the JVM's resident size from depending
-            # on when the collector chose to grow the heap
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEM}",
+            # on when the collector chose to grow the heap; see CpuMeter
+            # for the compiler threads
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEM} -XX:-UseDynamicNumberOfCompilerThreads",
             "spark.ui.showConsoleProgress": "false",
             "spark.ui.retainedJobs": "100000",
             "spark.ui.retainedStages": "100000",
@@ -509,8 +579,11 @@ def session_counts(sc) -> tuple:
     return n, t
 
 
+_T0 = time.perf_counter()
+
+
 def log(msg: str):
-    print(f"[perfbench] {msg}", file=sys.stderr, flush=True)
+    print(f"[perfbench {time.perf_counter() - _T0:6.1f}s] {msg}", file=sys.stderr, flush=True)
 
 
 def iteration(w: Workload, tracer, traced: bool = False):
@@ -519,7 +592,7 @@ def iteration(w: Workload, tracer, traced: bool = False):
     w.prepare()
     w.attempts += 1
     tracer.enabled = traced
-    t0 = time.perf_counter()
+    c0, t0 = w.cpu.read(), time.perf_counter()
     try:
         with tracer.span("op", w.name):
             out = w.op()
@@ -530,11 +603,12 @@ def iteration(w: Workload, tracer, traced: bool = False):
     finally:
         tracer.enabled = False
     op_s = time.perf_counter() - t0
+    cpu_s = w.cpu.read() - c0
     log(f"op in {op_s:.2f}s")
     w.check(traced)
     if traced:
         tracer.count_captured()
-    return op_s, out
+    return op_s, out, cpu_s
 
 
 def hygiene_probe(w: Workload, label: str) -> int:
@@ -573,6 +647,7 @@ def run(args, work: str, res: dict) -> None:
     for _ in range(w.warm):
         iteration(w, tracer)
     w.warm_queries()
+    log("warm queries done")
     w.failures = w.attempts = 0
     setup_s = time.perf_counter() - t_setup
 
@@ -596,26 +671,39 @@ def _shape_mean(lat: list, shapes: tuple) -> float:
 
 
 def timed_loop(args, w: Workload, tracer, setup_s: float) -> dict:
+    """The end-to-end metrics, in CPU seconds (see ``CpuMeter``); the
+    wall times of the same ops and queries go into the result stamp."""
     from check import HEAVY_SHAPES, LIGHT_SHAPES
 
-    ops, rates = [], []
+    ops, cpus, rates = [], [], []
     t_end = time.perf_counter() + args.seconds
     while (len(ops) < MIN_OPS and w.failures < MIN_OPS) or time.perf_counter() < t_end:
         r = iteration(w, tracer)
         if r is not None:
-            ops.append(r[0])
-            rates.append(r[1] / r[0])
+            op_s, triples, cpu_s = r
+            ops.append(op_s)
+            cpus.append(cpu_s)
+            rates.append(triples / cpu_s)
     if not ops:
         raise RuntimeError(f"every {w.name} op failed")
     w.finish()
+    log("queries done")
     return {
         "setup_s": setup_s,
-        "op_p50_s": statistics.median(ops),
-        "triples_per_s": statistics.median(rates),
-        "query_light_s": _shape_mean(w.query_lat, LIGHT_SHAPES),
-        "query_heavy_s": _shape_mean(w.query_lat, HEAVY_SHAPES),
-        "ops_s": [round(x, 4) for x in ops],
-        "queries_s": [(q, round(dt, 4)) for q, dt in w.query_lat],
+        "op_cpu_s": statistics.median(cpus),
+        "triples_per_cpu_s": statistics.median(rates),
+        "query_cpu_s": statistics.median(w.query_cpu),
+        "wall": {
+            "op_p50_s": statistics.median(ops),
+            "query_light_s": _shape_mean(w.query_lat, LIGHT_SHAPES),
+            "query_heavy_s": _shape_mean(w.query_lat, HEAVY_SHAPES),
+            "ops_s": [round(x, 4) for x in ops],
+            "queries_s": [(q, round(dt, 4)) for q, dt in w.query_lat],
+        },
+        "cpu": {
+            "ops_s": [round(x, 3) for x in cpus],
+            "query_rounds_s": [round(c, 3) for c in w.query_cpu],
+        },
     }
 
 
@@ -730,7 +818,7 @@ def main(argv=None) -> int:
             shutdown(res["spark"])
         shutil.rmtree(work, ignore_errors=True)
     w, metrics = res["w"], res["metrics"]
-    info = {k: metrics.pop(k) for k in ("ops_s", "queries_s") if k in metrics}
+    info = {k: metrics.pop(k) for k in ("wall", "cpu") if k in metrics}
     if not args.trace:
         metrics["peak_rss_mb"] = sampler.peak
     log(f"memory sampling took {sampler.cost_s:.2f}s; peak by command (MB): " + ", ".join(f"{k}={v:.0f}" for k, v in sorted(sampler.at_peak.items())))
