@@ -371,7 +371,7 @@ def test_transitive_closure_driver_regime_matches_distributed(spark):
     dispatch must be invisible at the boundary."""
     import random
 
-    from yamlpyowl_spark.operators import closure as C
+    from yamlpyowl_spark.operators import closure as C, regime
 
     random.seed(7)
     cases = [
@@ -382,12 +382,12 @@ def test_transitive_closure_driver_regime_matches_distributed(spark):
     for edges in cases:
         df = spark.createDataFrame(edges, "src string, dst string")
         fast = {(r["src"], r["dst"]) for r in transitive_closure(df).collect()}
-        old = C._DRIVER_CLOSURE_EDGES
-        C._DRIVER_CLOSURE_EDGES = 0  # force the distributed loops
+        old = regime.DRIVER_EDGES
+        regime.DRIVER_EDGES = 0  # force the distributed loops
         try:
             slow = {(r["src"], r["dst"]) for r in transitive_closure(df).collect()}
         finally:
-            C._DRIVER_CLOSURE_EDGES = old
+            regime.DRIVER_EDGES = old
         assert fast == slow
 
     # output-cap abort hands off to the distributed loop, same answer
@@ -410,7 +410,7 @@ def test_connected_components_driver_regime_matches_distributed(spark):
     chains (pointer jumping), merged stars, and duplicate/self edges."""
     import random
 
-    from yamlpyowl_spark.operators import cc as CC
+    from yamlpyowl_spark.operators import cc as CC, regime
 
     random.seed(13)
     cases = [
@@ -422,12 +422,12 @@ def test_connected_components_driver_regime_matches_distributed(spark):
     for edges in cases:
         df = spark.createDataFrame(edges, "src string, dst string")
         fast = {(r["node"], r["component"]) for r in CC.connected_components(df).collect()}
-        old = CC._DRIVER_CC_EDGES
-        CC._DRIVER_CC_EDGES = 0  # force the distributed loop
+        old = regime.DRIVER_EDGES
+        regime.DRIVER_EDGES = 0  # force the distributed loop
         try:
             slow = {(r["node"], r["component"]) for r in CC.connected_components(df).collect()}
         finally:
-            CC._DRIVER_CC_EDGES = old
+            regime.DRIVER_EDGES = old
         assert fast == slow
 
 

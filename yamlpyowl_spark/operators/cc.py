@@ -20,19 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# label-side broadcast bound (rows of the two-string label tuple):
-# see the dispatch note inside connected_components
-_BROADCAST_LABEL_ROWS = 100_000
-
-# driver-CC regime bound (r7, guide §1.2): a MEASURED-tiny edge set
-# (the alias/near-dup graphs at the verification SFs are a few hundred
-# pairs) pays the iterative label-propagation loop almost entirely in
-# Spark job latency, not compute. Under the bound the components come
-# from ONE bounded probe + a driver union-find shipped back as a local
-# relation — the bounded-collect discipline the closure/rule operators
-# already use. Hard cap: past it, the distributed loop runs unchanged
-# (CC output is ≤ 2 rows per edge, so no separate output cap needed).
-_DRIVER_CC_EDGES = 5_000
+from ..schema import arrow_local_df
+from . import regime
 
 
 def _py_components(edge_rows):
@@ -143,24 +132,15 @@ def connected_components(
         .distinct()
     )
 
-    # driver-CC regime: ONE bounded probe (limit N+1 — never an
-    # unbounded collect) answers both "how big" and "what are the
-    # rows"; a tiny graph resolves in 2 jobs instead of ~4 per
-    # propagation round. Node set parity with the loop below: a node
-    # appears iff it rides at least one non-self edge.
-    probe = e.limit(_DRIVER_CC_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_CC_EDGES:
+    # driver regime (see :mod:`.regime`): a tiny graph resolves in one
+    # bounded collect + a driver union-find instead of ~4 jobs per
+    # propagation round; its output is ≤ 2 rows per edge, so unlike
+    # closure it needs no output cap. Node set parity with the loop
+    # below: a node appears iff it rides at least one non-self edge.
+    probe = regime.driver_rows(e, regime.DRIVER_EDGES)
+    if probe is not None:
         rows = _py_components([(r["a"], r["b"]) for r in probe])
-        # Arrow path (pandas → LocalTableScan): a tuple-list
-        # createDataFrame plans as a pickled Python RDD re-evaluated on
-        # every downstream action (~1.4 s each measured); the Arrow
-        # local relation is JVM-resident
-        import pandas as pd
-
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(rows, columns=["node", "component"]),
-            schema="node string, component string",
-        )
+        return arrow_local_df(edges.sparkSession, rows, "node string, component string")
 
     # symmetric closure once; persisted for reuse across rounds
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
@@ -173,21 +153,15 @@ def connected_components(
         .localCheckpoint()
     )
 
-    # r7 latency work (guide §3.1, §1.2): one count of the label table
-    # (its row count — one row per node — is invariant across rounds)
-    # drives a measured-size broadcast dispatch for the per-round
-    # joins, and the convergence count doubles as the action that
-    # materializes the round's LAZY checkpoint (eager-checkpoint +
-    # count was two actions per round). Past the bound the shuffle
-    # plans are exactly the previous ones; hints never change labels.
-    small = labels.count() <= _BROADCAST_LABEL_ROWS
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
+    # one count of the label table (one row per node, so invariant
+    # across rounds) sizes the broadcast of the per-round join sides;
+    # the convergence count doubles as the action that materializes the
+    # round's LAZY checkpoint
+    n_labels = labels.count()
 
     for _ in range(max_iter):
         msgs = (
-            sym.join(_b(labels), sym.a == labels.node)
+            sym.join(regime.maybe_broadcast(labels, n_labels), sym.a == labels.node)
             .select(F.col("b").alias("node"), "component")
         )
         # carry the OLD label through the aggregation (each node has
@@ -214,7 +188,9 @@ def connected_components(
             F.col("node").alias("jnode"), F.col("component").alias("jcomp")
         )
         new_labels = (
-            new_labels.join(_b(jump), new_labels.component == jump.jnode, "left")
+            new_labels.join(
+                regime.maybe_broadcast(jump, n_labels), new_labels.component == jump.jnode, "left"
+            )
             .select(
                 "node",
                 F.least(F.col("component"), F.coalesce("jcomp", "component")).alias("component"),

@@ -24,10 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# mapping-side broadcast bound (rows of the two-string (iri, canonical)
-# tuple ≈ 200 B/row → ~20 MB at the bound, inside the session's 64 MB
-# autoBroadcastJoinThreshold): see the dispatch note in canonical_edges
-_BROADCAST_MAPPING_ROWS = 100_000
+from .regime import maybe_broadcast
 
 
 def normalized_label(col):
@@ -96,18 +93,15 @@ def canonical_nodes(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
 
     mapping = canonical_mapping(nodes, salt_buckets).localCheckpoint()
     # ONE aggregate on the checkpointed mapping answers both dispatch
-    # questions (r7): the row count drives the measured-size broadcast
-    # for the rewrite join below (comp has at most one row per mapping
-    # row — under the bound it is a BroadcastHashJoin, past it the
-    # shuffle plan stands), and "some iri has >1 distinct canonical"
-    # is exactly distinct(iri, canonical) > distinct(iri) — the
-    # groupBy + isEmpty probe this replaces.
+    # questions: the row count sizes the broadcast of the rewrite join
+    # below (comp has at most one row per mapping row), and "some iri
+    # has >1 distinct canonical" is exactly distinct(iri, canonical) >
+    # distinct(iri).
     stats = mapping.agg(
         F.count("*").alias("n"),
         F.countDistinct("iri").alias("ni"),
         F.countDistinct("iri", "canonical_iri").alias("nic"),
     ).head()
-    small = stats["n"] <= _BROADCAST_MAPPING_ROWS
     overlapping = stats["nic"] > stats["ni"]
     if overlapping:
         edges = mapping.filter(F.col("iri") != F.col("canonical_iri")).select(
@@ -120,7 +114,7 @@ def canonical_nodes(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
         ).distinct()
     comp = comp.withColumnRenamed("node", "iri")
     return (
-        nodes.join(F.broadcast(comp) if small else comp, "iri", "left")
+        nodes.join(maybe_broadcast(comp, stats["n"]), "iri", "left")
         .withColumn("canonical_id", F.coalesce("component", "iri"))
         .drop("component")
     )
@@ -134,25 +128,21 @@ def canonical_edges(edges: DataFrame, canonical: DataFrame) -> DataFrame:
     # snapshot once: the mapping feeds THREE joins below and would
     # otherwise re-run its distinct (a full shuffle) per join (r7)
     mapping = canonical.select("iri", "canonical_id").distinct().localCheckpoint()
-    # measured-size broadcast dispatch (r7, guide §3.1): ONE count of
-    # the checkpointed mapping decides the join strategy for all three
-    # rewrites. Under the bound each left join compiles to a
-    # BroadcastHashJoin — the edge table is never shuffled (it was
-    # exchanged once PER JOIN KEY before: 3 full shuffles of the edge
-    # set) and the single broadcast is reused three times. Past the
-    # bound the sort-merge plans stand unchanged; a join hint cannot
-    # change the rewritten rows.
-    small = mapping.count() <= _BROADCAST_MAPPING_ROWS
+    # ONE count of the checkpointed mapping sizes all three rewrites:
+    # under the broadcast bound each left join is a BroadcastHashJoin
+    # over one reused broadcast and the edge table is never shuffled
+    # (a shuffle plan exchanges it once per join key)
+    n = mapping.count()
 
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
+    def side(key: str) -> DataFrame:
+        return maybe_broadcast(mapping.withColumnRenamed("iri", key), n)
 
     return (
-        edges.join(_b(mapping.withColumnRenamed("iri", "src_id")), "src_id", "left")
+        edges.join(side("src_id"), "src_id", "left")
         .withColumnRenamed("canonical_id", "src_canon")
-        .join(_b(mapping.withColumnRenamed("iri", "dst_id")), "dst_id", "left")
+        .join(side("dst_id"), "dst_id", "left")
         .withColumnRenamed("canonical_id", "dst_canon")
-        .join(_b(mapping.withColumnRenamed("iri", "pred")), "pred", "left")
+        .join(side("pred"), "pred", "left")
         .withColumnRenamed("canonical_id", "pred_canon")
         .select(
             F.coalesce("src_canon", F.col("src_id")).alias("src_id"),

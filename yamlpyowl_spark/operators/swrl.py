@@ -79,6 +79,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from .. import vocab as V
 from ..parser.document import _parse_swrl
 from ..parser.model import ParseError
+from . import regime
 from .closure import transitive_closure
 from ..schema import arrow_local_df
 
@@ -127,18 +128,13 @@ _STR_CHECK = {"contains": "ct", "startsWith": "sw", "endsWith": "ew"}
 _SCK_SQL = {"ct": "contains", "sw": "startswith", "ew": "endswith"}
 _INVALID = "!unsupported"
 
-# fact-side broadcast bound for the fixpoint's per-atom joins (rows of
-# the ~150-byte fact tuple ≈ 15 MB broadcast at the bound) — see the
-# dispatch note in forward_chain
-_BROADCAST_FACT_ROWS = 100_000
-
-# driver-rules regime bound (r7): when the corpus's rule-bearing
-# triples fit one bounded probe (limit N+1 — never an unbounded
-# collect), the rule table is parsed on the driver with the same
-# _parse_swrl/encode_rule functions and shipped back as a local
-# relation — saving the Arrow parse stage plus the bad-rule and
-# distinct-rule collect jobs. Past the bound forward_chain uses the
-# distributed rule_table path unchanged.
+# driver-rules regime bound, in rule-bearing triples (a unit of its
+# own: rule srcs and axiom rows, not edges): when they fit one
+# regime.driver_rows probe, the rule table is parsed on the driver with
+# the same _encode_one and shipped back as a local relation — saving
+# the pandas parse stage plus the bad-rule and distinct-rule collect
+# jobs. Past the bound forward_chain parses the probed relation
+# distributed.
 _DRIVER_RULE_ROWS = 10_000
 
 
@@ -521,17 +517,26 @@ def _encode_one(doc_iri: str, src: str):
         return _INVALID, [f"{type(e).__name__}: {e}", src]
 
 
-def _rule_rows_local(triples: DataFrame):
-    """Driver-rules regime: ONE bounded probe of the rule-bearing
-    triples; if they fit, the full (doc_iri, template_key, slots) rule
-    list is built driver-side with the SAME parse/encode functions the
-    distributed path maps. Returns None past the bound."""
-    probe = _rule_rel(triples).limit(_DRIVER_RULE_ROWS + 1).collect()
-    if len(probe) > _DRIVER_RULE_ROWS:
-        return None
+def _report_bad_rules(bad: list, n_bad: int, on_unsupported: str) -> None:
+    """Raise (``on_unsupported="raise"``) or warn about the
+    ``!unsupported`` rule rows; ``bad`` holds (doc_iri, slots) of at
+    least the first five of ``n_bad``. No-op when ``bad`` is empty."""
+    if not bad:
+        return
+    msgs = [f"{d}: {slots[0]} in rule {slots[1]!r}" for d, slots in bad[:5]]
+    more = f" (+{n_bad - 5} more)" if n_bad > 5 else ""
+    if on_unsupported == "raise":
+        raise UnsupportedSWRLError("unsupported SWRL fragment: " + "; ".join(msgs) + more)
+    warnings.warn("skipping unsupported SWRL rules: " + "; ".join(msgs) + more)
+
+
+def _local_rule_rows(rel_rows) -> list:
+    """Driver-rules regime: the sorted (doc_iri, template_key, slots)
+    rule list built from the probed ``_rule_rel`` rows with the SAME
+    encode function the distributed parse maps."""
     out = []
     seen_srcs = set()
-    for r in probe:
+    for r in rel_rows:
         d, p, s, o = r["doc_iri"], r["pred"], r["subj"], r["obj"]
         if p == V.YPO_RULE_SRC:
             if (d, o) in seen_srcs:
@@ -562,7 +567,12 @@ def rule_table(triples: DataFrame) -> DataFrame:
     triple table with ONE wide distinct; the per-branch projections
     dedupe on the resulting tiny frame (r7, guide §2.2 — it was three
     full scans + three full-width shuffles of the triple table)."""
-    rel = _rule_rel(triples).localCheckpoint(eager=False)
+    return _parse_rules(_rule_rel(triples).localCheckpoint(eager=False))
+
+
+def _parse_rules(rel: DataFrame) -> DataFrame:
+    """:func:`rule_table` over an already built (checkpointed)
+    ``_rule_rel`` relation."""
     srcs = rel.filter(F.col("pred") == V.YPO_RULE_SRC).select("doc_iri", "obj").distinct()
 
     def batches(it):
@@ -571,11 +581,7 @@ def rule_table(triples: DataFrame) -> DataFrame:
         for pdf in it:
             out = {"doc_iri": [], "template_key": [], "slots": []}
             for d, s in zip(pdf["doc_iri"], pdf["obj"]):
-                try:
-                    body, head = _parse_swrl(s)
-                    key, slots = encode_rule(d, body, head)
-                except Exception as e:  # noqa: BLE001 — recorded as a row
-                    key, slots = _INVALID, [f"{type(e).__name__}: {e}", s]
+                key, slots = _encode_one(d, s)
                 out["doc_iri"].append(d)
                 out["template_key"].append(key)
                 out["slots"].append(slots)
@@ -637,10 +643,6 @@ def _closed_types(facts: DataFrame, closure: DataFrame) -> DataFrame:
         "doc_iri", "inst", F.col("dst").alias("cls")
     )
     return types.unionByName(inherited).distinct()
-
-
-def _subclass_closed_types(triples: DataFrame) -> DataFrame:
-    return _closed_types(triples, _closure_pairs(triples))
 
 
 def _eval_template(
@@ -919,41 +921,24 @@ def forward_chain(
         .distinct()
     )
 
-    local_rules = _rule_rows_local(triples)
-    if local_rules is not None:
+    # ONE bounded probe of the checkpointed rule relation picks the
+    # regime; the distributed parse reads the same checkpoint
+    rel = _rule_rel(triples).localCheckpoint(eager=False)
+    probe = regime.driver_rows(rel, _DRIVER_RULE_ROWS)
+    if probe is not None:
         # driver-rules regime: the rule list is already on the driver —
         # the bad-rule diagnostic, template list and relevance index
-        # need no further jobs; the joins below read the local relation
+        # need no further jobs
+        local_rules = _local_rule_rows(probe)
         bad = [(d, slots) for d, k, slots in local_rules if k == _INVALID]
-        if bad:
-            n_bad = len(bad)
-            msgs = [f"{d}: {slots[0]} in rule {slots[1]!r}" for d, slots in bad[:5]]
-            more = f" (+{n_bad - 5} more)" if n_bad > 5 else ""
-            if on_unsupported == "raise":
-                raise UnsupportedSWRLError(
-                    "unsupported SWRL fragment: " + "; ".join(msgs) + more
-                )
-            warnings.warn("skipping unsupported SWRL rules: " + "; ".join(msgs) + more)
-            local_rules = [r for r in local_rules if r[1] != _INVALID]
-        distinct_pairs = sorted(
-            {(k, tuple(slots)) for _, k, slots in local_rules}
-        )
-        # ship back through the Arrow path (pandas → LocalTableScan,
-        # JVM-resident — a tuple-list createDataFrame plans as a
-        # pickled Python RDD re-run on every downstream action) and
-        # checkpoint once: the fixpoint joins read it per template per
-        # round
-        import pandas as pd
-
-        rules = spark.createDataFrame(
-            pd.DataFrame(
-                [(d, k, list(s)) for d, k, s in local_rules],
-                columns=["doc_iri", "template_key", "slots"],
-            ),
-            schema=_RULES_SCHEMA,
-        ).localCheckpoint()
+        _report_bad_rules(bad, len(bad), on_unsupported)
+        local_rules = [r for r in local_rules if r[1] != _INVALID]
+        distinct_pairs = sorted({(k, tuple(slots)) for _, k, slots in local_rules})
+        # checkpointed once: the fixpoint joins read it per template per
+        # round, and a plain local relation measured 2× slower there
+        rules = arrow_local_df(spark, local_rules, _RULES_SCHEMA).localCheckpoint()
     else:
-        rules = rule_table(triples).localCheckpoint()
+        rules = _parse_rules(rel).localCheckpoint()
         # bounded diagnostic: collect at most 6 bad rules (5 to show +
         # 1 to know there are more), never the full set — 10^9
         # documents with a systematic bad rule must not become an
@@ -961,31 +946,19 @@ def forward_chain(
         bad_df = rules.filter(F.col("template_key") == _INVALID).select(
             "doc_iri", "slots"
         )
-        bad = bad_df.limit(6).collect()
+        bad = [(r["doc_iri"], r["slots"]) for r in bad_df.limit(6).collect()]
         if bad:
-            n_bad = bad_df.count() if len(bad) >= 6 else len(bad)
-            msgs = [
-                f"{r['doc_iri']}: {r['slots'][0]} in rule {r['slots'][1]!r}"
-                for r in bad[:5]
-            ]
-            more = f" (+{n_bad - 5} more)" if n_bad > 5 else ""
-            if on_unsupported == "raise":
-                raise UnsupportedSWRLError(
-                    "unsupported SWRL fragment: " + "; ".join(msgs) + more
-                )
-            warnings.warn("skipping unsupported SWRL rules: " + "; ".join(msgs) + more)
+            _report_bad_rules(
+                bad, bad_df.count() if len(bad) >= 6 else len(bad), on_unsupported
+            )
             rules = rules.filter(F.col("template_key") != _INVALID)
 
         # ONE bounded collect serves both the template list and the
-        # relevance index below (r7 — the template list was a second
-        # distinct+collect over the same checkpointed rules)
+        # relevance index below
         distinct_pairs = sorted(
             {
                 (r["template_key"], tuple(r["slots"]))
-                for r in rules.filter(F.col("template_key") != _INVALID)
-                .select("template_key", "slots")
-                .distinct()
-                .collect()
+                for r in rules.select("template_key", "slots").distinct().collect()
             }
         )
     templates = sorted({k for k, _ in distinct_pairs})
@@ -1005,22 +978,12 @@ def forward_chain(
     types = _closed_types(facts, closure).localCheckpoint()
     had_type_heads = any("T(" in k.split("=>")[1] for k in templates)
 
-    # data-driven join-strategy dispatch (r7, guide §3.1): ONE count on
-    # the checkpointed base decides whether the fact/type sides of the
-    # per-atom joins fit a broadcast. When they do, every atom join
-    # compiles to a BroadcastHashJoin over ONE reused broadcast instead
-    # of a sort-merge join — on the bench corpus that removes ~30 AQE
-    # shuffle-stage jobs per fixpoint round (the dominant cost of a
-    # tiny-data fixpoint is job count, not bytes). The bound is in rows
-    # of the ~150-byte fact tuple (~15 MB at the threshold, inside the
-    # session's 64 MB autoBroadcastJoinThreshold with headroom for the
-    # per-round delta growth); a corpus past the bound keeps the
-    # shuffle plans unchanged — this is measured-size dispatch, not a
-    # local-mode constant.
-    broadcast_facts = facts.count() <= _BROADCAST_FACT_ROWS
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if (broadcast_facts and df is not None) else df
+    # ONE count on the checkpointed base sizes the fact/type/delta sides
+    # of every per-atom join: under the broadcast bound each atom join
+    # is a BroadcastHashJoin instead of a sort-merge join — on the bench
+    # corpus ~30 fewer AQE shuffle-stage jobs per fixpoint round (the
+    # cost of a tiny-data fixpoint is job count, not bytes)
+    n_facts = facts.count()
 
     def _minus(a: DataFrame, b: DataFrame) -> DataFrame:
         # null-safe anti-join: obj_datatype is NULL for non-literals
@@ -1067,12 +1030,18 @@ def forward_chain(
     types_delta = None
     inferred_acc = None
     for rnd in range(max_iter):
+        bfacts = regime.maybe_broadcast(facts, n_facts)
+        btypes = regime.maybe_broadcast(types, n_facts)
         if rnd == 0:
             outs = [
-                _eval_template(k, rules, _b(facts), _b(types), delta=None, types_delta=None)
+                _eval_template(k, rules, bfacts, btypes, delta=None, types_delta=None)
                 for k in templates
             ]
         else:
+            bdelta = regime.maybe_broadcast(delta, n_facts)
+            btypes_delta = (
+                None if types_delta is None else regime.maybe_broadcast(types_delta, n_facts)
+            )
             # delta_preds was computed by the SAME action that
             # materialized the delta checkpoint (below) — no extra
             # driver round-trip per round (the r4 regression)
@@ -1084,8 +1053,8 @@ def forward_chain(
                     if tk == k and preds & delta_preds
                 ]
                 out = _eval_template(
-                    k, rules, _b(facts), _b(types),
-                    delta=_b(delta), types_delta=_b(types_delta),
+                    k, rules, bfacts, btypes,
+                    delta=bdelta, types_delta=btypes_delta,
                     live_positions=live,
                 )
                 if out is not None:
@@ -1101,7 +1070,7 @@ def forward_chain(
         # together (pred is never NULL, so empty set <=> empty delta;
         # collect_set skips the NULL-pred tag rows) — replaces the
         # separate per-round types_delta.count() action (r7)
-        delta = _minus(new, _b(facts)).localCheckpoint(eager=False)
+        delta = _minus(new, bfacts).localCheckpoint(eager=False)
         if had_type_heads:
             # inferred class memberships must feed later class atoms —
             # close only the DELTA's types and anti-join against the

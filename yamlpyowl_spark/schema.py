@@ -85,7 +85,7 @@ def arrow_local_df(spark, rows, schema):
     import pandas as pd
 
     if isinstance(schema, str):
-        schema = T._parse_datatype_string(schema)
+        schema = T.StructType.fromDDL(schema)
     if isinstance(schema, T.StructType):
         cols = [f.name for f in schema.fields]
         return spark.createDataFrame(

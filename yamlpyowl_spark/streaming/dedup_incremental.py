@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators import docops
+from ..operators.regime import maybe_broadcast
 from ..schema import arrow_local_df
 
 
@@ -92,14 +93,12 @@ def drain_incremental_candidates(
     static_buckets = docops.banded_signatures(
         docops.minhash_signatures(corpus_docs)
     ).localCheckpoint()
-    # measured-size dispatch (guide §3.1): ONE count of the
-    # checkpointed bucket table decides the per-batch join strategy —
-    # under the bound every micro-batch joins against one broadcast
-    # (no reshuffle of either side per batch); a corpus past the bound
-    # keeps the shuffle join (at true ingest scale the static side is
-    # a bucketed table the join prunes instead)
-    if static_buckets.count() <= 100_000:
-        static_buckets = F.broadcast(static_buckets)
+    # ONE count of the checkpointed bucket table decides the per-batch
+    # join strategy — under the bound every micro-batch joins against
+    # one broadcast (no reshuffle of either side per batch); a corpus
+    # past the bound keeps the shuffle join (at true ingest scale the
+    # static side is a bucketed table the join prunes instead)
+    static_buckets = maybe_broadcast(static_buckets, static_buckets.count())
 
     out_dir = tempfile.mkdtemp(prefix="inc_out_")
     pair_schema = "new_doc_id " + dict(stream.dtypes)["doc_id"] + ", corpus_doc_id " + dict(
