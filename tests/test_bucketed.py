@@ -8,7 +8,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from yamlpyowl_spark.operators.linking import canonical_mapping
+from yamlpyowl_spark.operators.linking import canonical_mapping, link_key_stats
 from yamlpyowl_spark.plans.pipeline import KGPipeline
 from yamlpyowl_spark.sources.bucketed import bucketed_canonical_mapping, save_nodes_bucketed
 from yamlpyowl_spark.sources.corpus import corpus_df
@@ -28,6 +28,16 @@ def test_bucketed_mapping_equals_operator(spark, nodes):
     g = {tuple(r) for r in got.collect()}
     w = {tuple(r) for r in want.collect()}
     assert g == w and len(g) > 0
+
+
+def test_link_key_stats_equals_mapping_group_count(nodes):
+    stats = link_key_stats(nodes).select("link_key", "canonical_iri", "n_mentions")
+    got = {tuple(r) for r in stats.collect()}
+    want = {
+        tuple(r)
+        for r in canonical_mapping(nodes).groupBy("link_key", "canonical_iri").count().collect()
+    }
+    assert got == want and len(got) > 0
 
 
 def test_bucketed_join_is_shuffle_free_on_big_side(spark, nodes):

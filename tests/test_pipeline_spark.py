@@ -243,21 +243,42 @@ def test_skew_spread_across_partitions(spark, import_map, tmp_path_factory):
 
 
 def test_star_cc_equals_propagation_cc(spark):
-    """Alternating large/small-star CC must agree with min-label
-    propagation on seeded random graphs (incl. a long chain, the
-    propagation worst case)."""
+    """Min-label propagation on a seeded random graph plus a long chain
+    (the propagation worst case, closed by pointer jumping) must give a
+    union-find oracle's components in both the driver and the
+    distributed regime. The name is kept from the star-contraction
+    variant this graph was first checked against."""
     import random
 
-    from yamlpyowl_spark.operators import connected_components_star
+    from yamlpyowl_spark.operators import regime
 
     rng = random.Random(7)
     nodes = [f"n{i:03d}" for i in range(120)]
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(90)]
     edges += [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(40)]  # chain
     df = spark.createDataFrame(edges, ["src", "dst"]).filter(F.col("src") != F.col("dst"))
+
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for s, d in edges:
+        if s != d:
+            a, b = find(s), find(d)
+            parent[max(a, b)] = min(a, b)
+    want = {n: find(n) for n in parent}
+
     a = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    b = {r["node"]: r["component"] for r in connected_components_star(df).collect()}
-    assert a == b
+    old = regime.DRIVER_EDGES
+    regime.DRIVER_EDGES = 0  # force the distributed loop
+    try:
+        b = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    finally:
+        regime.DRIVER_EDGES = old
+    assert a == b == want
     # the 41-node chain collapses to one component rooted at its minimum
     assert b["c040"] == "c000"
 

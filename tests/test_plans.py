@@ -47,6 +47,9 @@ def test_parse_prunes_columns(spark, corpus):
 
 
 def test_single_python_stage(spark, corpus):
+    # a parse of the same corpus persisted earlier in the session would
+    # surface here as an InMemoryTableScan carrying its own MapInArrow
+    spark.catalog.clearCache()
     pipe = KGPipeline(spark, parse_partitions=8)
     plan = _plan(pipe.parsed(corpus))
     assert plan.count("MapInArrow") == 1

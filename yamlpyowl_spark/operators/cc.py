@@ -5,15 +5,13 @@ per round to cut lineage (no Catalyst builtin exists for this). Each
 round is one shuffle join + one aggregate; convergence is detected with
 a cheap count on the label delta.
 
-Round count is bounded by the graph diameter. The entity-linking alias
-graphs this pipeline produces are star-shaped (every mention links to
-its group minimum, see :mod:`linking`), so diameter ≤ 2 and this
-converges in 2-3 rounds regardless of data size — the reason we build
-star edges rather than mention-pair cliques (which would be quadratic
-in group size at 10^12-file scale). For general high-diameter graphs
-the alternating small-star/large-star variant (Kiveris et al., "CC in
-MapReduce and Beyond") drops rounds to O(log n); star inputs make the
-simpler propagation strictly better here.
+Pointer jumping (component := the component's component) ends each
+round, so a chain of diameter d closes in O(log d) rounds rather than
+d. The entity-linking alias graphs this pipeline produces are
+star-shaped (every mention links to its group minimum, see
+:mod:`linking`), so they converge in 2-3 rounds regardless of data
+size — the reason we build star edges rather than mention-pair cliques
+(which would be quadratic in group size at 10^12-file scale).
 """
 
 from __future__ import annotations
@@ -50,74 +48,6 @@ def _py_components(edge_rows):
     return sorted((n, find(n)) for n in parent)
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Kiveris et al. large-star: connect every strictly-larger neighbor
-    of u to the minimum of u's closed neighborhood."""
-    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    m = sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
-    return (
-        sym.join(m, "a")
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Kiveris et al. small-star: direct edges large→small, connect all
-    smaller neighbors (and u itself) to the minimum."""
-    d = edges.select(
-        F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-    ).filter(F.col("a") != F.col("b")).distinct()
-    m = d.groupBy("a").agg(F.min("b").alias("m"))
-    joined = d.join(m, "a")
-    out = joined.select(F.col("b").alias("a"), F.col("m").alias("b")).union(
-        joined.select(F.col("a"), F.col("m").alias("b"))
-    )
-    return out.filter(F.col("a") != F.col("b")).distinct()
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — O(log n)
-    rounds on any graph, each round two hash aggregations + joins. Use
-    this for general (possibly high-diameter) graphs; the min-label
-    propagation below wins on the star-shaped alias graphs entity
-    linking produces (diameter ≤ 2)."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    all_nodes = e.select("a").union(e.select(F.col("b").alias("a"))).distinct()
-
-    # exact convergence: equal count AND empty multiset difference vs
-    # the previous edge set (a hash-sum signature could collide and
-    # terminate early on an unconverged graph)
-    n_prev = e.count()
-    for _ in range(max_iter):
-        new_e = _small_star(_large_star(e)).localCheckpoint()
-        n = new_e.count()
-        converged = n == n_prev and new_e.exceptAll(e).isEmpty()
-        e, n_prev = new_e, n
-        if converged:
-            break
-
-    # converged edges point node → component root; roots map to themselves
-    comp = e.select(F.col("a").alias("node"), F.col("b").alias("component"))
-    roots = all_nodes.join(comp, all_nodes.a == comp.node, "left_anti").select(
-        F.col("a").alias("node"), F.col("a").alias("component")
-    )
-    return comp.union(roots)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -126,10 +56,15 @@ def connected_components(
 ) -> DataFrame:
     """Returns (node, component) where component = min node id (string
     order) in the node's connected component."""
+    # lazy checkpoint: the probe below fills it (a result under the
+    # bound is only known after every partition is read), and the
+    # distributed loop reads the same edge set instead of re-running
+    # the distinct
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
 
     # driver regime (see :mod:`.regime`): a tiny graph resolves in one
@@ -142,21 +77,20 @@ def connected_components(
         rows = _py_components([(r["a"], r["b"]) for r in probe])
         return arrow_local_df(edges.sparkSession, rows, "node string, component string")
 
-    # symmetric closure once; persisted for reuse across rounds
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
+    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
     labels = (
-        sym.select(F.col("a").alias("node"))
-        .union(sym.select(F.col("b").alias("node")))
+        e.select(F.col("a").alias("node"))
+        .union(e.select(F.col("b").alias("node")))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
 
     # one count of the label table (one row per node, so invariant
-    # across rounds) sizes the broadcast of the per-round join sides;
-    # the convergence count doubles as the action that materializes the
-    # round's LAZY checkpoint
+    # across rounds) fills its lazy checkpoint and sizes the broadcast
+    # of the per-round join sides; each round's convergence count
+    # likewise materializes that round's lazy checkpoint
     n_labels = labels.count()
 
     for _ in range(max_iter):
@@ -203,5 +137,4 @@ def connected_components(
         if changed == 0:
             break
 
-    sym.unpersist()
     return labels

@@ -13,9 +13,9 @@ Scale design:
   cliques. Each mention links to its group minimum ("star" edges):
   linear in mentions, and gives the CC pass diameter-2 inputs;
 * group minimum is computed with a two-stage salted aggregate
-  (partial min per (key, salt) bucket, then final min) so one hot key
-  cannot skew a reducer — same trick as map-side combine, made
-  explicit;
+  (partial min per (key, salt) bucket, ``SALT_BUCKETS`` salts per key,
+  then final min) so one hot key cannot skew a reducer — same trick as
+  map-side combine, made explicit;
 * the mapping join back onto nodes uses a plain equi-join on the key —
   AQE handles residual skew (skewJoin enabled in session config).
 """
@@ -25,6 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .regime import maybe_broadcast
+
+# Salt buckets per link key in the two-stage group minimum: a hot key's
+# partial mins spread over this many reducers before the final min.
+SALT_BUCKETS = 16
 
 
 def normalized_label(col):
@@ -37,30 +41,13 @@ def mention_keys(nodes: DataFrame) -> DataFrame:
     return nodes.withColumn("link_key", F.concat_ws("|", "kind", normalized_label(F.col("name"))))
 
 
-def canonical_mapping(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """(iri, link_key, canonical_iri): canonical = min iri in the
-    (kind, normalized name) group, via salted two-stage aggregation."""
-    m = mention_keys(nodes).select("iri", "link_key")
+def _group_min(m: DataFrame) -> DataFrame:
+    """(link_key, n_mentions, canonical_iri) of an (iri, link_key)
+    mention frame: canonical = min iri of the key's group, via a
+    two-stage aggregate salted on ``hash(iri)``. A caller that drops
+    ``n_mentions`` has its count pruned from both stages."""
     partial = (
-        m.withColumn("salt", F.pmod(F.hash("iri"), F.lit(salt_buckets)))
-        .groupBy("link_key", "salt")
-        .agg(F.min("iri").alias("min_iri"))
-    )
-    final = partial.groupBy("link_key").agg(F.min("min_iri").alias("canonical_iri"))
-    return m.join(final, "link_key").select("iri", "link_key", "canonical_iri")
-
-
-def link_key_stats(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """(link_key, n_mentions, canonical_iri) — the per-group linking
-    summary, computed in the SAME two-stage salted aggregation that
-    finds the canonical (min + count ride one partial aggregate).
-    Equivalent to ``canonical_mapping(...).groupBy(link_key,
-    canonical_iri).count()`` — the canonical is unique per key — but
-    with no join of the full mention table and one fewer shuffle of it
-    (r7, guide §2.3 aggregate-before-shuffle)."""
-    m = mention_keys(nodes).select("iri", "link_key")
-    partial = (
-        m.withColumn("salt", F.pmod(F.hash("iri"), F.lit(salt_buckets)))
+        m.withColumn("salt", F.pmod(F.hash("iri"), F.lit(SALT_BUCKETS)))
         .groupBy("link_key", "salt")
         .agg(F.min("iri").alias("min_iri"), F.count("*").alias("n"))
     )
@@ -69,15 +56,25 @@ def link_key_stats(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
     )
 
 
-def alias_edges(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Star-shaped alias graph: mention → group canonical."""
-    mapping = canonical_mapping(nodes, salt_buckets)
-    return mapping.filter(F.col("iri") != F.col("canonical_iri")).select(
-        F.col("iri").alias("src"), F.col("canonical_iri").alias("dst")
-    )
+def canonical_mapping(nodes: DataFrame) -> DataFrame:
+    """(iri, link_key, canonical_iri): canonical = min iri in the
+    (kind, normalized name) group, via salted two-stage aggregation."""
+    m = mention_keys(nodes).select("iri", "link_key")
+    return m.join(_group_min(m), "link_key").select("iri", "link_key", "canonical_iri")
 
 
-def canonical_nodes(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
+def link_key_stats(nodes: DataFrame) -> DataFrame:
+    """(link_key, n_mentions, canonical_iri) — the per-group linking
+    summary, computed in the SAME two-stage salted aggregation that
+    finds the canonical (min + count ride one partial aggregate).
+    Equivalent to ``canonical_mapping(...).groupBy(link_key,
+    canonical_iri).count()`` — the canonical is unique per key — but
+    with no join of the full mention table and one fewer shuffle of it
+    (r7, guide §2.3 aggregate-before-shuffle)."""
+    return _group_min(mention_keys(nodes).select("iri", "link_key"))
+
+
+def canonical_nodes(nodes: DataFrame) -> DataFrame:
     """nodes + ``canonical_id`` after alias merging (linking + CC).
 
     CC matters only when alias groups OVERLAP — one iri carrying
@@ -91,7 +88,8 @@ def canonical_nodes(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
     """
     from .cc import connected_components
 
-    mapping = canonical_mapping(nodes, salt_buckets).localCheckpoint()
+    # lazy: the aggregate below fills the checkpoint as it reads it
+    mapping = canonical_mapping(nodes).localCheckpoint(eager=False)
     # ONE aggregate on the checkpointed mapping answers both dispatch
     # questions: the row count sizes the broadcast of the rewrite join
     # below (comp has at most one row per mapping row), and "some iri
@@ -127,8 +125,8 @@ def canonical_edges(edges: DataFrame, canonical: DataFrame) -> DataFrame:
     never collapse)."""
     # snapshot once: the mapping feeds THREE joins below and would
     # otherwise re-run its distinct (a full shuffle) per join (r7)
-    mapping = canonical.select("iri", "canonical_id").distinct().localCheckpoint()
-    # ONE count of the checkpointed mapping sizes all three rewrites:
+    mapping = canonical.select("iri", "canonical_id").distinct().localCheckpoint(eager=False)
+    # ONE count fills the lazy checkpoint and sizes all three rewrites:
     # under the broadcast bound each left join is a BroadcastHashJoin
     # over one reused broadcast and the edge table is never shuffled
     # (a shuffle plan exchanges it once per join key)

@@ -66,12 +66,10 @@ class KGPipeline:
         spark: SparkSession,
         import_map: Optional[dict] = None,
         parse_partitions: Optional[int] = None,
-        salt_buckets: int = 16,
     ):
         self.spark = spark
         self.import_map = import_map or {}
         self.parse_partitions = parse_partitions
-        self.salt_buckets = salt_buckets
 
     # ------------------------------------------------------------------
     # parse stage
@@ -81,40 +79,33 @@ class KGPipeline:
         self,
         source: DataFrame,
         already_filtered: bool = False,
-        repartition: bool = True,
         emit_metrics: bool = False,
     ) -> DataFrame:
-        """source(repo,path,commit,lang,content) → combined parsed records.
-
-        ``repartition=False`` skips the salted shuffle — use it when the
-        input's physical partitioning already spreads hot repos (e.g.
-        bucketed Iceberg input), saving one full pass over ``content``.
-        """
+        """source(repo,path,commit,lang,content) → combined parsed records."""
         df = source if already_filtered else ontology_document_filter(source)
         df = df.select("repo", "path", "commit", "content")
-        if repartition:
-            # 8x parallelism: fine enough that the last wave's straggler
-            # tail is small vs the job (measured best at both 4 and 16
-            # cores on the bench corpus), coarse enough that per-task
-            # overhead stays negligible
-            if self.parse_partitions:
-                n_parts = self.parse_partitions
-            else:
-                # default 8x parallelism, but never fan a small input out
-                # wider than its scan justifies: a 60-document corpus on
-                # one parquet split gains nothing from 256 parse tasks
-                # and pays 256 python-worker round-trips (~5s of pure
-                # latency, measured). The source's scan partition count
-                # is a bytes-proportional size proxy that costs no job.
-                cores = self.spark.sparkContext.defaultParallelism
-                src_parts = df.rdd.getNumPartitions()
-                n_parts = min(cores * 8, max(cores, src_parts * 8))
-            # skew-spreading repartition on the FULL (repo, path) key —
-            # documents from one giant monorepo scatter across all tasks.
-            # NB: do not pre-bucket with pmod(hash(...), n) — Spark hashes
-            # the expression value again, and hashing n values into n
-            # buckets collides (empty partitions + clumps).
-            df = df.repartition(n_parts, F.col("repo"), F.col("path"))
+        # 8x parallelism: fine enough that the last wave's straggler
+        # tail is small vs the job (measured best at both 4 and 16
+        # cores on the bench corpus), coarse enough that per-task
+        # overhead stays negligible
+        if self.parse_partitions:
+            n_parts = self.parse_partitions
+        else:
+            # default 8x parallelism, but never fan a small input out
+            # wider than its scan justifies: a 60-document corpus on
+            # one parquet split gains nothing from 256 parse tasks
+            # and pays 256 python-worker round-trips (~5s of pure
+            # latency, measured). The source's scan partition count
+            # is a bytes-proportional size proxy that costs no job.
+            cores = self.spark.sparkContext.defaultParallelism
+            src_parts = df.rdd.getNumPartitions()
+            n_parts = min(cores * 8, max(cores, src_parts * 8))
+        # skew-spreading repartition on the FULL (repo, path) key —
+        # documents from one giant monorepo scatter across all tasks.
+        # NB: do not pre-bucket with pmod(hash(...), n) — Spark hashes
+        # the expression value again, and hashing n values into n
+        # buckets collides (empty partitions + clumps).
+        df = df.repartition(n_parts, F.col("repo"), F.col("path"))
         return df.mapInArrow(
             make_parse_udf(self.import_map, emit_metrics=emit_metrics), schema=PARSED_SCHEMA
         )
@@ -261,13 +252,12 @@ class KGPipeline:
         # (thousands of IRI-rewritten copies per document, the
         # web-scale shape) pays O(distinct contents), not O(docs); the
         # r6 10x soak measured ~25k isomorphic zebra CSP solves
-        # dominating the reasoning wall-clock before this
-        return (
-            forward_chain(base, on_unsupported="skip")
-            .unionByName(reason_per_isomorph(base, dl_model_search))
-            .unionByName(reason_per_isomorph(base, owlrl_materialize))
-            .distinct()
+        # dominating the reasoning wall-clock before this. Both engines
+        # ride one wrapper call, so each document is fingerprinted once.
+        per_doc = reason_per_isomorph(
+            base, lambda t: dl_model_search(t).unionByName(owlrl_materialize(t))
         )
+        return forward_chain(base, on_unsupported="skip").unionByName(per_doc).distinct()
 
     # ------------------------------------------------------------------
     # checkpointed materialization (resume = anti-join against _progress)

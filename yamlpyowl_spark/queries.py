@@ -104,7 +104,9 @@ def _evict_dead_sessions(live_key: str) -> None:
 
 def _parsed(spark: SparkSession):
     key = ("parsed", _session_key(spark))
-    if key not in _CACHE:
+    # re-pin a memoized parse whose cache entry is gone (e.g. after
+    # spark.catalog.clearCache()): every query would re-parse from it
+    if key not in _CACHE or not _CACHE[key][1].storageLevel.useMemory:
         _evict_dead_sessions(_session_key(spark))
         _ensure_shipped(spark)
         paths = ensure_artifacts()

@@ -14,9 +14,9 @@ recurring shuffle for every downstream consumer of the same key."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.linking import mention_keys
+from ..operators.linking import _group_min, mention_keys
 
 DEFAULT_BUCKETS = 64
 
@@ -49,16 +49,10 @@ def save_nodes_bucketed(
     return table
 
 
-def bucketed_canonical_mapping(spark: SparkSession, table: str, salt_buckets: int = 16) -> DataFrame:
+def bucketed_canonical_mapping(spark: SparkSession, table: str) -> DataFrame:
     """(iri, link_key, canonical_iri) like
     :func:`operators.linking.canonical_mapping`, but reading the
     pre-bucketed table: the mention side of the mapping join carries
     its bucketing through — no shuffle of the big side."""
     m = spark.table(table).select("iri", "link_key")
-    partial = (
-        m.withColumn("salt", F.pmod(F.hash("iri"), F.lit(salt_buckets)))
-        .groupBy("link_key", "salt")
-        .agg(F.min("iri").alias("min_iri"))
-    )
-    final = partial.groupBy("link_key").agg(F.min("min_iri").alias("canonical_iri"))
-    return m.join(final, "link_key").select("iri", "link_key", "canonical_iri")
+    return m.join(_group_min(m), "link_key").select("iri", "link_key", "canonical_iri")
