@@ -1,6 +1,7 @@
 """Measured-size dispatch (operators.regime): the two primitives at
-their bounds, the closure's shared round budget, and no operator
-writing session conf in any regime."""
+their bounds, the closure's shared round budget, the jobs of the
+closure's driver regime, and no operator writing session conf in any
+regime."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,17 +54,45 @@ def test_closure_loops_share_max_iter(spark, monkeypatch):
     assert got == want
 
 
+def _jobs(spark, group, fn):
+    """The number of Spark jobs ``fn()`` starts, counted through
+    ``statusTracker`` under a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_closure_driver_regime_costs_only_its_probe(spark):
+    """Under ``DRIVER_EDGES`` the probe is the only action: it fills the
+    lazy edge checkpoint, so building the closure starts exactly the
+    jobs of the probe alone."""
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(6)] + [("m0", "m1")], "src string, dst string"
+    )
+    probe = _jobs(
+        spark,
+        "closure-probe",
+        lambda: regime.driver_rows(edges.select("src", "dst").distinct(), regime.DRIVER_EDGES),
+    )
+    build = _jobs(spark, "closure-build", lambda: transitive_closure(edges))
+    assert build == probe
+
+
 _REGIMES = {
     "driver": {},
-    "distributed": {"DRIVER_EDGES": 0, "_DRIVER_RULE_ROWS": 0},
-    "distributed_shuffle": {"DRIVER_EDGES": 0, "_DRIVER_RULE_ROWS": 0, "BROADCAST_ROWS": -1},
+    "distributed": {"DRIVER_EDGES": 0},
+    "distributed_shuffle": {"DRIVER_EDGES": 0, "BROADCAST_ROWS": -1},
 }
 
 
 @pytest.mark.parametrize("name", sorted(_REGIMES))
 def test_operators_write_no_session_conf(spark, monkeypatch, name):
     for attr, value in _REGIMES[name].items():
-        monkeypatch.setattr(swrl if attr == "_DRIVER_RULE_ROWS" else regime, attr, value)
+        monkeypatch.setattr(regime, attr, value)
     writes = []
     real_set = RuntimeConfig.set
 

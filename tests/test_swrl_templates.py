@@ -13,7 +13,6 @@ from yamlpyowl_spark.operators.swrl import (
     UnsupportedSWRLError,
     encode_rule,
     forward_chain,
-    rule_table,
 )
 
 TRIPLE_COLS = T.StructType(
@@ -61,11 +60,11 @@ def test_hundred_docs_one_template(spark):
         rows.extend(_doc(f"http://ex.org/d{i}#"))
     triples = spark.createDataFrame(rows, TRIPLE_COLS)
 
-    rt = rule_table(triples)
-    keys = [r[0] for r in rt.select("template_key").distinct().collect()]
+    rules = swrl._local_rule_rows(swrl._rule_rel(triples).collect())
+    keys = sorted({k for _, k, _ in rules})
     # 120 documents, 120 rule instances -> ONE template (one plan/round)
     assert keys == ["P(v0,v1)=>P(v1,v0)"] or len(keys) == 1
-    assert rt.count() == 120
+    assert len(rules) == 120
 
     inferred = forward_chain(triples)
     # every doc gets its own q-facts, none cross documents
@@ -156,12 +155,12 @@ def test_subclass_closure_feeds_delta_types(spark):
 
 
 def test_bad_rule_collect_is_bounded(spark):
-    # 10k systematically-bad rules: the diagnostic must collect at most
-    # 6 rows (plus one aggregate count), never the full set, and the
-    # message reports the true remainder
+    # 10k systematically-bad rules. The rule list is collected and
+    # parsed on the driver whole; what stays bounded is the message,
+    # which lists the first five and reports the true remainder
     E = "http://e#"
     rows = [
-        # unique srcs (rule_table de-dups on src), each invalid up front
+        # unique srcs (the rule list de-dups on src), each invalid up front
         (f"{E}r{i}", V.YPO_RULE_SRC,
          f"greaterThan(?v, 1), p{i}(?x, ?v) -> q(?x, ?x)", True, None, E)
         for i in range(10_000)
@@ -169,16 +168,6 @@ def test_bad_rule_collect_is_bounded(spark):
     triples = spark.createDataFrame(rows, TRIPLE_COLS)
     with pytest.raises(UnsupportedSWRLError, match=r"\(\+9995 more\)"):
         forward_chain(triples)
-
-
-def test_rule_parse_is_distributed(spark):
-    # the rules table is built by an Arrow-batched stage, and the only
-    # thing collected is the distinct template-key list
-    rows = _doc("http://ex.org/solo#")
-    triples = spark.createDataFrame(rows, TRIPLE_COLS)
-    plan = rule_table(triples)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan or "MapInArrow" in plan
-    assert "BatchEvalPython" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -69,8 +69,14 @@ def transitive_closure(
     of the two loops together. Each round's count is also the action
     that materializes its lazy checkpoint."""
     spark = edges.sparkSession
-    base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    closure = base.localCheckpoint()
+    # lazy checkpoint: the probe below fills it (a result under the
+    # bound is only known after every partition is read), and the
+    # loops start from the same edge set
+    closure = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
 
     probe = regime.driver_rows(closure, regime.DRIVER_EDGES)
     if probe is not None:

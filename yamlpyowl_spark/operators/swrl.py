@@ -9,12 +9,15 @@ a driver loop with ``localCheckpoint`` per round — the classic
 Scale shape: rules are grouped by **template** (the rule's structural
 signature — atom kinds, variable pattern, constant positions — with
 concrete predicate/class names abstracted into slot columns). The
-driver builds ONE join pipeline per distinct template per round; the
-rules themselves stay in a distributed DataFrame and reach the plan as
-join columns keyed on ``(doc_iri, pred)``. Work on the driver is
-O(#distinct rule shapes), not O(#documents × #rules): 10^9 documents
-that all carry the same five rule structures cost five plans per
-round, same as one document.
+rules are parsed on the driver from one collect of the rule-bearing
+triples and joined as a checkpointed relation whose slot columns are
+join keys on ``(doc_iri, pred)``. The driver builds ONE join pipeline
+per distinct template per round, so plan building is O(#distinct rule
+shapes), not O(#documents × #rules): documents that all carry the
+same five rule structures cost five plans per round, same as one
+document. The one-off parse is linear in the rule-bearing triples,
+not in the corpus: 50k of them take ~1.2 s of driver CPU and ~30 MB
+of Python heap (4-core x86 box).
 
 Supported (everything the reference fixtures use, plus class-atom
 heads which the reference's Pellet path also accepts):
@@ -74,7 +77,7 @@ import warnings
 from functools import lru_cache, reduce
 from typing import List, Tuple
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from .. import vocab as V
 from ..parser.document import _parse_swrl
@@ -127,15 +130,6 @@ _SF_SQL = frozenset(("sc", "sl", "uc", "lc", "ss", "bn"))
 _STR_CHECK = {"contains": "ct", "startsWith": "sw", "endsWith": "ew"}
 _SCK_SQL = {"ct": "contains", "sw": "startswith", "ew": "endswith"}
 _INVALID = "!unsupported"
-
-# driver-rules regime bound, in rule-bearing triples (a unit of its
-# own: rule srcs and axiom rows, not edges): when they fit one
-# regime.driver_rows probe, the rule table is parsed on the driver with
-# the same _encode_one and shipped back as a local relation — saving
-# the pandas parse stage plus the bad-rule and distinct-rule collect
-# jobs. Past the bound forward_chain parses the probed relation
-# distributed.
-_DRIVER_RULE_ROWS = 10_000
 
 
 def _unquote(a: str) -> str:
@@ -481,16 +475,8 @@ def _parse_template(key: str):
 
 
 # --------------------------------------------------------------------------
-# distributed rule table
+# rule table
 # --------------------------------------------------------------------------
-
-_RULES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_iri", T.StringType()),
-        T.StructField("template_key", T.StringType()),
-        T.StructField("slots", T.ArrayType(T.StringType())),
-    ]
-)
 
 
 def _rule_rel(triples: DataFrame) -> DataFrame:
@@ -507,42 +493,26 @@ def _rule_rel(triples: DataFrame) -> DataFrame:
     )
 
 
-def _encode_one(doc_iri: str, src: str):
-    """(template_key, slots) for one rule src — invalid rules become
-    the `!unsupported` diagnostic row (same contract as rule_table)."""
-    try:
-        body, head = _parse_swrl(src)
-        return encode_rule(doc_iri, body, head)
-    except Exception as e:  # noqa: BLE001 — recorded as a row
-        return _INVALID, [f"{type(e).__name__}: {e}", src]
-
-
-def _report_bad_rules(bad: list, n_bad: int, on_unsupported: str) -> None:
-    """Raise (``on_unsupported="raise"``) or warn about the
-    ``!unsupported`` rule rows; ``bad`` holds (doc_iri, slots) of at
-    least the first five of ``n_bad``. No-op when ``bad`` is empty."""
-    if not bad:
-        return
-    msgs = [f"{d}: {slots[0]} in rule {slots[1]!r}" for d, slots in bad[:5]]
-    more = f" (+{n_bad - 5} more)" if n_bad > 5 else ""
-    if on_unsupported == "raise":
-        raise UnsupportedSWRLError("unsupported SWRL fragment: " + "; ".join(msgs) + more)
-    warnings.warn("skipping unsupported SWRL rules: " + "; ".join(msgs) + more)
-
-
 def _local_rule_rows(rel_rows) -> list:
-    """Driver-rules regime: the sorted (doc_iri, template_key, slots)
-    rule list built from the probed ``_rule_rel`` rows with the SAME
-    encode function the distributed parse maps."""
+    """The sorted (doc_iri, template_key, slots) rule list built on the
+    driver from the collected ``_rule_rel`` rows: one row per distinct
+    rule src, plus the rules synthesized from owl:TransitiveProperty and
+    owl:inverseOf axioms (inverseOf fires both directions). An invalid
+    rule becomes the ``!unsupported`` diagnostic row with
+    ``slots = [reason, src]``."""
     out = []
     seen_srcs = set()
     for r in rel_rows:
         d, p, s, o = r["doc_iri"], r["pred"], r["subj"], r["obj"]
         if p == V.YPO_RULE_SRC:
+            # two rule NODES (distinct subj) can carry the same src text
             if (d, o) in seen_srcs:
                 continue
             seen_srcs.add((d, o))
-            key, slots = _encode_one(d, o)
+            try:
+                key, slots = encode_rule(d, *_parse_swrl(o))
+            except Exception as e:  # noqa: BLE001 — recorded as a row
+                key, slots = _INVALID, [f"{type(e).__name__}: {e}", o]
             out.append((d, key, list(slots)))
         elif p == V.OWL_INVERSE_OF:
             out.append((d, INVERSE_KEY, [o, s]))
@@ -551,71 +521,6 @@ def _local_rule_rows(rel_rows) -> list:
             out.append((d, TRANSITIVE_KEY, [s, s, s]))
     out.sort()
     return out
-
-
-def rule_table(triples: DataFrame) -> DataFrame:
-    """``(doc_iri, template_key, slots)`` — one row per rule instance,
-    fully distributed (Arrow-batched parse; nothing is collected).
-    Invalid rules get ``template_key = '!unsupported'`` with
-    ``slots = [reason, src]`` so the caller can raise or skip.
-
-    Includes rules synthesized from owl:TransitiveProperty and
-    owl:inverseOf axioms, built with pure column expressions.
-
-    One scan: the three rule sources (rule srcs, transitive-property
-    axioms, inverseOf axioms) ride a single filtered pass over the
-    triple table with ONE wide distinct; the per-branch projections
-    dedupe on the resulting tiny frame (r7, guide §2.2 — it was three
-    full scans + three full-width shuffles of the triple table)."""
-    return _parse_rules(_rule_rel(triples).localCheckpoint(eager=False))
-
-
-def _parse_rules(rel: DataFrame) -> DataFrame:
-    """:func:`rule_table` over an already built (checkpointed)
-    ``_rule_rel`` relation."""
-    srcs = rel.filter(F.col("pred") == V.YPO_RULE_SRC).select("doc_iri", "obj").distinct()
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"doc_iri": [], "template_key": [], "slots": []}
-            for d, s in zip(pdf["doc_iri"], pdf["obj"]):
-                key, slots = _encode_one(d, s)
-                out["doc_iri"].append(d)
-                out["template_key"].append(key)
-                out["slots"].append(slots)
-            yield pd.DataFrame(out)
-
-    parsed = srcs.mapInPandas(batches, _RULES_SCHEMA)
-
-    # pred (and obj, for the transitive branch) are constants inside
-    # each branch, so the wide distinct above already dedupes them —
-    # no per-branch re-shuffle needed. srcs keeps its distinct: two
-    # rule NODES (distinct subj) can carry the same src text.
-    trans = (
-        rel.filter((F.col("pred") == V.RDF_TYPE) & (F.col("obj") == V.OWL_TRANSITIVE))
-        .select("doc_iri", "subj")
-        .select(
-            "doc_iri",
-            F.lit(TRANSITIVE_KEY).alias("template_key"),
-            F.array("subj", "subj", "subj").alias("slots"),
-        )
-    )
-    # inverseOf rows are (subj=q, obj=p); fire both directions
-    inv = rel.filter(F.col("pred") == V.OWL_INVERSE_OF).select("doc_iri", "subj", "obj")
-    inv_both = inv.select(
-        "doc_iri",
-        F.lit(INVERSE_KEY).alias("template_key"),
-        F.array("obj", "subj").alias("slots"),
-    ).unionByName(
-        inv.select(
-            "doc_iri",
-            F.lit(INVERSE_KEY).alias("template_key"),
-            F.array("subj", "obj").alias("slots"),
-        )
-    )
-    return parsed.unionByName(trans).unionByName(inv_both)
 
 
 # --------------------------------------------------------------------------
@@ -921,49 +826,27 @@ def forward_chain(
         .distinct()
     )
 
-    # ONE bounded probe of the checkpointed rule relation picks the
-    # regime; the distributed parse reads the same checkpoint
-    rel = _rule_rel(triples).localCheckpoint(eager=False)
-    probe = regime.driver_rows(rel, _DRIVER_RULE_ROWS)
-    if probe is not None:
-        # driver-rules regime: the rule list is already on the driver —
-        # the bad-rule diagnostic, template list and relevance index
-        # need no further jobs
-        local_rules = _local_rule_rows(probe)
-        bad = [(d, slots) for d, k, slots in local_rules if k == _INVALID]
-        _report_bad_rules(bad, len(bad), on_unsupported)
+    # the rule-bearing triples are parsed on the driver: the bad-rule
+    # diagnostic, the template list and the relevance index below read
+    # the parsed list and need no further jobs
+    local_rules = _local_rule_rows(_rule_rel(triples).collect())
+    bad = [(d, slots) for d, k, slots in local_rules if k == _INVALID]
+    if bad:
+        msgs = [f"{d}: {slots[0]} in rule {slots[1]!r}" for d, slots in bad[:5]]
+        msg = "; ".join(msgs) + (f" (+{len(bad) - 5} more)" if len(bad) > 5 else "")
+        if on_unsupported == "raise":
+            raise UnsupportedSWRLError("unsupported SWRL fragment: " + msg)
+        warnings.warn("skipping unsupported SWRL rules: " + msg)
         local_rules = [r for r in local_rules if r[1] != _INVALID]
-        distinct_pairs = sorted({(k, tuple(slots)) for _, k, slots in local_rules})
-        # checkpointed once: the fixpoint joins read it per template per
-        # round, and a plain local relation measured 2× slower there
-        rules = arrow_local_df(spark, local_rules, _RULES_SCHEMA).localCheckpoint()
-    else:
-        rules = _parse_rules(rel).localCheckpoint()
-        # bounded diagnostic: collect at most 6 bad rules (5 to show +
-        # 1 to know there are more), never the full set — 10^9
-        # documents with a systematic bad rule must not become an
-        # unbounded driver collect
-        bad_df = rules.filter(F.col("template_key") == _INVALID).select(
-            "doc_iri", "slots"
-        )
-        bad = [(r["doc_iri"], r["slots"]) for r in bad_df.limit(6).collect()]
-        if bad:
-            _report_bad_rules(
-                bad, bad_df.count() if len(bad) >= 6 else len(bad), on_unsupported
-            )
-            rules = rules.filter(F.col("template_key") != _INVALID)
-
-        # ONE bounded collect serves both the template list and the
-        # relevance index below
-        distinct_pairs = sorted(
-            {
-                (r["template_key"], tuple(r["slots"]))
-                for r in rules.select("template_key", "slots").distinct().collect()
-            }
-        )
+    distinct_pairs = sorted({(k, tuple(slots)) for _, k, slots in local_rules})
     templates = sorted({k for k, _ in distinct_pairs})
     if not templates:
         return arrow_local_df(spark, [], base.schema)
+    # checkpointed once: the fixpoint joins read it per template per
+    # round, and a plain local relation measured 2× slower there
+    rules = arrow_local_df(
+        spark, local_rules, "doc_iri string, template_key string, slots array<string>"
+    ).localCheckpoint()
 
     # derive the closure and type tables from the CHECKPOINTED fact
     # base, not the raw triple table (r7, guide §2.2): both operators
@@ -971,19 +854,25 @@ def forward_chain(
     # exactly the distinct non-blank triples — identical inputs, but
     # the scans read the tiny materialized snapshot instead of
     # re-scanning and re-shuffling the full parse twice. (The rule
-    # probe above must NOT do this: anonymous Inverse(p) blank nodes
+    # collect above must NOT do this: anonymous Inverse(p) blank nodes
     # legitimately carry owl:inverseOf rows.)
-    facts = base.localCheckpoint()
-    closure = _closure_pairs(facts).localCheckpoint()
-    types = _closed_types(facts, closure).localCheckpoint()
-    had_type_heads = any("T(" in k.split("=>")[1] for k in templates)
-
-    # ONE count on the checkpointed base sizes the fact/type/delta sides
-    # of every per-atom join: under the broadcast bound each atom join
-    # is a BroadcastHashJoin instead of a sort-merge join — on the bench
-    # corpus ~30 fewer AQE shuffle-stage jobs per fixpoint round (the
-    # cost of a tiny-data fixpoint is job count, not bytes)
+    #
+    # ONE count fills the lazy fact checkpoint and sizes the fact/type/
+    # delta sides of every per-atom join: under the broadcast bound each
+    # atom join is a BroadcastHashJoin instead of a sort-merge join — on
+    # the bench corpus ~30 fewer AQE shuffle-stage jobs per fixpoint
+    # round (the cost of a tiny-data fixpoint is job count, not bytes)
+    facts = base.localCheckpoint(eager=False)
     n_facts = facts.count()
+    # lazy: their first reader fills them, not a job of their own. The
+    # closure is re-checkpointed although transitive_closure returns a
+    # local relation or a checkpoint: each round's type closure reads
+    # it, and on the bench reason corpus with the closure forced
+    # distributed, forward_chain took ~10% more CPU without the
+    # re-checkpoint (no difference in the driver regime)
+    closure = _closure_pairs(facts).localCheckpoint(eager=False)
+    types = _closed_types(facts, closure).localCheckpoint(eager=False)
+    had_type_heads = any("T(" in k.split("=>")[1] for k in templates)
 
     def _minus(a: DataFrame, b: DataFrame) -> DataFrame:
         # null-safe anti-join: obj_datatype is NULL for non-literals
@@ -997,26 +886,17 @@ def forward_chain(
 
     # driver-side relevance index (r4, datalog relevance filtering):
     # for each (template, prop-atom position), the set of predicate
-    # IRIs any rule of that template binds at that slot. One bounded
-    # job — the result is ≤ #templates × #distinct properties rows no
-    # matter the corpus size. In rounds ≥ 1 a delta-position plan whose
-    # atom cannot bind ANY delta predicate is provably empty (the plan
-    # joins that atom against the delta on pred = slot), so it is
-    # skipped instead of scheduled.
+    # IRIs any rule of that template binds at that slot, read off the
+    # parsed distinct-rule set above without a job. In rounds ≥ 1 a
+    # delta-position plan whose atom cannot bind ANY delta predicate is
+    # provably empty (the plan joins that atom against the delta on
+    # pred = slot), so it is skipped instead of scheduled.
     atom_preds: dict = {}
-    if templates:
-        # slot extraction per template shape happens driver-side on the
-        # bounded distinct-rule set collected above (r4 built this as a
-        # union of one filter-scan per prop atom — ~2× the whole
-        # index's cost in scheduling alone)
-        shapes = {k: _parse_template(k)[0] for k in templates}
-        for key, slots in distinct_pairs:
-            tbody = shapes.get(key)
-            if tbody is None:
-                continue
-            for j, a in enumerate(tbody):
-                if a[0] == "prop":
-                    atom_preds.setdefault((key, j), set()).add(slots[a[1]])
+    shapes = {k: _parse_template(k)[0] for k in templates}
+    for key, slots in distinct_pairs:
+        for j, a in enumerate(shapes[key]):
+            if a[0] == "prop":
+                atom_preds.setdefault((key, j), set()).add(slots[a[1]])
 
     # semi-naive: round 1 seeds with a full evaluation; later rounds
     # re-join only bindings touching at least one new fact (property
