@@ -1,6 +1,7 @@
-"""Template-grouped SWRL evaluation: driver work is O(#rule shapes),
-not O(#documents) — the round-1 verdict's scale fix. Plus up-front
-validation of unsupported fragments (ADVICE r01)."""
+"""SWRL rule templates and the per-document engine: rules of one
+shape share a template key, evaluation never crosses ``doc_iri``, the
+engine agrees with the sequential oracle, and unsupported fragments
+are rejected up front (ADVICE r01)."""
 
 import pytest
 from pyspark.sql import functions as F, types as T
@@ -62,7 +63,7 @@ def test_hundred_docs_one_template(spark):
 
     rules = swrl._local_rule_rows(swrl._rule_rel(triples).collect())
     keys = sorted({k for _, k, _ in rules})
-    # 120 documents, 120 rule instances -> ONE template (one plan/round)
+    # 120 documents, 120 rule instances -> ONE template key, decoded once
     assert keys == ["P(v0,v1)=>P(v1,v0)"] or len(keys) == 1
     assert len(rules) == 120
 
@@ -152,6 +153,22 @@ def test_subclass_closure_feeds_delta_types(spark):
         for r in forward_chain(triples).collect()
     }
     assert (f"{E}tom", V.RDF_TYPE, f"{E}Tracked") in got
+
+
+def test_subclass_edges_stay_in_their_document(spark):
+    # document B's subClassOf edge must not type document A's
+    # individual: the closure is per document, like the oracle's
+    from yamlpyowl_spark.sources.artifacts import sequential_forward_chain
+
+    A, B, S = "http://a#", "http://b#", "http://shared#"
+    rows = [
+        (f"{A}r", V.YPO_RULE_SRC, "Animal(?x) -> Tracked(?x)", True, None, A),
+        (f"{A}i", V.RDF_TYPE, f"{S}Cat", False, None, A),
+        (f"{S}Cat", V.RDFS_SUBCLASSOF, f"{A}Animal", False, None, B),
+    ]
+    triples = spark.createDataFrame(rows, TRIPLE_COLS)
+    got = {tuple(r) for r in forward_chain(triples).collect()}
+    assert got == set(sequential_forward_chain(rows))
 
 
 def test_bad_rule_collect_is_bounded(spark):
@@ -254,11 +271,71 @@ def test_encode_parse_template_slot_walk_symmetry(rule):
 @given(_rules(), _rules())
 def test_same_key_means_same_shape(r1, r2):
     """Two rules sharing a template key MUST have identical structure
-    (the whole basis for evaluating them in one plan)."""
+    (the basis for decoding every rule of a key with one cached parse)."""
     k1, s1 = encode_rule("http://a#", *r1)
     k2, s2 = encode_rule("http://b#", *r2)
     if k1 == k2:
         assert len(s1) == len(s2)
+
+
+_ents = st.sampled_from(["bob", "dresden", "42", "ann"])
+_lexicals = st.sampled_from(["42", "0.5", "bob", "7"])
+
+
+@st.composite
+def _doc_rows(draw):
+    """A random document over the vocabulary of ``_rules()``: property
+    facts (entity or literal objects), rdf:type facts, subClassOf edges,
+    and transitive / inverseOf axioms that synthesize more rules."""
+    D = "http://d#"
+    cls = _names.map(lambda n: D + n.capitalize())
+    prop = _names.map(lambda n: D + n)
+    rows = []
+    for s, p, o, lit in draw(st.lists(st.tuples(_ents, prop, _ents, _lexicals), max_size=16)):
+        if draw(st.booleans()):
+            rows.append((D + s, p, lit, True, draw(st.sampled_from([None, V.XSD_STRING]))))
+        else:
+            rows.append((D + s, p, D + o, False, None))
+    for s, c in draw(st.lists(st.tuples(_ents, cls), max_size=5)):
+        rows.append((D + s, V.RDF_TYPE, c, False, None))
+    for c1, c2 in draw(st.lists(st.tuples(cls, cls), max_size=4)):
+        rows.append((c1, V.RDFS_SUBCLASSOF, c2, False, None))
+    for p in draw(st.lists(prop, max_size=2)):
+        rows.append((p, V.RDF_TYPE, V.OWL_TRANSITIVE, False, None))
+    for p, q in draw(st.lists(st.tuples(prop, prop), max_size=2)):
+        rows.append((p, V.OWL_INVERSE_OF, q, False, None))
+    return rows
+
+
+def _rule_src(body, head):
+    atoms = lambda xs: ", ".join(f"{n}({', '.join(a)})" for n, a in xs)  # noqa: E731
+    return f"{atoms(body)} -> {atoms(head)}"
+
+
+def _class_head(rule):
+    # p(a, b) -> P(a): derived class memberships feed class atoms
+    body, [(name, args)] = rule
+    return body, [(name.capitalize(), args[:1])]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(st.one_of(_rules(), _rules().map(_class_head)), min_size=1, max_size=3),
+    _doc_rows(),
+    st.integers(1, 4),
+)
+def test_chain_document_equals_sequential_oracle(rules, facts, max_iter):
+    """The per-document engine, called without Spark, derives exactly
+    the oracle's facts, including when ``max_iter`` cuts the rounds."""
+    from yamlpyowl_spark.sources.artifacts import sequential_forward_chain
+
+    D = "http://d#"
+    rows = [
+        (f"{D}rule{i}", V.YPO_RULE_SRC, _rule_src(*r), True, None)
+        for i, r in enumerate(rules)
+    ] + facts
+    want = {r[:5] for r in sequential_forward_chain([r + (D,) for r in rows], max_iter)}
+    assert swrl.chain_document(D, rows, max_iter) == want
 
 
 def test_builtin_comparison_skips_non_numeric_bindings(spark):

@@ -1,6 +1,6 @@
 """Measured-size dispatch for the iterative operators.
 
-Closure, connected components, SWRL and linking each choose how to run
+Closure, connected components and linking each choose how to run
 from the measured size of their input: a tiny input is computed on the
 driver from one bounded collect, a small one is broadcast into the
 joins, and a big one keeps the shuffle plans. The shared bounds and the
@@ -19,9 +19,9 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, Row, functions as F
 
 # Join sides of at most this many rows are broadcast-hinted. The widest
-# hinted tuple (a fact row, or an (iri, canonical) pair) is about 200 B,
-# so about 20 MB at the bound — under the session's 64 MB
-# autoBroadcastJoinThreshold, with headroom for a fixpoint's growth.
+# hinted tuple, an (iri, canonical) pair, is about 200 B, so about 20 MB
+# at the bound — under the session's 64 MB autoBroadcastJoinThreshold,
+# with headroom for a fixpoint's growth.
 BROADCAST_ROWS = 100_000
 
 # Edge rows (two strings each) up to which closure and CC run on the

@@ -1,23 +1,24 @@
-"""SWRL-rule forward chaining as an iterative DataFrame fixpoint.
+"""SWRL-rule forward chaining, one document per task.
 
 The reference applies SWRL rules by shelling out to a Java/Pellet
-reasoner (core.py:1342-1343, sync_reasoner_pellet). Here rule bodies
-become chains of equi-joins over the triples table and the fixpoint is
-a driver loop with ``localCheckpoint`` per round — the classic
-(semi-)naive Datalog evaluation mapped onto Spark.
+reasoner (core.py:1342-1343, sync_reasoner_pellet). Rule names resolve
+against the document IRI (the parser emits rules as ``(rule_iri,
+ypo:ruleSrc, src)`` literals), so chaining never crosses ``doc_iri``.
 
-Scale shape: rules are grouped by **template** (the rule's structural
-signature — atom kinds, variable pattern, constant positions — with
-concrete predicate/class names abstracted into slot columns). The
-rules are parsed on the driver from one collect of the rule-bearing
-triples and joined as a checkpointed relation whose slot columns are
-join keys on ``(doc_iri, pred)``. The driver builds ONE join pipeline
-per distinct template per round, so plan building is O(#distinct rule
-shapes), not O(#documents × #rules): documents that all carry the
-same five rule structures cost five plans per round, same as one
-document. The one-off parse is linear in the rule-bearing triples,
-not in the corpus: 50k of them take ~1.2 s of driver CPU and ~30 MB
-of Python heap (4-core x86 box).
+* Driver: :func:`forward_chain` collects the rule-bearing triples once
+  and validates every rule with :func:`encode_rule`, so a rule outside
+  the fragment raises (or is skipped with a warning) when
+  ``forward_chain`` is called, before any evaluation job. Only the
+  documents that carry a valid rule are shuffled, one pandas group per
+  document.
+* Executor: :func:`chain_document`, plain Python, re-derives the
+  document's rules from its rows and substitutes each rule's slot
+  values into its decoded template (:func:`_parse_template`). Round 0
+  evaluates every rule in full; round r re-joins only the bindings in
+  which one body atom matches a fact or a closed type new in round
+  r-1, against the facts present at the start of round r, so
+  ``max_iter`` caps the rounds. Every atom is a hash lookup keyed on
+  the variables already bound. A large document is one task.
 
 Supported (everything the reference fixtures use, plus class-atom
 heads which the reference's Pellet path also accepts):
@@ -28,9 +29,14 @@ heads which the reference's Pellet path also accepts):
                                         head position;
 * property atoms     ``p(?x, ?y)``    — object or data properties,
                                         constants allowed in any slot;
+                                        a constant object matches a
+                                        literal's lexical form or the
+                                        entity IRI;
 * arithmetic atoms   ``add/subtract/multiply/mod(?z, ?x, ?y)`` —
   swrlb result-first convention; binds ``?z`` (or checks it when
-  already bound); INTEGER fragment via try_cast/try_add & co (r6b)
+  already bound); INTEGER fragment with try-cast semantics (r6b): a
+  non-integral operand, int64 overflow and mod-by-zero drop the
+  binding, and mod truncates toward zero;
 * string atoms       ``stringConcat(?z, ?a, ?b, ...)`` (n-ary),
   ``stringLength/upperCase/lowerCase(?z, ?x)`` — result-first, bind
   or check like the arithmetic batch; ``contains/startsWith/
@@ -43,14 +49,14 @@ heads which the reference's Pellet path also accepts):
   (r6d): XPath character positions ``p >= start`` and
   ``p < start + length`` (1-based; a negative/zero ``start`` shifts
   the window, never wraps), start/length are integer constants or
-  previously-bound variables — non-integral bindings drop the row
-  via try_cast exactly like the arithmetic batch. XPath's
-  FLOAT-argument rounding stays outside the fragment (a
-  Java-vs-Python formatting parity trap) and raises up front;
+  previously-bound variables — non-integral bindings drop like the
+  arithmetic batch. XPath's FLOAT-argument rounding stays outside the
+  fragment (a Java-vs-Python formatting parity trap) and raises up
+  front;
 * builtin atoms      ``greaterThan/lessThan/greaterThanOrEqual/
   lessThanOrEqual/equal/notEqual(?v, const-or-?w)`` (numeric
-  comparison; r6 adds the OrEqual/equal/notEqual codes and var-var
-  operands);
+  comparison; a non-numeric binding drops; r6 adds the OrEqual/equal/
+  notEqual codes and var-var operands);
 * owl:TransitiveProperty — expanded to ``p(?x,?y), p(?y,?z) → p(?x,?z)``;
 * owl:inverseOf      — ``p(?x,?y) → q(?y,?x)`` in both directions.
 
@@ -64,17 +70,14 @@ NOT a DL reasoner: OneOf/Functional/AllDifferent model enumeration
 (the zebra puzzle's solution step) lives in ``operators/dlreason.py``;
 ``api.OntologyManager.sync_reasoner`` composes the two. The
 triple-parity contract is on asserted triples (SURVEY.md §2.5).
-
-Rule names are resolved against the document IRI (rules are emitted by
-the parser as ``(rule_iri, ypo:ruleSrc, src)`` literals), and chaining
-is doc-scoped: all joins carry ``doc_iri``.
 """
 
 from __future__ import annotations
 
+import operator
 import re
 import warnings
-from functools import lru_cache, reduce
+from functools import lru_cache, partial
 from typing import List, Tuple
 
 from pyspark.sql import DataFrame, functions as F
@@ -82,9 +85,73 @@ from pyspark.sql import DataFrame, functions as F
 from .. import vocab as V
 from ..parser.document import _parse_swrl
 from ..parser.model import ParseError
-from . import regime
-from .closure import transitive_closure
 from ..schema import arrow_local_df
+
+_I64 = 2**63
+_I32 = 2**31
+
+
+def _int(x: str):
+    """``try_cast(x AS BIGINT)``: the integer, or None."""
+    try:
+        n = int(x)
+    except ValueError:
+        return None
+    return n if -_I64 <= n < _I64 else None
+
+
+def _num_test(f, x: str, y: str) -> bool:
+    # numeric comparison; a non-numeric operand fails the test
+    try:
+        return f(float(x), float(y))
+    except ValueError:
+        return False
+
+
+def _int_op(f, x: str, y: str):
+    # BIGINT arithmetic over lexical forms: None (the binding drops) on
+    # a non-integral operand, int64 overflow or mod-by-zero
+    a, b = _int(x), _int(y)
+    r = None if a is None or b is None else f(a, b)
+    return None if r is None or not -_I64 <= r < _I64 else str(r)
+
+
+def _tmod(a: int, b: int):
+    # Java's %: truncates toward zero, the sign follows the dividend
+    if b == 0:
+        return None
+    r = abs(a) % abs(b)
+    return r if a >= 0 else -r
+
+
+def _substring(s: str, start: str, length: str = None):
+    """XPath integer substring: the characters at 1-based positions
+    ``p >= start`` and ``p < start + length``; None where a BIGINT or
+    INT try-cast of a bound fails."""
+    st = _int(start)
+    if st is None:
+        return None
+    lo = max(st, 1)
+    if length is None:
+        return s[lo - 1 :] if lo < _I32 else None
+    ln = _int(length)
+    if ln is None or not -_I64 <= st + ln < _I64:
+        return None
+    n = st + ln - lo
+    if not -_I64 <= n < _I64:
+        return None
+    if n <= 0:
+        return ""
+    return s[lo - 1 : lo - 1 + n] if lo < _I32 and n < _I32 else None
+
+
+def _boolean_not(x: str):
+    if x in ("true", "1"):
+        return "false"
+    if x in ("false", "0"):
+        return "true"
+    return None
+
 
 _BUILTINS = {
     "greaterThan": "gt",
@@ -94,41 +161,40 @@ _BUILTINS = {
     "equal": "eq",
     "notEqual": "ne",
 }
-_BI_SQL = {"gt": ">", "lt": "<", "ge": ">=", "le": "<=", "eq": "=", "ne": "!="}
-# swrlb arithmetic (r6b): add/subtract/multiply/mod with the FIRST
-# argument as the result (swrlb argument convention). INTEGER fragment:
-# operands try_cast to BIGINT (a non-integral binding drops the row,
-# the comparison-builtin skip semantics) and the try_* forms return
-# NULL instead of raising under ANSI mode on overflow / mod-by-zero —
-# NULL results are filtered, never emitted. Division stays outside the
+_CMP = {
+    "gt": operator.gt,
+    "lt": operator.lt,
+    "ge": operator.ge,
+    "le": operator.le,
+    "eq": operator.eq,
+    "ne": operator.ne,
+}
+# swrlb arithmetic, result-first (r6b). Division stays outside the
 # fragment (its value is non-integral almost surely; a float dialect
 # would hitch engine parity to Java-vs-Python double formatting).
 _ARITH = {"add": "ad", "subtract": "sb", "multiply": "ml", "mod": "md"}
-_AR_SQL = {"ad": "try_add", "sb": "try_subtract", "ml": "try_multiply", "md": "try_mod"}
-# swrlb string builtins (r6c): result-first like the arithmetic batch.
-# stringConcat is n-ary (result + >=2 operands); stringLength binds the
-# decimal lexical of the CHARACTER count; upperCase/lowerCase follow
-# Python/Java default-locale casing (identical over ASCII — the corpus
-# dialect; engine parity asserted in tests). contains/startsWith/
-# endsWith are check builtins over bound strings/constants. substring
-# (r6d) is the XPath INTEGER fragment: start/length must be integer
-# constants or bound variables (try_cast semantics — non-integral
-# drops the row); float arguments would need XPath round() parity and
-# stay loud-out.
+_AR_FN = {"ad": operator.add, "sb": operator.sub, "ml": operator.mul, "md": _tmod}
+# swrlb string builtins, result-first (r6c, r6d): stringLength binds
+# the decimal lexical of the CHARACTER count; upperCase/lowerCase follow
+# Python default-locale casing (the corpus dialect is ASCII)
 _STR_FN = {
     "stringConcat": "sc",
     "stringLength": "sl",
     "upperCase": "uc",
     "lowerCase": "lc",
     "substring": "ss",
-    # swrlb:booleanNot — result-first over the boolean lexicals
-    # ("true"/"false"/"1"/"0"; a non-boolean binding drops the row);
-    # binds the canonical lexical of the flipped value
     "booleanNot": "bn",
 }
-_SF_SQL = frozenset(("sc", "sl", "uc", "lc", "ss", "bn"))
+_SF_FN = {
+    "sc": lambda *parts: "".join(parts),
+    "sl": lambda x: str(len(x)),
+    "uc": str.upper,
+    "lc": str.lower,
+    "ss": _substring,
+    "bn": _boolean_not,
+}
 _STR_CHECK = {"contains": "ct", "startsWith": "sw", "endsWith": "ew"}
-_SCK_SQL = {"ct": "contains", "sw": "startswith", "ew": "endswith"}
+_SCK_FN = {"ct": operator.contains, "sw": str.startswith, "ew": str.endswith}
 _INVALID = "!unsupported"
 
 
@@ -159,7 +225,7 @@ def encode_rule(doc_iri: str, body: list, head: list) -> Tuple[str, List[str]]:
     """Encode one parsed rule as a structural template key plus the
     flat list of concrete slot values (full IRIs / literal lexical
     forms). Two rules from different documents with the same structure
-    share a key and are evaluated by one join pipeline.
+    share a key; :func:`_compile` substitutes the slots back in.
 
     Raises :class:`UnsupportedSWRLError` on rules outside the fragment
     (validated up front so a bad rule can never abort a running
@@ -373,104 +439,46 @@ _ATOM_RE = re.compile(r"(P|T|gt|lt|ge|le|eq|ne|ad|sb|ml|md|sc|sl|uc|lc|ss|bn|ct|
 
 @lru_cache(maxsize=4096)
 def _parse_template(key: str):
-    """Driver-side inverse of :func:`encode_rule`'s key: atom
-    descriptors with slot indices assigned by the identical walk.
-    Cached: the fixpoint re-parses each template once per round per
-    delta position otherwise (callers never mutate the result)."""
+    """Inverse of :func:`encode_rule`'s key: atom descriptors with
+    slot indices assigned by the identical walk. Cached: the documents
+    of a corpus share a few rule shapes (callers never mutate the
+    result)."""
     body_s, head_s = key.split("=>")
     slot = 0
+
+    def term(a: str, two: str = None):
+        # a variable, or a constant taking the next slot — or the next
+        # two: a body object's ("c2": lexical, IRI) or a head literal's
+        # ("lit": lexical, datatype)
+        nonlocal slot
+        if a[0] == "v":
+            return ("v", int(a[1:]))
+        slot += 2 if two else 1
+        return (two, slot - 2, slot - 1) if two else ("c", slot - 1)
+
     body = []
     for m in _ATOM_RE.finditer(body_s):
         kind, args = m.group(1), m.group(2).split(",")
-        if kind in _BI_SQL:
-            if args[1] == "C":
-                body.append(("bi", kind, int(args[0][1:]), ("c", slot)))
-                slot += 1
-            else:
-                body.append(("bi", kind, int(args[0][1:]), ("v", int(args[1][1:]))))
-        elif kind in _AR_SQL:
-            outv = int(args[0][1:])
-            ops = []
-            for a in args[1:]:
-                if a == "C":
-                    ops.append(("c", slot))
-                    slot += 1
-                else:
-                    ops.append(("v", int(a[1:])))
-            body.append(("ar", kind, outv, ops[0], ops[1]))
-        elif kind in _SF_SQL:
-            outv = int(args[0][1:])
-            ops = []
-            for a in args[1:]:
-                if a == "C":
-                    ops.append(("c", slot))
-                    slot += 1
-                else:
-                    ops.append(("v", int(a[1:])))
-            body.append(("sf", kind, outv, ops))
-        elif kind in _SCK_SQL:
-            ops = []
-            for a in args:
-                if a == "C":
-                    ops.append(("c", slot))
-                    slot += 1
-                else:
-                    ops.append(("v", int(a[1:])))
-            body.append(("sck", kind, ops[0], ops[1]))
+        if kind in _CMP:
+            body.append(("bi", kind, int(args[0][1:]), term(args[1])))
+        elif kind in _AR_FN:
+            body.append(("ar", kind, int(args[0][1:]), term(args[1]), term(args[2])))
+        elif kind in _SF_FN:
+            body.append(("sf", kind, int(args[0][1:]), [term(a) for a in args[1:]]))
+        elif kind in _SCK_FN:
+            body.append(("sck", kind, term(args[0]), term(args[1])))
         elif kind == "T":
-            cls_slot = slot
-            slot += 1
-            if args[0] == "C":
-                inst = ("c", slot)
-                slot += 1
-            else:
-                inst = ("v", int(args[0][1:]))
-            body.append(("cls", cls_slot, inst))
+            body.append(("cls", term("C")[1], term(args[0])))
         else:
-            pred_slot = slot
-            slot += 1
-            s, o = args
-            if s == "C":
-                ssub = ("c", slot)
-                slot += 1
-            else:
-                ssub = ("v", int(s[1:]))
-            if o == "C":
-                osub = ("c2", slot, slot + 1)
-                slot += 2
-            else:
-                osub = ("v", int(o[1:]))
-            body.append(("prop", pred_slot, ssub, osub))
+            body.append(("prop", term("C")[1], term(args[0]), term(args[1], "c2")))
     head = []
     for m in _ATOM_RE.finditer(head_s):
         kind, args = m.group(1), m.group(2).split(",")
         if kind == "T":
-            cls_slot = slot
-            slot += 1
-            if args[0] == "CE":
-                inst = ("c", slot)
-                slot += 1
-            else:
-                inst = ("v", int(args[0][1:]))
-            head.append(("cls", cls_slot, inst))
+            head.append(("cls", term("C")[1], term(args[0])))
         else:
-            pred_slot = slot
-            slot += 1
-            s, o = args
-            if s == "CE":
-                ssub = ("c", slot)
-                slot += 1
-            else:
-                ssub = ("v", int(s[1:]))
-            if o == "CL":
-                osub = ("lit", slot, slot + 1)
-                slot += 2
-            elif o == "CE":
-                osub = ("c", slot)
-                slot += 1
-            else:
-                osub = ("v", int(o[1:]))
-            head.append(("prop", pred_slot, ssub, osub))
+            lit = "lit" if args[1] == "CL" else None
+            head.append(("prop", term("C")[1], term(args[0]), term(args[1], lit)))
     return body, head, slot
 
 
@@ -494,16 +502,16 @@ def _rule_rel(triples: DataFrame) -> DataFrame:
 
 
 def _local_rule_rows(rel_rows) -> list:
-    """The sorted (doc_iri, template_key, slots) rule list built on the
-    driver from the collected ``_rule_rel`` rows: one row per distinct
-    rule src, plus the rules synthesized from owl:TransitiveProperty and
-    owl:inverseOf axioms (inverseOf fires both directions). An invalid
-    rule becomes the ``!unsupported`` diagnostic row with
-    ``slots = [reason, src]``."""
+    """The sorted (doc_iri, template_key, slots) rule list of distinct
+    ``(doc_iri, pred, subj, obj)`` rows — the collected ``_rule_rel``
+    rows on the driver, a document's rows in :func:`chain_document`:
+    one row per distinct rule src, plus the rules synthesized from
+    owl:TransitiveProperty and owl:inverseOf axioms (inverseOf fires
+    both directions); other rows are ignored. An invalid rule becomes
+    the ``!unsupported`` diagnostic row with ``slots = [reason, src]``."""
     out = []
     seen_srcs = set()
-    for r in rel_rows:
-        d, p, s, o = r["doc_iri"], r["pred"], r["subj"], r["obj"]
+    for d, p, s, o in rel_rows:
         if p == V.YPO_RULE_SRC:
             # two rule NODES (distinct subj) can carry the same src text
             if (d, o) in seen_srcs:
@@ -517,293 +525,237 @@ def _local_rule_rows(rel_rows) -> list:
         elif p == V.OWL_INVERSE_OF:
             out.append((d, INVERSE_KEY, [o, s]))
             out.append((d, INVERSE_KEY, [s, o]))
-        else:  # rdf:type owl:TransitiveProperty
+        elif p == V.RDF_TYPE and o == V.OWL_TRANSITIVE:
             out.append((d, TRANSITIVE_KEY, [s, s, s]))
     out.sort()
     return out
 
 
 # --------------------------------------------------------------------------
-# evaluation
+# per-document engine: plain Python, one call per document
 # --------------------------------------------------------------------------
 
 
-def _closure_pairs(triples: DataFrame) -> DataFrame:
-    sub = triples.filter(
-        (F.col("pred") == V.RDFS_SUBCLASSOF)
-        & ~F.col("subj").startswith("_:")
-        & ~F.col("obj").startswith("_:")
-    ).select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    return transitive_closure(sub)
+def _compile(key: str, slots: list):
+    """One rule as (body, head), its slot values substituted into the
+    atoms :func:`_parse_template` decodes from ``key``. Variables stay
+    ``("v", i)``, numbered in order of first binding.
 
+    Body atoms: ``("facts" | "types", pred, subj, obj)`` is matched
+    against an index, where a constant object is ``("k", ((value,
+    obj_is_literal), ...))`` (a class atom reads the closed types as
+    ``(inst, rdf:type, cls)`` facts); ``("test", fn, terms)`` filters;
+    ``("eval", fn, out, terms, same)`` binds ``out`` to ``fn(terms)``,
+    or keeps the binding if ``same(out, fn(terms))`` when ``out`` is
+    already bound. Head atoms: ``(subj, pred, obj, obj_is_literal,
+    obj_datatype)`` with terms in the subject and object."""
+    body_t, head_t, _ = _parse_template(key)
 
-def _closed_types(facts: DataFrame, closure: DataFrame) -> DataFrame:
-    """(doc_iri, inst, cls) with rdfs:subClassOf closure applied."""
-    types = facts.filter(
-        (F.col("pred") == V.RDF_TYPE)
-        & ~F.col("subj").startswith("_:")
-        & ~F.col("obj").startswith("_:")
-    ).select("doc_iri", F.col("subj").alias("inst"), F.col("obj").alias("cls"))
-    inherited = types.join(closure, types.cls == closure.src).select(
-        "doc_iri", "inst", F.col("dst").alias("cls")
-    )
-    return types.unionByName(inherited).distinct()
+    def sub(t):
+        return t if t[0] == "v" else (t[0],) + tuple(slots[i] for i in t[1:])
 
-
-def _eval_template(
-    key: str,
-    rules: DataFrame,
-    facts: DataFrame,
-    types: DataFrame,
-    delta: DataFrame = None,
-    types_delta: DataFrame = None,
-    live_positions: list = None,
-) -> DataFrame:
-    """One join pipeline evaluating EVERY rule of this template across
-    all documents at once; rule slots ride along as columns.
-
-    Semi-naive mode (``delta`` given): returns the union over body-atom
-    positions i of the plan where atom i reads the DELTA — property
-    atoms read the round's new FACTS, class atoms the round's new
-    closed TYPES — and the other atoms read the full sets. A binding
-    is re-derived this round only if at least one body atom matches
-    something new, so round cost tracks |delta| for EVERY template
-    shape, including class-atom bodies (classic semi-naive Datalog;
-    the r2 verdict's full-re-evaluation fallback is gone)."""
-    body, head, n_slots = _parse_template(key)
-    if delta is not None:
-        outs = [
-            _eval_template_once(key, body, head, n_slots, rules, facts, types, delta, j)
-            for j, a in enumerate(body)
-            if a[0] == "prop"
-            and (live_positions is None or j in live_positions)
-        ]
-        if types_delta is not None:
-            outs.extend(
-                _eval_template_once(
-                    key, body, head, n_slots, rules, facts, types, None, -1,
-                    types_delta=types_delta, types_delta_pos=j,
-                )
-                for j, a in enumerate(body)
-                if a[0] == "cls"
-            )
-        if not outs:
-            # either the body is all class atoms with no type-inferring
-            # template in play (types_delta is None), or relevance
-            # filtering proved every delta-position plan empty:
-            # nothing can re-trigger this rule this round — return None
-            # so the caller skips it (building even a limit(0) plan
-            # costs py4j round-trips and optimizer time per round)
-            return None
-        return reduce(lambda a, c: a.unionByName(c), outs)
-    return _eval_template_once(key, body, head, n_slots, rules, facts, types, None, -1)
-
-
-def _eval_template_once(
-    key, body, head, n_slots, rules, facts, types, delta, delta_pos,
-    types_delta=None, types_delta_pos=-1,
-) -> DataFrame:
-    # The pipeline is composed from SQL-string expressions (filter/
-    # selectExpr/F.expr), ONE py4j round-trip per condition or select —
-    # composing the same plan from Column objects costs a JVM socket
-    # call per `F.col`/`&`/`==`/`.alias` (~20k per round across the
-    # template × delta-position variants, ~2.5s of pure driver latency,
-    # measured). Column references are name-based and never collide:
-    # the b side owns doc_iri/_s*/v*, the fact/type side is renamed to
-    # __* before every join. Slot VALUES stay data (join columns);
-    # only fixed identifiers and the template's structure reach SQL.
-    b = rules.filter(f"template_key = '{key}'").selectExpr(
-        "doc_iri", *[f"slots[{i}] AS _s{i}" for i in range(n_slots)]
-    )
-    bcols = ["doc_iri"] + [f"_s{i}" for i in range(n_slots)]
-    bound: set = set()
-    for atom_idx, atom in enumerate(body):
-        if atom[0] == "bi":
-            _, op, vi, rhs = atom
-            sign = _BI_SQL[op]
-            rexpr = f"_s{rhs[1]}" if rhs[0] == "c" else f"v{rhs[1]}"
-            # try_cast: a non-numeric binding DROPS OUT of the builtin
-            # comparison (matching the sequential oracle's
-            # skip-on-ValueError) — ANSI mode's plain cast would kill
-            # the whole fixpoint job instead
-            b = b.filter(f"try_cast(v{vi} as double) {sign} try_cast({rexpr} as double)")
-            continue
-        if atom[0] == "ar":
-            _, op, outv, o1, o2 = atom
-            es = [
-                f"try_cast({'_s' if k == 'c' else 'v'}{i} AS BIGINT)"
-                for k, i in (o1, o2)
-            ]
-            expr = f"{_AR_SQL[op]}({es[0]}, {es[1]})"
-            if outv in bound:
-                # check form: the result variable was bound earlier
-                b = b.filter(f"try_cast(v{outv} AS BIGINT) = {expr}")
+    body = []
+    for a in body_t:
+        kind = a[0]
+        if kind == "prop":
+            o = sub(a[3])
+            if o[0] == "c2":  # a literal's lexical form OR the entity IRI
+                o = ("k", ((o[1], True), (o[2], False)))
+            body.append(("facts", slots[a[1]], sub(a[2]), o))
+        elif kind == "cls":
+            cls = ("k", ((slots[a[1]], False),))
+            body.append(("types", V.RDF_TYPE, sub(a[2]), cls))
+        elif kind == "bi":
+            body.append(("test", partial(_num_test, _CMP[a[1]]), [("v", a[2]), sub(a[3])]))
+        elif kind == "sck":
+            body.append(("test", _SCK_FN[a[1]], [sub(a[2]), sub(a[3])]))
+        elif kind == "ar":
+            same = lambda bound, r: _int(bound) == int(r)  # noqa: E731
+            fn = partial(_int_op, _AR_FN[a[1]])
+            body.append(("eval", fn, a[2], [sub(a[3]), sub(a[4])], same))
+        else:  # sf
+            body.append(("eval", _SF_FN[a[1]], a[2], [sub(t) for t in a[3]], operator.eq))
+    head = []
+    for a in head_t:
+        if a[0] == "cls":
+            head.append((sub(a[2]), V.RDF_TYPE, ("c", slots[a[1]]), False, None))
+        else:
+            o = sub(a[3])
+            if o[0] == "lit":
+                head.append((sub(a[2]), slots[a[1]], ("c", o[1]), True, o[2]))
             else:
-                # binding form: compute, DROP NULL results (non-integral
-                # operand, overflow, mod-by-zero), bind the lexical form
-                bound.add(outv)
-                b = (
-                    b.selectExpr(*bcols, f"CAST({expr} AS STRING) AS v{outv}")
-                    .filter(f"v{outv} IS NOT NULL")
-                )
-                bcols.append(f"v{outv}")
-            continue
-        if atom[0] == "sf":
-            _, op, outv, ops = atom
-            es = [f"{'_s' if k == 'c' else 'v'}{i}" for k, i in ops]
-            if op == "sc":
-                expr = f"concat({', '.join(es)})"
-            elif op == "sl":
-                expr = f"CAST(length({es[0]}) AS STRING)"
-            elif op == "uc":
-                expr = f"upper({es[0]})"
-            elif op == "ss":
-                # XPath integer substring: keep positions p with
-                # p >= start and p < start + length (1-based). All
-                # bound checks go through try_cast/try_add so a
-                # non-integral binding or an INT-range overflow
-                # yields NULL — dropped below, never an ANSI error.
-                stc = f"try_cast({es[1]} AS BIGINT)"
-                base = f"greatest({stc}, 1)"
-                if len(es) == 3:
-                    lnc = f"try_cast({es[2]} AS BIGINT)"
-                    n = f"try_subtract(try_add({stc}, {lnc}), {base})"
-                    expr = (
-                        f"CASE WHEN {n} <= 0 THEN '' "
-                        f"ELSE substring({es[0]}, try_cast({base} AS INT), "
-                        f"try_cast({n} AS INT)) END"
-                    )
+                head.append((sub(a[2]), slots[a[1]], o, False, None))
+    return body, head
+
+
+def _val(t, b: tuple) -> str:
+    return b[t[1]] if t[0] == "v" else t[1]
+
+
+class _Index:
+    """(subj, pred, obj, obj_is_literal) facts, hashed on every way a
+    body atom can have its subject and object bound."""
+
+    def __init__(self, rows):
+        self.p: dict = {}  # pred -> {(subj, obj)}
+        self.ps: dict = {}  # (pred, subj) -> {obj}
+        self.po: dict = {}  # (pred, obj, obj_is_literal) -> {subj}
+        self.add(rows)
+
+    def add(self, rows):
+        for s, p, o, il, _ in rows:
+            self.p.setdefault(p, set()).add((s, o))
+            self.ps.setdefault((p, s), set()).add(o)
+            self.po.setdefault((p, o, il), set()).add(s)
+
+    def subjects(self, p: str, objs) -> set:
+        return set().union(*(self.po.get((p, o, il), ()) for o, il in objs))
+
+    def holds(self, p: str, o) -> bool:
+        """Whether a delta-position atom over ``p`` / ``o`` can match."""
+        if o[0] == "k":
+            return any((p, v, il) in self.po for v, il in o[1])
+        return p in self.p
+
+
+def _join(bs: list, ix: _Index, p: str, s, o) -> list:
+    """Extend every binding by the facts of ``ix`` that match one atom.
+    Bindings are tuples and a new variable's index is the tuple's
+    length, so which of ``s``/``o`` is bound is the same for all."""
+    n = len(bs[0])
+    s_new = s[0] == "v" and s[1] >= n
+    if o[0] == "k":
+        subs = ix.subjects(p, o[1])
+        if s_new:
+            return [b + (x,) for b in bs for x in subs]
+        return [b for b in bs if _val(s, b) in subs]
+    oi = o[1]
+    if oi < n:
+        if s_new:
+            lookup = ix.subjects
+            return [b + (x,) for b in bs for x in lookup(p, ((b[oi], True), (b[oi], False)))]
+        return [b for b in bs if b[oi] in ix.ps.get((p, _val(s, b)), ())]
+    if not s_new:
+        return [b + (y,) for b in bs for y in ix.ps.get((p, _val(s, b)), ())]
+    pairs = ix.p.get(p, ())
+    if oi == s[1]:  # p(?x, ?x)
+        return [b + (x,) for b in bs for x, y in pairs if x == y]
+    return [b + (x, y) for b in bs for x, y in pairs]
+
+
+def _match(body: list, full: dict, delta: dict = None, pos: int = -1) -> list:
+    """Bindings of ``body``; atom ``pos`` reads ``delta``, every other
+    atom reads ``full`` (both keyed "facts" / "types")."""
+    bs = [()]
+    for j, a in enumerate(body):
+        kind = a[0]
+        if kind == "test":
+            bs = [b for b in bs if a[1](*[_val(t, b) for t in a[2]])]
+        elif kind == "eval":
+            _, fn, out, terms, same = a
+            nb = []
+            for b in bs:
+                r = fn(*[_val(t, b) for t in terms])
+                if r is None:
+                    continue
+                if out < len(b):
+                    if same(b[out], r):
+                        nb.append(b)
                 else:
-                    # greatest() IGNORES NULLs, so a failed start cast
-                    # must be caught explicitly or it silently becomes 1
-                    expr = (
-                        f"CASE WHEN {stc} IS NULL THEN NULL "
-                        f"ELSE substring({es[0]}, try_cast({base} AS INT)) END"
-                    )
-            elif op == "bn":
-                # boolean lexicals only; anything else yields NULL and
-                # the row drops (comparison-builtin skip semantics)
-                expr = (
-                    f"CASE WHEN {es[0]} IN ('true', '1') THEN 'false' "
-                    f"WHEN {es[0]} IN ('false', '0') THEN 'true' END"
-                )
-            else:
-                expr = f"lower({es[0]})"
-            if outv in bound:
-                b = b.filter(f"v{outv} = {expr}")
-            else:
-                bound.add(outv)
-                b = b.selectExpr(*bcols, f"{expr} AS v{outv}")
-                if op in ("ss", "bn"):
-                    b = b.filter(f"v{outv} IS NOT NULL")
-                bcols.append(f"v{outv}")
-            continue
-        if atom[0] == "sck":
-            _, op, o1, o2 = atom
-            e1, e2 = (f"{'_s' if k == 'c' else 'v'}{i}" for k, i in (o1, o2))
-            b = b.filter(f"{_SCK_SQL[op]}({e1}, {e2})")
-            continue
-        if atom[0] == "cls":
-            _, cls_slot, inst = atom
-            t_src = types_delta if atom_idx == types_delta_pos else types
-            t = t_src.selectExpr(
-                "doc_iri AS __d", "inst AS __i", "cls AS __c"
-            )
-            conds = ["doc_iri = __d", f"__c = _s{cls_slot}"]
-            newv = None
-            if inst[0] == "c":
-                conds.append(f"__i = _s{inst[1]}")
-            elif inst[1] in bound:
-                conds.append(f"__i = v{inst[1]}")
-            else:
-                newv = inst[1]
-            cond = F.expr(" AND ".join(conds))
-            if newv is None:
-                # pure filter: semi-join — no duplication, no dedup pass
-                b = b.join(t, cond, "left_semi")
-            else:
-                bound.add(newv)
-                b = b.join(t, cond).selectExpr(*bcols, f"__i AS v{newv}")
-                bcols.append(f"v{newv}")
-            continue
-        _, pred_slot, ssub, osub = atom
-        src = delta if (delta is not None and atom_idx == delta_pos) else facts
-        fa = src.selectExpr(
-            "doc_iri AS __d",
-            "pred AS __p",
-            "subj AS __s",
-            "obj AS __o",
-            "obj_is_literal AS __ol",
-        )
-        conds = ["doc_iri = __d", f"__p = _s{pred_slot}"]
-        newvars = []
-        if ssub[0] == "c":
-            conds.append(f"__s = _s{ssub[1]}")
-        elif ssub[1] in bound:
-            conds.append(f"__s = v{ssub[1]}")
+                    nb.append(b + (r,))
+            bs = nb
         else:
-            newvars.append((ssub[1], "__s"))
-        if osub[0] == "c2":
-            conds.append(f"IF(__ol, __o = _s{osub[1]}, __o = _s{osub[2]})")
-        elif osub[1] in bound:
-            conds.append(f"__o = v{osub[1]}")
-        elif any(vi == osub[1] for vi, _ in newvars):
-            # p(?x, ?x): same unbound var in both slots of one atom
-            conds.append("__o = __s")
-        else:
-            newvars.append((osub[1], "__o"))
-        cond = F.expr(" AND ".join(conds))
-        if not newvars:
-            # pure filter: semi-join — one matching fact is enough, and
-            # multiplicities never duplicate bindings (the per-atom
-            # distinct this replaces was a shuffle per atom per variant)
-            b = b.join(fa, cond, "left_semi")
-        else:
-            bound.update(vi for vi, _ in newvars)
-            b = b.join(fa, cond).selectExpr(
-                *bcols, *[f"{srcc} AS v{vi}" for vi, srcc in newvars]
-            )
-            bcols.extend(f"v{vi}" for vi, _ in newvars)
+            bs = _join(bs, (delta if j == pos else full)[kind], *a[1:])
+        if not bs:
+            break
+    return bs
 
-    outs = []
-    for atom in head:
-        if atom[0] == "cls":
-            _, cls_slot, inst = atom
-            subj = f"v{inst[1]}" if inst[0] == "v" else f"_s{inst[1]}"
-            outs.append(
-                b.selectExpr(
-                    f"{subj} AS subj",
-                    f"'{V.RDF_TYPE}' AS pred",
-                    f"_s{cls_slot} AS obj",
-                    "false AS obj_is_literal",
-                    "CAST(NULL AS STRING) AS obj_datatype",
-                    "doc_iri",
-                )
-            )
-        else:
-            _, pred_slot, ssub, osub = atom
-            subj = f"v{ssub[1]}" if ssub[0] == "v" else f"_s{ssub[1]}"
-            if osub[0] == "v":
-                obj, il, dt = f"v{osub[1]}", "false", "CAST(NULL AS STRING)"
-            elif osub[0] == "lit":
-                obj, il, dt = f"_s{osub[1]}", "true", f"_s{osub[2]}"
+
+def _superclasses(rows) -> dict:
+    """rdfs:subClassOf closure of the document: class -> all ancestors."""
+    up: dict = {}
+    for s, p, o, _, _ in rows:
+        if p == V.RDFS_SUBCLASSOF:
+            up.setdefault(s, set()).add(o)
+    closure = {}
+    for c, parents in up.items():
+        seen, todo = set(), list(parents)
+        while todo:
+            x = todo.pop()
+            if x not in seen:
+                seen.add(x)
+                todo.extend(up.get(x, ()))
+        closure[c] = seen
+    return closure
+
+
+def _memberships(rows, sup: dict) -> set:
+    """The class memberships that ``rows`` assert, closed upward, as
+    (inst, rdf:type, cls) facts."""
+    out = set()
+    for s, p, o, _, _ in rows:
+        if p == V.RDF_TYPE and not s.startswith("_:") and not o.startswith("_:"):
+            for c in (o, *sup.get(o, ())):
+                out.add((s, V.RDF_TYPE, c, False, None))
+    return out
+
+
+def chain_document(doc_iri: str, rows, max_iter: int = 15) -> set:
+    """The facts SWRL derives for one document: ``rows`` are the
+    document's (subj, pred, obj, obj_is_literal, obj_datatype) triples,
+    blank nodes included (an anonymous ``Inverse(p)`` node carries
+    owl:inverseOf); the result is the set of derived 5-tuples that are
+    not among its non-blank facts. Rules that fail validation are
+    dropped (the driver has already raised or warned)."""
+    rows = set(rows)
+    rules = [
+        _compile(key, slots)
+        for _, key, slots in _local_rule_rows({(doc_iri, p, s, o) for s, p, o, _, _ in rows})
+        if key != _INVALID
+    ]
+    known = {r for r in rows if not r[0].startswith("_:") and not r[2].startswith("_:")}
+    sup = _superclasses(known)
+    known_types = _memberships(known, sup)
+    full = {"facts": _Index(known), "types": _Index(known_types)}
+    delta = None
+    derived: set = set()
+    for _ in range(max_iter):
+        new = set()
+        for body, head in rules:
+            if delta is None:
+                positions = [-1]
             else:
-                obj, il, dt = f"_s{osub[1]}", "false", "CAST(NULL AS STRING)"
-            outs.append(
-                b.selectExpr(
-                    f"{subj} AS subj",
-                    f"_s{pred_slot} AS pred",
-                    f"{obj} AS obj",
-                    f"{il} AS obj_is_literal",
-                    f"{dt} AS obj_datatype",
-                    "doc_iri",
-                )
-            )
-    # no per-head distinct: the caller's single union-wide distinct
-    # dedups with map-side partial aggregation — one shuffle instead of
-    # one per head per variant (duplicates collapse in the combiner
-    # before they ever hit the wire)
-    return reduce(lambda a, c: a.unionByName(c), outs)
+                positions = [
+                    j
+                    for j, a in enumerate(body)
+                    if a[0] in delta and delta[a[0]].holds(a[1], a[3])
+                ]
+            for j in positions:
+                for b in _match(body, full, delta, j):
+                    for s, p, o, il, dt in head:
+                        new.add((_val(s, b), p, _val(o, b), il, dt))
+        new -= known
+        if not new:
+            break
+        known |= new
+        derived |= new
+        new_types = _memberships(new, sup) - known_types
+        known_types |= new_types
+        delta = {"facts": _Index(new), "types": _Index(new_types)}
+        full["facts"].add(new)
+        full["types"].add(new_types)
+    return derived
+
+
+# --------------------------------------------------------------------------
+# evaluation
+# --------------------------------------------------------------------------
+
+_FACT_COLS = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
+_FACT_SCHEMA = (
+    "subj string, pred string, obj string, obj_is_literal boolean, "
+    "obj_datatype string, doc_iri string"
+)
 
 
 def forward_chain(
@@ -811,24 +763,14 @@ def forward_chain(
 ) -> DataFrame:
     """Returns the INFERRED facts (subj, pred, obj, obj_is_literal,
     obj_datatype, doc_iri) — the delta the Pellet step would add for
-    the supported fragment. Fixpoint: rounds of template-grouped rule
-    application until no new facts; lineage cut per round. Driver work
-    per round is O(#distinct templates), independent of document count.
+    the supported fragment.
 
-    ``on_unsupported``: "raise" (default) fails fast listing the bad
-    rules; "skip" drops them with a warning."""
+    On the driver, one collect of the rule-bearing triples validates
+    every rule. ``on_unsupported``: "raise" (default) fails fast
+    listing the bad rules; "skip" drops them with a warning. The result
+    is lazy: one grouped-pandas task per document that carries a valid
+    rule runs :func:`chain_document` for at most ``max_iter`` rounds."""
     spark = triples.sparkSession
-
-    fact_cols = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
-    base = (
-        triples.filter(~F.col("subj").startswith("_:") & ~F.col("obj").startswith("_:"))
-        .select(*fact_cols)
-        .distinct()
-    )
-
-    # the rule-bearing triples are parsed on the driver: the bad-rule
-    # diagnostic, the template list and the relevance index below read
-    # the parsed list and need no further jobs
     local_rules = _local_rule_rows(_rule_rel(triples).collect())
     bad = [(d, slots) for d, k, slots in local_rules if k == _INVALID]
     if bad:
@@ -837,162 +779,22 @@ def forward_chain(
         if on_unsupported == "raise":
             raise UnsupportedSWRLError("unsupported SWRL fragment: " + msg)
         warnings.warn("skipping unsupported SWRL rules: " + msg)
-        local_rules = [r for r in local_rules if r[1] != _INVALID]
-    distinct_pairs = sorted({(k, tuple(slots)) for _, k, slots in local_rules})
-    templates = sorted({k for k, _ in distinct_pairs})
-    if not templates:
-        return arrow_local_df(spark, [], base.schema)
-    # checkpointed once: the fixpoint joins read it per template per
-    # round, and a plain local relation measured 2× slower there
-    rules = arrow_local_df(
-        spark, local_rules, "doc_iri string, template_key string, slots array<string>"
-    ).localCheckpoint()
+    docs = sorted({d for d, k, _ in local_rules if k != _INVALID})
+    if not docs:
+        return arrow_local_df(spark, [], _FACT_SCHEMA)
+    rule_docs = arrow_local_df(spark, [(d,) for d in docs], "doc_iri string")
 
-    # derive the closure and type tables from the CHECKPOINTED fact
-    # base, not the raw triple table (r7, guide §2.2): both operators
-    # filter out blank-node participants themselves, and base is
-    # exactly the distinct non-blank triples — identical inputs, but
-    # the scans read the tiny materialized snapshot instead of
-    # re-scanning and re-shuffling the full parse twice. (The rule
-    # collect above must NOT do this: anonymous Inverse(p) blank nodes
-    # legitimately carry owl:inverseOf rows.)
-    #
-    # ONE count fills the lazy fact checkpoint and sizes the fact/type/
-    # delta sides of every per-atom join: under the broadcast bound each
-    # atom join is a BroadcastHashJoin instead of a sort-merge join — on
-    # the bench corpus ~30 fewer AQE shuffle-stage jobs per fixpoint
-    # round (the cost of a tiny-data fixpoint is job count, not bytes)
-    facts = base.localCheckpoint(eager=False)
-    n_facts = facts.count()
-    # lazy: their first reader fills them, not a job of their own. The
-    # closure is re-checkpointed although transitive_closure returns a
-    # local relation or a checkpoint: each round's type closure reads
-    # it, and on the bench reason corpus with the closure forced
-    # distributed, forward_chain took ~10% more CPU without the
-    # re-checkpoint (no difference in the driver regime)
-    closure = _closure_pairs(facts).localCheckpoint(eager=False)
-    types = _closed_types(facts, closure).localCheckpoint(eager=False)
-    had_type_heads = any("T(" in k.split("=>")[1] for k in templates)
+    def per_doc(pdf):
+        import pandas as pd
 
-    def _minus(a: DataFrame, b: DataFrame) -> DataFrame:
-        # null-safe anti-join: obj_datatype is NULL for non-literals
-        # and a plain equi-join would never match NULLs
-        cond = None
-        aa, bb = a.alias("a"), b.alias("b")
-        for c in fact_cols:
-            eq = F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
-            cond = eq if cond is None else cond & eq
-        return aa.join(bb, cond, "left_anti").select(*fact_cols)
+        doc_iri = pdf["doc_iri"].iloc[0]
+        rows = zip(*(pdf[c].tolist() for c in _FACT_COLS[:5]))
+        out = chain_document(doc_iri, rows, max_iter)
+        return pd.DataFrame([r + (doc_iri,) for r in out], columns=_FACT_COLS)
 
-    # driver-side relevance index (r4, datalog relevance filtering):
-    # for each (template, prop-atom position), the set of predicate
-    # IRIs any rule of that template binds at that slot, read off the
-    # parsed distinct-rule set above without a job. In rounds ≥ 1 a
-    # delta-position plan whose atom cannot bind ANY delta predicate is
-    # provably empty (the plan joins that atom against the delta on
-    # pred = slot), so it is skipped instead of scheduled.
-    atom_preds: dict = {}
-    shapes = {k: _parse_template(k)[0] for k in templates}
-    for key, slots in distinct_pairs:
-        for j, a in enumerate(shapes[key]):
-            if a[0] == "prop":
-                atom_preds.setdefault((key, j), set()).add(slots[a[1]])
-
-    # semi-naive: round 1 seeds with a full evaluation; later rounds
-    # re-join only bindings touching at least one new fact (property
-    # atoms read the facts delta) or one new closed type (class atoms
-    # read the TYPES delta — the r2 verdict's full-re-evaluation
-    # fallback for class-atom templates is replaced by maintaining the
-    # type closure incrementally, so round cost tracks |delta| for all
-    # template shapes).
-    delta = facts
-    delta_preds: set = set()
-    types_delta = None
-    inferred_acc = None
-    for rnd in range(max_iter):
-        bfacts = regime.maybe_broadcast(facts, n_facts)
-        btypes = regime.maybe_broadcast(types, n_facts)
-        if rnd == 0:
-            outs = [
-                _eval_template(k, rules, bfacts, btypes, delta=None, types_delta=None)
-                for k in templates
-            ]
-        else:
-            bdelta = regime.maybe_broadcast(delta, n_facts)
-            btypes_delta = (
-                None if types_delta is None else regime.maybe_broadcast(types_delta, n_facts)
-            )
-            # delta_preds was computed by the SAME action that
-            # materialized the delta checkpoint (below) — no extra
-            # driver round-trip per round (the r4 regression)
-            outs = []
-            for k in templates:
-                live = [
-                    j
-                    for (tk, j), preds in atom_preds.items()
-                    if tk == k and preds & delta_preds
-                ]
-                out = _eval_template(
-                    k, rules, bfacts, btypes,
-                    delta=bdelta, types_delta=btypes_delta,
-                    live_positions=live,
-                )
-                if out is not None:
-                    outs.append(out)
-            if not outs:
-                # every template is provably dead this round
-                break
-        new = reduce(lambda a, c: a.unionByName(c), outs).distinct()
-        # lazy checkpoints + ONE action per round: the tagged-union
-        # aggregate below materializes the delta checkpoint AND (for
-        # type-head rule sets) the types-delta checkpoint, returning
-        # the delta's predicate set and the types-delta row count
-        # together (pred is never NULL, so empty set <=> empty delta;
-        # collect_set skips the NULL-pred tag rows) — replaces the
-        # separate per-round types_delta.count() action (r7)
-        delta = _minus(new, bfacts).localCheckpoint(eager=False)
-        if had_type_heads:
-            # inferred class memberships must feed later class atoms —
-            # close only the DELTA's types and anti-join against the
-            # known set: the increment is what class atoms re-join on
-            types_delta = (
-                _closed_types(delta, closure)
-                .join(types, ["doc_iri", "inst", "cls"], "left_anti")
-                .localCheckpoint(eager=False)
-            )
-            row = (
-                delta.select("pred", F.lit(1).alias("__d"))
-                .unionByName(
-                    types_delta.select(
-                        F.lit(None).cast("string").alias("pred"),
-                        F.lit(0).alias("__d"),
-                    )
-                )
-                .agg(
-                    F.collect_set(F.when(F.col("__d") == 1, F.col("pred"))).alias("p"),
-                    F.sum(F.lit(1) - F.col("__d")).alias("nt"),
-                )
-                .head()
-            )
-            delta_preds = set(row["p"])
-            n_types_delta = row["nt"] or 0
-        else:
-            delta_preds = set(delta.agg(F.collect_set("pred")).head()[0])
-            n_types_delta = 0
-        if not delta_preds:
-            break
-        # facts/types are unions of already-checkpointed frames: lineage
-        # stays depth-1 without their own checkpoint jobs (2 fewer
-        # materializations per round than r2)
-        facts = facts.unionByName(delta)
-        inferred_acc = delta if inferred_acc is None else inferred_acc.unionByName(delta)
-        if had_type_heads and n_types_delta:
-            types = types.unionByName(types_delta)
-        else:
-            # no new closed types: class-atom delta plans would all be
-            # empty — skip them next round
-            types_delta = None
-
-    if inferred_acc is None:
-        return arrow_local_df(spark, [], base.schema)
-    return inferred_acc.distinct()
+    return (
+        triples.select(*_FACT_COLS)
+        .join(F.broadcast(rule_docs), "doc_iri", "left_semi")
+        .groupBy("doc_iri")
+        .applyInPandas(per_doc, _FACT_SCHEMA)
+    )

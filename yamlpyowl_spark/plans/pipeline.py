@@ -233,7 +233,7 @@ class KGPipeline:
 
     def reasoned(self, triples: DataFrame) -> DataFrame:
         """Inferred-facts delta for the given triples: SWRL forward
-        chain (template-grouped, semi-naive) + DL model search (OneOf/
+        chain (semi-naive, per document) + DL model search (OneOf/
         Functional/AllDifferent CSP per document). Both are doc-scoped,
         so running them per materialize-run over only the NEW documents
         is complete — inference never crosses ``doc_iri``. Unsupported

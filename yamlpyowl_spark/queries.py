@@ -2319,8 +2319,8 @@ _TAIL = [
     # in-window by kg_dl_qualified + kg_dl_disjoint; pytest-gated in
     # test_dlreason.py (4 cases) + test_owlrl_rules.py (prp-key ×4)
     "kg_dl_key",
-    # r6b: swrlb arithmetic rides at the tail — the template join
-    # pipeline is gated in-window by kg_swrl_forward_chain; the DuckDB
+    # r6b: swrlb arithmetic rides at the tail — the SWRL engine is
+    # gated in-window by kg_swrl_forward_chain; the DuckDB
     # oracle here re-computes +/*/% independently (engine parity also
     # pytest-gated vs the sequential oracle)
     "kg_swrl_arith",

@@ -152,8 +152,9 @@ def _build_mm_features() -> None:
 
 # --------------------------------------------------------------------------
 # sequential SWRL forward chain — the independent oracle implementation
-# for operators/swrl.forward_chain (naive in-memory fixpoint; same
-# supported fragment, written against sets/dicts instead of joins)
+# for operators/swrl.forward_chain (naive nested-loop fixpoint that
+# re-evaluates every rule over all facts each round; same supported
+# fragment, no indexes and no semi-naive deltas)
 # --------------------------------------------------------------------------
 
 _SEQ_BUILTINS = {
