@@ -76,6 +76,9 @@ def test_isomorph_dl_output_equals_per_doc(forked):
         for r in reason_per_isomorph(forked, dl_model_search).collect()
     }
     assert wrapped == direct
+    # duplicated input rows are deduplicated before the engine runs
+    doubled = dl_model_search(forked.unionByName(forked)).collect()
+    assert {tuple(r) for r in doubled} == direct
     # the entailment really instantiates per fork
     assert any(
         s.endswith("alice") and p.endswith("q") and "forks/qual/2#" in s
@@ -90,6 +93,9 @@ def test_isomorph_owlrl_output_equals_per_doc(forked):
         for r in reason_per_isomorph(forked, owlrl_materialize).collect()
     }
     assert wrapped == direct
+    # duplicated input rows are deduplicated before the engine runs
+    doubled = owlrl_materialize(forked.unionByName(forked)).collect()
+    assert {tuple(r) for r in doubled} == direct
 
 
 def test_isomorph_solves_one_rep_per_class(forked):

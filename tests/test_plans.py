@@ -6,6 +6,8 @@ parquet scan (PushedFilters), only needed columns are read
 and the small side of the linking join broadcasts.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -106,17 +108,33 @@ def test_exact_dedup_partial_aggregation(spark):
 
 
 def test_dl_model_search_plan_shape(spark, corpus):
-    """One shuffle (groupBy doc_iri) into one Arrow-grouped stage; no
+    """DL and OWL-RL: the fact rows shuffle once, on ``doc_iri``, into
+    one stage that deduplicates each document on the JVM and then runs
+    the Arrow-grouped engine — no row-level distinct shuffle keyed on
+    the fact columns (DL's only other exchanges carry the facet-document
+    list it broadcasts), no duplicate row reaching Python, and no
     row-at-a-time Python anywhere."""
     from yamlpyowl_spark.operators.dlreason import dl_model_search
+    from yamlpyowl_spark.operators.owlrl import owlrl_materialize
 
     pipe = KGPipeline(spark, parse_partitions=8)
     triples = pipe.triples(pipe.parsed(corpus))
-    plan = _plan(dl_model_search(triples))
-    assert "FlatMapGroupsInPandas" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # exactly one grouped-Python stage: the per-document CSP solve
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    for op in (dl_model_search, owlrl_materialize):
+        plan = _plan(op(triples))
+        assert "FlatMapGroupsInPandas" in plan
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+        # exactly one grouped-Python stage: the per-document engine
+        assert plan.count("FlatMapGroupsInPandas") == 1
+        keyed_on_subj = [
+            ln
+            for ln in plan.splitlines()
+            if "Exchange hashpartitioning" in ln
+            and "subj#" in ln.split("hashpartitioning(", 1)[1].split(")", 1)[0]
+        ]
+        assert not keyed_on_subj, (op.__name__, keyed_on_subj)
+        # the distinct runs below the engine, inside the doc_iri stage
+        below = plan.split("FlatMapGroupsInPandas", 1)[1]
+        assert re.search(r"HashAggregate\(keys=\[[^\]]*subj#", below), op.__name__
 
 
 def test_centroid_assign_partial_aggregation(spark):

@@ -88,6 +88,9 @@ def test_builtin_first_rejected_up_front(spark):
     with pytest.warns(UserWarning, match="skipping unsupported"):
         out = forward_chain(triples, on_unsupported="skip")
     assert out.count() == 0
+    # any other mode is a caller error, not a silent skip
+    with pytest.raises(ValueError, match="raise|skip"):
+        forward_chain(triples, on_unsupported="skp")
 
 
 def test_unbound_head_var_rejected():

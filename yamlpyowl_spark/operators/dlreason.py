@@ -5,10 +5,13 @@ out to Java Pellet).
 
 Scale architecture: a 100-TB corpus is millions of small ontology
 documents, and each document's constraint problem is local — so the
-distributed dimension is ``doc_iri`` (one ``applyInPandas`` group per
-document, Arrow-batched), and the per-document payload is a bounded
-CSP solve in pure Python. No join, shuffle or driver loop grows with
-the corpus; a single monster document is bounded by ``max_steps``.
+distributed dimension is ``doc_iri``: :func:`dl_model_search` hands
+each document to :func:`.isomorph.per_document` (one Arrow-batched
+group per document, deduplicated on the JVM inside the ``doc_iri``
+stage), and the payload is :func:`dl_document`, a bounded CSP solve
+in plain Python that runs without a Spark session. No join, row-level
+shuffle or driver loop grows with the corpus; a single monster
+document is bounded by ``max_steps``.
 
 Per document:
 
@@ -83,12 +86,14 @@ with :mod:`swrl`'s forward chain in
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Dict, List, Optional, Set, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
 from .. import vocab as V
 from . import facets as _FX
+from .isomorph import per_document
 
 RDF_FIRST = V.RDF + "first"
 RDF_REST = V.RDF + "rest"
@@ -1085,7 +1090,56 @@ def _solve_doc(
     return inferred
 
 
-DL_OUT_COLS = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
+def dl_document(
+    doc_iri: str,
+    rows,
+    *,
+    max_models: int,
+    max_steps: int,
+    on_unsupported: str,
+) -> List[Tuple[str, str, str, bool, None]]:
+    """The facts DL model search derives for one document, Spark-free:
+    ``rows`` are its (subj, pred, obj, obj_is_literal, obj_datatype)
+    tuples; the result is the entailed entity facts not among them plus
+    the unsupported-construct diagnostics. The options are
+    :func:`dl_model_search`'s, which holds their defaults and checks
+    ``on_unsupported``."""
+    facts = dict.fromkeys((s, p, o, il) for s, p, o, il, _ in rows)
+    rows = [(s, p, o) for s, p, o, il in facts if not il]
+    lit_rows = [(s, p, o) for s, p, o, il in facts if il]
+    unsupported = set(p for _, p, _ in rows if p in UNSUPPORTED_DL_PREDS)
+    # facet vocabulary is CONDITIONALLY supported: a range node the
+    # shared evaluator decodes is reasoned over; anything it cannot
+    # parse (unknown facet, user datatype, malformed bound) keeps
+    # the loud diagnostic naming the construct
+    facet_nodes = {(s, p, o) for s, p, o in rows if p in _FACET_VOCAB}
+    if facet_nodes:
+        fm = _DocModel(rows + lit_rows)
+        for s, p, o in facet_nodes:
+            if p == _FX.ON_DATA_RANGE:
+                ok = (
+                    _FX.parse_data_range(fm, o) is not None
+                    if o.startswith("_:")
+                    else o in _FX.SUPPORTED_BASES
+                )
+            else:
+                ok = _FX.parse_data_range(fm, s) is not None
+            if not ok:
+                unsupported.add(p)
+    unsupported = sorted(unsupported)
+    if unsupported and on_unsupported == "raise":
+        raise UnsupportedDLError(
+            f"{doc_iri} uses DL constructs outside the supported "
+            f"fragment: {', '.join(unsupported)}"
+        )
+    asserted = set(rows)
+    inferred = _solve_doc(
+        rows, max_models=max_models, max_steps=max_steps, lit_rows=lit_rows
+    )
+    out = sorted(t for t in inferred if t not in asserted)
+    if unsupported and on_unsupported == "warn":
+        out.extend((doc_iri, YPO_DL_UNSUPPORTED, c) for c in unsupported)
+    return [(s, p, o, False, None) for s, p, o in out]
 
 
 def dl_model_search(
@@ -1094,98 +1148,43 @@ def dl_model_search(
     max_steps: int = 500_000,
     on_unsupported: str = "warn",
 ) -> DataFrame:
-    """Distributed DL model search: one CSP solve per document via
-    ``applyInPandas`` (grouped on ``doc_iri``). Returns the inferred
-    delta with the standard fact schema. Entity facts only — literal
-    triples never participate in this fragment.
+    """Distributed DL model search: one :func:`dl_document` CSP solve
+    per document through :func:`.isomorph.per_document`. Returns the
+    inferred delta with the standard fact schema. Entity facts only —
+    literal triples never participate in this fragment.
 
     The supported-fragment boundary is OBSERVABLE, never silent
     (r2 verdict #4): a document using a construct the fragment ignores
-    (the datatype-restriction vocabulary —
-    ``UNSUPPORTED_DL_PREDS``) yields, per distinct construct, one
-    diagnostic row ``(doc_iri, ypo:dlUnsupportedConstruct,
-    <construct>)`` in the output (``on_unsupported="warn"``, default);
+    (a datatype restriction the facet evaluator cannot decode, or a
+    predicate in ``UNSUPPORTED_DL_PREDS``, empty today) yields, per
+    distinct construct, one diagnostic row ``(doc_iri,
+    ypo:dlUnsupportedConstruct, <construct>)`` in the output
+    (``on_unsupported="warn"``, default);
     ``"raise"`` fails the job with :class:`UnsupportedDLError` naming
     the document; ``"ignore"`` restores the silent fall-through."""
     if on_unsupported not in ("warn", "raise", "ignore"):
         raise ValueError(f"on_unsupported must be warn|raise|ignore: {on_unsupported!r}")
     # r6c: literal rows travel too — facet-constrained data ranges need
     # the asserted data values and facet bound literals; the CSP core
-    # stays entity-only (split per doc below). Only docs that actually
-    # USE the facet vocabulary ship their literals (broadcast semi-join
-    # on a pushdown-filtered scan) — for the common corpus the literal
-    # volume added to the DL shuffle is exactly zero.
+    # stays entity-only (split per doc in dl_document). Only docs that
+    # actually USE the facet vocabulary ship their literals (broadcast
+    # semi-join on a pushdown-filtered scan) — for the common corpus
+    # the literal volume added to the DL shuffle is exactly zero.
     facet_docs = (
         triples.filter(F.col("pred").isin(*sorted(_FACET_VOCAB)))
         .select("doc_iri")
         .distinct()
         .withColumn("__facet_doc", F.lit(True))
     )
-    ent = (
-        triples.join(F.broadcast(facet_docs), "doc_iri", "left")
-        .filter(~F.col("obj_is_literal") | F.col("__facet_doc").isNotNull())
-        .select("doc_iri", "subj", "pred", "obj", "obj_is_literal")
-        .distinct()
+    ent = triples.join(F.broadcast(facet_docs), "doc_iri", "left").filter(
+        ~F.col("obj_is_literal") | F.col("__facet_doc").isNotNull()
     )
-
-    def per_doc(pdf):
-        import pandas as pd
-
-        if pdf.empty:
-            return pd.DataFrame(columns=DL_OUT_COLS)
-        doc_iri = pdf["doc_iri"].iloc[0]
-        all_rows = list(
-            zip(pdf["subj"], pdf["pred"], pdf["obj"], pdf["obj_is_literal"])
-        )
-        rows = [(s, p, o) for s, p, o, il in all_rows if not il]
-        lit_rows = [(s, p, o) for s, p, o, il in all_rows if il]
-        unsupported = set(p for _, p, _ in rows if p in UNSUPPORTED_DL_PREDS)
-        # facet vocabulary is CONDITIONALLY supported: a range node the
-        # shared evaluator decodes is reasoned over; anything it cannot
-        # parse (unknown facet, user datatype, malformed bound) keeps
-        # the loud diagnostic naming the construct
-        facet_nodes = {
-            (s, p, o) for s, p, o in rows if p in _FACET_VOCAB
-        }
-        if facet_nodes:
-            fm = _DocModel(rows + lit_rows)
-            for s, p, o in facet_nodes:
-                if p == _FX.ON_DATA_RANGE:
-                    ok = (
-                        _FX.parse_data_range(fm, o) is not None
-                        if o.startswith("_:")
-                        else o in _FX.SUPPORTED_BASES
-                    )
-                else:
-                    ok = _FX.parse_data_range(fm, s) is not None
-                if not ok:
-                    unsupported.add(p)
-        unsupported = sorted(unsupported)
-        if unsupported and on_unsupported == "raise":
-            raise UnsupportedDLError(
-                f"{doc_iri} uses DL constructs outside the supported "
-                f"fragment: {', '.join(unsupported)}"
-            )
-        asserted = set(rows)
-        inferred = _solve_doc(
-            rows, max_models=max_models, max_steps=max_steps, lit_rows=lit_rows
-        )
-        out = sorted(t for t in inferred if t not in asserted)
-        if unsupported and on_unsupported == "warn":
-            out.extend((doc_iri, YPO_DL_UNSUPPORTED, c) for c in unsupported)
-        return pd.DataFrame(
-            {
-                "subj": [t[0] for t in out],
-                "pred": [t[1] for t in out],
-                "obj": [t[2] for t in out],
-                "obj_is_literal": [False] * len(out),
-                "obj_datatype": [None] * len(out),
-                "doc_iri": [doc_iri] * len(out),
-            }
-        )
-
-    schema = (
-        "subj string, pred string, obj string, obj_is_literal boolean, "
-        "obj_datatype string, doc_iri string"
+    return per_document(
+        ent,
+        partial(
+            dl_document,
+            max_models=max_models,
+            max_steps=max_steps,
+            on_unsupported=on_unsupported,
+        ),
     )
-    return ent.groupBy("doc_iri").applyInPandas(per_doc, schema)

@@ -1,4 +1,11 @@
-"""Solve-once-per-isomorphism-class wrapper for doc-scoped reasoners.
+"""The document-scoped reasoner contract. :func:`per_document` is the
+one place a reasoner crosses into Python: one Arrow-batched pandas
+group per ``doc_iri`` hands the document's distinct fact tuples to a
+Spark-free engine (``dlreason.dl_document``, ``owlrl.owlrl_document``,
+``swrl.chain_document``), so no operator pays a row-level
+``distinct()`` shuffle before its ``doc_iri`` shuffle.
+:func:`reason_per_isomorph` runs such an operator once per
+content-isomorphism class.
 
 A web-scale ontology corpus is fork-heavy: the same document appears
 thousands of times with only its base IRI rewritten (the reference's
@@ -40,9 +47,11 @@ in both worlds).
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..schema import FACT_COLS, FACT_SCHEMA
 
 # placeholder + separators: control chars that cannot occur in IRIs or
 # in the YAML dialect's literal values
@@ -56,7 +65,38 @@ _RS = "\x1e"
 # exact (equal fingerprints then require literally equal labels)
 _BLANK_RE = "^_:([0-9a-f]{16})_"
 
-_COLS = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
+
+def per_document(
+    facts: DataFrame,
+    engine: Callable[[str, list], Iterable[tuple]],
+) -> DataFrame:
+    """Run the picklable ``engine(doc_iri, rows)`` once per document on
+    the executors: ``rows`` are the document's distinct (subj, pred,
+    obj, obj_is_literal, obj_datatype) tuples, and the engine returns
+    the 5-tuples to emit, under the standard fact schema.
+
+    The rows are deduplicated on the JVM after the one ``doc_iri``
+    shuffle: hash partitioning on ``doc_iri`` already clusters every
+    fact column, so the ``distinct`` is a spillable hash aggregate with
+    no exchange of its own, and a document whose file is vendored under
+    k paths (one ``doc_iri``, k copies of each row) reaches Python
+    once, not k times."""
+
+    def run(pdf):
+        import pandas as pd
+
+        doc_iri = pdf["doc_iri"].iloc[0]
+        rows = list(zip(*(pdf[c].tolist() for c in FACT_COLS[:5])))
+        out = [r + (doc_iri,) for r in engine(doc_iri, rows)]
+        return pd.DataFrame(out, columns=FACT_COLS)
+
+    return (
+        facts.select(*FACT_COLS)
+        .repartition("doc_iri")
+        .distinct()
+        .groupBy("doc_iri")
+        .applyInPandas(run, FACT_SCHEMA)
+    )
 
 
 def reason_per_isomorph(
@@ -67,7 +107,7 @@ def reason_per_isomorph(
     content-isomorphism class and instantiate the delta for every
     member document. Both frames carry the standard fact schema
     (subj, pred, obj, obj_is_literal, obj_datatype, doc_iri)."""
-    t = triples.select(*_COLS)
+    t = triples.select(*FACT_COLS)
 
     def norm(c: str):
         base_neutral = F.replace(F.col(c), F.col("doc_iri"), F.lit(_PH))

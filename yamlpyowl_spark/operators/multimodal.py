@@ -21,6 +21,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..schema import arrow_local_df
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -92,15 +94,7 @@ def synthesize_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFr
             zip(("width", "height", "channels", "sample_rate", "n_frames", "format"), meta)
         )
         rows.append((i, kind, bytes(data), meta_d))
-    # Arrow path (pandas → LocalTableScan, JVM-resident): the
-    # tuple-list createDataFrame planned as a pickled Python RDD that
-    # re-ran a Python worker pass per downstream action (r7)
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["media_id", "kind", "data", "meta"]),
-        schema=MEDIA_SCHEMA,
-    )
+    return arrow_local_df(spark, rows, MEDIA_SCHEMA)
 
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"

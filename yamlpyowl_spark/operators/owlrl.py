@@ -84,10 +84,12 @@ TestCore2 observes beyond SWRL chaining and the OneOf CSP
   over the POST-fixpoint fact base, same INCONSISTENT surfacing.
 
 Scale architecture: identical to :mod:`dlreason` — the rules are
-document-local, so the distributed dimension is ``doc_iri`` (one
-Arrow-batched ``applyInPandas`` group per document) and the per-doc
-payload is pure-Python graph walking over that document's triples.
-No join or driver loop grows with the corpus.
+document-local, so :func:`owlrl_materialize` hands each document to
+:func:`.isomorph.per_document` (one Arrow-batched group per document,
+deduplicated on the JVM inside the ``doc_iri`` stage) and the payload
+is :func:`owlrl_document`, plain-Python graph walking over that
+document's triples that runs without a Spark session. No join,
+row-level shuffle or driver loop grows with the corpus.
 
 OWL RL is the W3C profile DESIGNED for rule-based forward
 materialization at scale — this implements the fragment the
@@ -99,10 +101,11 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional, Set, Tuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .. import vocab as V
 from . import facets as _FX
+from .isomorph import per_document
 
 OWL = "http://www.w3.org/2002/07/owl#"
 
@@ -1020,50 +1023,27 @@ def infer_doc_fixpoint(rows) -> Set[Tuple[str, str, str, bool]]:
     return acc
 
 
-OUT_COLS = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
+def owlrl_document(doc_iri: str, rows) -> List[Tuple[str, str, str, bool, None]]:
+    """The facts the OWL-RL pass derives for one document, Spark-free:
+    ``rows`` are its (subj, pred, obj, obj_is_literal, obj_datatype)
+    tuples; the result is :func:`infer_doc_fixpoint`'s delta plus the
+    datatype-violation diagnostics. ``doc_iri`` is unused (the
+    :func:`.isomorph.per_document` engine signature)."""
+    out = set(infer_doc_fixpoint([(s, p, o, il) for s, p, o, il, _ in rows]))
+    # dt-not-type (r6d): an asserted literal whose lexical form is
+    # outside its DECLARED datatype's lexical/value space is an
+    # inconsistency Pellet raises on — same canon() evaluator as
+    # the facet checks (xsd:byte "999" is ill-typed, unknown
+    # datatypes are left alone, never silently validated)
+    for s, p, o, il, dt in rows:
+        if il and dt and _FX.lexically_valid(o, dt) is False:
+            out.add((s, V.YPO + "datatypeViolation", p, False))
+    return [t + (None,) for t in sorted(out)]
 
 
 def owlrl_materialize(triples: DataFrame) -> DataFrame:
-    """Distributed materialization: one rule pass per document via
-    ``applyInPandas`` (grouped on ``doc_iri``). Returns the inferred
-    delta with the standard fact schema (entity triples only)."""
-    src = triples.select(
-        "doc_iri", "subj", "pred", "obj", "obj_is_literal", "obj_datatype"
-    ).distinct()
-
-    def per_doc(pdf):
-        import pandas as pd
-
-        if pdf.empty:
-            return pd.DataFrame(columns=OUT_COLS)
-        doc_iri = pdf["doc_iri"].iloc[0]
-        rows = list(zip(pdf["subj"], pdf["pred"], pdf["obj"], pdf["obj_is_literal"]))
-        out = set(infer_doc_fixpoint(rows))
-        # dt-not-type (r6d): an asserted literal whose lexical form is
-        # outside its DECLARED datatype's lexical/value space is an
-        # inconsistency Pellet raises on — same canon() evaluator as
-        # the facet checks (xsd:byte "999" is ill-typed, unknown
-        # datatypes are left alone, never silently validated)
-        for s, p, o, il, dt in zip(
-            pdf["subj"], pdf["pred"], pdf["obj"], pdf["obj_is_literal"],
-            pdf["obj_datatype"],
-        ):
-            if il and dt and _FX.lexically_valid(o, dt) is False:
-                out.add((s, V.YPO + "datatypeViolation", p, False))
-        out = sorted(out)
-        return pd.DataFrame(
-            {
-                "subj": [t[0] for t in out],
-                "pred": [t[1] for t in out],
-                "obj": [t[2] for t in out],
-                "obj_is_literal": [t[3] for t in out],
-                "obj_datatype": [None] * len(out),
-                "doc_iri": [doc_iri] * len(out),
-            }
-        )
-
-    schema = (
-        "subj string, pred string, obj string, obj_is_literal boolean, "
-        "obj_datatype string, doc_iri string"
-    )
-    return src.groupBy("doc_iri").applyInPandas(per_doc, schema)
+    """Distributed materialization: one :func:`owlrl_document` pass per
+    document through :func:`.isomorph.per_document`. Returns the
+    inferred delta with the standard fact schema (entity triples
+    only)."""
+    return per_document(triples, owlrl_document)

@@ -9,8 +9,8 @@ ypo:ruleSrc, src)`` literals), so chaining never crosses ``doc_iri``.
   and validates every rule with :func:`encode_rule`, so a rule outside
   the fragment raises (or is skipped with a warning) when
   ``forward_chain`` is called, before any evaluation job. Only the
-  documents that carry a valid rule are shuffled, one pandas group per
-  document.
+  documents that carry a valid rule are shuffled, one
+  :func:`.isomorph.per_document` group per document.
 * Executor: :func:`chain_document`, plain Python, re-derives the
   document's rules from its rows and substitutes each rule's slot
   values into its decoded template (:func:`_parse_template`). Round 0
@@ -85,7 +85,8 @@ from pyspark.sql import DataFrame, functions as F
 from .. import vocab as V
 from ..parser.document import _parse_swrl
 from ..parser.model import ParseError
-from ..schema import arrow_local_df
+from ..schema import FACT_SCHEMA, arrow_local_df
+from .isomorph import per_document
 
 _I64 = 2**63
 _I32 = 2**31
@@ -751,12 +752,6 @@ def chain_document(doc_iri: str, rows, max_iter: int = 15) -> set:
 # evaluation
 # --------------------------------------------------------------------------
 
-_FACT_COLS = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
-_FACT_SCHEMA = (
-    "subj string, pred string, obj string, obj_is_literal boolean, "
-    "obj_datatype string, doc_iri string"
-)
-
 
 def forward_chain(
     triples: DataFrame, max_iter: int = 15, on_unsupported: str = "raise"
@@ -767,9 +762,12 @@ def forward_chain(
 
     On the driver, one collect of the rule-bearing triples validates
     every rule. ``on_unsupported``: "raise" (default) fails fast
-    listing the bad rules; "skip" drops them with a warning. The result
-    is lazy: one grouped-pandas task per document that carries a valid
-    rule runs :func:`chain_document` for at most ``max_iter`` rounds."""
+    listing the bad rules; "skip" drops them with a warning; any other
+    value is a ``ValueError``. The result is lazy: each document that
+    carries a valid rule runs :func:`chain_document` for at most
+    ``max_iter`` rounds through :func:`.isomorph.per_document`."""
+    if on_unsupported not in ("raise", "skip"):
+        raise ValueError(f"on_unsupported must be raise|skip: {on_unsupported!r}")
     spark = triples.sparkSession
     local_rules = _local_rule_rows(_rule_rel(triples).collect())
     bad = [(d, slots) for d, k, slots in local_rules if k == _INVALID]
@@ -781,20 +779,9 @@ def forward_chain(
         warnings.warn("skipping unsupported SWRL rules: " + msg)
     docs = sorted({d for d, k, _ in local_rules if k != _INVALID})
     if not docs:
-        return arrow_local_df(spark, [], _FACT_SCHEMA)
+        return arrow_local_df(spark, [], FACT_SCHEMA)
     rule_docs = arrow_local_df(spark, [(d,) for d in docs], "doc_iri string")
-
-    def per_doc(pdf):
-        import pandas as pd
-
-        doc_iri = pdf["doc_iri"].iloc[0]
-        rows = zip(*(pdf[c].tolist() for c in _FACT_COLS[:5]))
-        out = chain_document(doc_iri, rows, max_iter)
-        return pd.DataFrame([r + (doc_iri,) for r in out], columns=_FACT_COLS)
-
-    return (
-        triples.select(*_FACT_COLS)
-        .join(F.broadcast(rule_docs), "doc_iri", "left_semi")
-        .groupBy("doc_iri")
-        .applyInPandas(per_doc, _FACT_SCHEMA)
+    return per_document(
+        triples.join(F.broadcast(rule_docs), "doc_iri", "left_semi"),
+        partial(chain_document, max_iter=max_iter),
     )

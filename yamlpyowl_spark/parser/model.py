@@ -136,9 +136,6 @@ class Restriction:
         return f"<{getattr(self.prop, 'name', self.prop)}.{self.rtype}({self.filler})>"
 
 
-ClassExpression = Union[Ent, Construct, Restriction]
-
-
 def ensure_list(obj):
     """reference core.py:1346-1362"""
     if isinstance(obj, (list, tuple)):

@@ -29,21 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import vocab as V
 from ..functions.udfs import make_parse_udf
-from ..schema import PARSED_SCHEMA
-
-TRIPLE_COLS = [
-    "subj",
-    "pred",
-    "obj",
-    "obj_is_literal",
-    "obj_datatype",
-    "doc_iri",
-    "src_repo",
-    "src_path",
-    "src_commit",
-    "src_sha256",
-]
-ERROR_COLS = ["src_repo", "src_path", "src_commit", "src_sha256", "stage", "message"]
+from ..schema import ERROR_COLS, FACT_COLS, PARSED_SCHEMA, TRIPLE_COLS
 
 _KIND_BY_TYPE = {
     V.OWL_NAMED_INDIVIDUAL: ("individual", 0),
@@ -234,9 +220,11 @@ class KGPipeline:
     def reasoned(self, triples: DataFrame) -> DataFrame:
         """Inferred-facts delta for the given triples: SWRL forward
         chain (semi-naive, per document) + DL model search (OneOf/
-        Functional/AllDifferent CSP per document). Both are doc-scoped,
-        so running them per materialize-run over only the NEW documents
-        is complete — inference never crosses ``doc_iri``. Unsupported
+        Functional/AllDifferent CSP per document) + the OWL-RL pass,
+        each a Spark-free engine behind ``isomorph.per_document``. All
+        are doc-scoped, so running them per materialize-run over only
+        the NEW documents is complete — inference never crosses
+        ``doc_iri``. Unsupported
         SWRL rules are skipped with a warning (a single bad rule must
         not abort a batch)."""
         from ..operators.dlreason import dl_model_search
@@ -244,9 +232,7 @@ class KGPipeline:
         from ..operators.owlrl import owlrl_materialize
         from ..operators.swrl import forward_chain
 
-        base = triples.select(
-            "subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"
-        )
+        base = triples.select(*FACT_COLS)
         # the per-document Python engines (CSP solve, rule pass) run
         # ONCE per content-isomorphism class — a fork-heavy corpus
         # (thousands of IRI-rewritten copies per document, the

@@ -187,8 +187,6 @@ def _e() -> str:
     return f"read_parquet('{errors_path()}')"
 
 
-_NONBLANK = "substr({col}, 1, 2) <> '_:'"
-
 _SH_CTE = """
 sh AS (
   SELECT DISTINCT doc_id, s AS shingle

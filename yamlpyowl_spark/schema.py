@@ -1,4 +1,4 @@
-"""Spark StructTypes for every pipeline table (see FIXTURES.md §2)."""
+"""Spark StructTypes and column lists of the pipeline tables (see FIXTURES.md §2)."""
 
 from pyspark.sql import types as T
 
@@ -22,6 +22,10 @@ TRIPLE_FIELDS = [
     T.StructField("doc_iri", T.StringType(), True),
 ]
 
+# the fact table every reasoner reads and emits (triples minus lineage)
+FACT_SCHEMA = T.StructType(TRIPLE_FIELDS)
+FACT_COLS = FACT_SCHEMA.fieldNames()
+
 LINEAGE_FIELDS = [
     T.StructField("src_repo", T.StringType(), False),
     T.StructField("src_path", T.StringType(), False),
@@ -29,15 +33,9 @@ LINEAGE_FIELDS = [
     T.StructField("src_sha256", T.StringType(), False),
 ]
 
-TRIPLES_SCHEMA = T.StructType(TRIPLE_FIELDS + LINEAGE_FIELDS)
-
-ERRORS_SCHEMA = T.StructType(
-    LINEAGE_FIELDS
-    + [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("message", T.StringType(), False),
-    ]
-)
+# the triples table (facts plus lineage) and the error table
+TRIPLE_COLS = FACT_COLS + [f.name for f in LINEAGE_FIELDS]
+ERROR_COLS = [f.name for f in LINEAGE_FIELDS] + ["stage", "message"]
 
 # combined parse-UDF output: one Arrow stream, split relationally afterwards
 PARSED_SCHEMA = T.StructType(
@@ -47,25 +45,6 @@ PARSED_SCHEMA = T.StructType(
     + [
         T.StructField("stage", T.StringType(), True),
         T.StructField("message", T.StringType(), True),
-    ]
-)
-
-NODES_SCHEMA = T.StructType(
-    [
-        T.StructField("iri", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("doc_iri", T.StringType(), True),
-    ]
-    + LINEAGE_FIELDS
-)
-
-PROGRESS_SCHEMA = T.StructType(
-    LINEAGE_FIELDS
-    + [
-        T.StructField("n_triples", T.LongType(), False),
-        T.StructField("n_errors", T.LongType(), False),
-        T.StructField("run_id", T.StringType(), False),
     ]
 )
 
@@ -80,8 +59,9 @@ def arrow_local_df(spark, rows, schema):
 
     ``schema`` is a DDL string, a StructType, or a plain column-name
     list (types then inferred from the values, as the tuple path
-    would). Values must be Arrow-convertible (strings/bools/numbers/
-    None — the callers' contract)."""
+    would). Values must be ones Arrow converts to the schema's types:
+    strings, bools, numbers and None, and also bytes and dicts for
+    binary and map columns (``multimodal.MEDIA_SCHEMA``)."""
     import pandas as pd
 
     if isinstance(schema, str):

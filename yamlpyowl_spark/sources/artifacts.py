@@ -28,6 +28,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ..functions.udfs import parse_rows_to_records
+from ..schema import ERROR_COLS, FACT_COLS, TRIPLE_COLS
 from .corpus import corpus_rows, write_corpus_parquet
 from .fixtures import build_default_import_map
 
@@ -38,20 +39,6 @@ ARTIFACT_DIR = os.environ.get(
 )
 
 CORPUS_PARAMS = dict(n_forks=8, noise=True, giant_repo_fraction=0.5, seed=42)
-
-_TRIPLE_COLS = [
-    "subj",
-    "pred",
-    "obj",
-    "obj_is_literal",
-    "obj_datatype",
-    "doc_iri",
-    "src_repo",
-    "src_path",
-    "src_commit",
-    "src_sha256",
-]
-_ERROR_COLS = ["src_repo", "src_path", "src_commit", "src_sha256", "stage", "message"]
 
 
 def corpus_path() -> str:
@@ -571,19 +558,19 @@ def ensure_artifacts() -> dict:
     triples = [r[1:11] for r in records if r[0] == "t"]
     errors = [tuple(r[7:11]) + tuple(r[11:13]) for r in records if r[0] == "e"]
 
-    t_cols = list(zip(*triples)) if triples else [[] for _ in _TRIPLE_COLS]
+    t_cols = list(zip(*triples)) if triples else [[] for _ in TRIPLE_COLS]
     pq.write_table(
         pa.table(
             {
                 name: pa.array(list(col), type=pa.bool_() if name == "obj_is_literal" else pa.string())
-                for name, col in zip(_TRIPLE_COLS, t_cols)
+                for name, col in zip(TRIPLE_COLS, t_cols)
             }
         ),
         triples_path(),
     )
-    e_cols = list(zip(*errors)) if errors else [[] for _ in _ERROR_COLS]
+    e_cols = list(zip(*errors)) if errors else [[] for _ in ERROR_COLS]
     pq.write_table(
-        pa.table({name: pa.array(list(col), type=pa.string()) for name, col in zip(_ERROR_COLS, e_cols)}),
+        pa.table({name: pa.array(list(col), type=pa.string()) for name, col in zip(ERROR_COLS, e_cols)}),
         errors_path(),
     )
 
@@ -602,7 +589,7 @@ def ensure_artifacts() -> dict:
                 name: pa.array(
                     list(col), type=pa.bool_() if name == "obj_is_literal" else pa.string()
                 )
-                for name, col in zip(_TRIPLE_COLS[:6], i_cols)
+                for name, col in zip(FACT_COLS, i_cols)
             }
         ),
         inferred_path(),
