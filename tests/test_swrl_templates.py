@@ -1,7 +1,8 @@
-"""SWRL rule templates and the per-document engine: rules of one
-shape share a template key, evaluation never crosses ``doc_iri``, the
-engine agrees with the sequential oracle, and unsupported fragments
-are rejected up front (ADVICE r01)."""
+"""SWRL rule compilation and the per-document engine: one
+``compile_rule`` walk turns a rule (or a property axiom written as a
+rule) into the engine's atoms, evaluation never crosses ``doc_iri``,
+the engine agrees with the sequential oracle on every builtin, and
+unsupported fragments are rejected up front (ADVICE r01)."""
 
 import pytest
 from pyspark.sql import functions as F, types as T
@@ -9,12 +10,11 @@ from pyspark.sql import functions as F, types as T
 from yamlpyowl_spark import vocab as V
 from yamlpyowl_spark.operators import swrl
 from yamlpyowl_spark.operators.swrl import (
-    INVERSE_KEY,
-    TRANSITIVE_KEY,
     UnsupportedSWRLError,
-    encode_rule,
+    compile_rule,
     forward_chain,
 )
+from yamlpyowl_spark.parser.document import _parse_swrl
 
 TRIPLE_COLS = T.StructType(
     [
@@ -41,18 +41,20 @@ def _doc(iri, n=3):
 
 
 def test_synth_keys_match_encoder():
-    # the fixed keys used for TransitiveProperty/inverseOf rows must
-    # stay in lockstep with encode_rule's output for the same shapes
-    k, s = encode_rule("D#", [("p", ["?x", "?y"]), ("p", ["?y", "?z"])], [("p", ["?x", "?z"])])
-    assert k == TRANSITIVE_KEY and s == ["D#p", "D#p", "D#p"]
-    k, s = encode_rule("D#", [("p", ["?x", "?y"])], [("q", ["?y", "?x"])])
-    assert k == INVERSE_KEY and s == ["D#p", "D#q"]
+    # the rules a TransitiveProperty / inverseOf row stands for are the
+    # rules compile_rule makes of the same shapes written as text
+    def text(src):
+        return compile_rule("D#", *_parse_swrl(src))
 
-
-def test_same_shape_rules_share_template():
-    k1, _ = encode_rule("A#", [("hasPart", ["?a", "?b"])], [("contains", ["?a", "?b"])])
-    k2, _ = encode_rule("B#", [("owns", ["?x", "?y"])], [("holds", ["?x", "?y"])])
-    assert k1 == k2
+    rules, bad = swrl._doc_rules([("D#", V.RDF_TYPE, "D#p", V.OWL_TRANSITIVE)])
+    assert not bad
+    assert rules == [("D#", text("p(?x, ?y), p(?y, ?z) -> p(?x, ?z)"))]
+    rules, bad = swrl._doc_rules([("D#", V.OWL_INVERSE_OF, "D#q", "D#p")])
+    assert not bad
+    assert rules == [
+        ("D#", text("p(?x, ?y) -> q(?y, ?x)")),
+        ("D#", text("q(?x, ?y) -> p(?y, ?x)")),
+    ]
 
 
 def test_hundred_docs_one_template(spark):
@@ -61,10 +63,9 @@ def test_hundred_docs_one_template(spark):
         rows.extend(_doc(f"http://ex.org/d{i}#"))
     triples = spark.createDataFrame(rows, TRIPLE_COLS)
 
-    rules = swrl._local_rule_rows(swrl._rule_rel(triples).collect())
-    keys = sorted({k for _, k, _ in rules})
-    # 120 documents, 120 rule instances -> ONE template key, decoded once
-    assert keys == ["P(v0,v1)=>P(v1,v0)"] or len(keys) == 1
+    rules, bad = swrl._doc_rules(swrl._rule_rel(triples).collect())
+    # 120 documents, 120 rule instances, each compiled for its document
+    assert not bad
     assert len(rules) == 120
 
     inferred = forward_chain(triples)
@@ -95,7 +96,7 @@ def test_builtin_first_rejected_up_front(spark):
 
 def test_unbound_head_var_rejected():
     with pytest.raises(UnsupportedSWRLError, match="not bound in body"):
-        encode_rule("D#", [("p", ["?x", "?y"])], [("q", ["?x", "?z"])])
+        compile_rule("D#", [("p", ["?x", "?y"])], [("q", ["?x", "?z"])])
 
 
 def test_class_atom_head(spark):
@@ -191,12 +192,10 @@ def test_bad_rule_collect_is_bounded(spark):
 
 
 # ---------------------------------------------------------------------------
-# property-based: encode_rule <-> _parse_template slot-walk symmetry
+# property-based: variable numbering and engine-vs-oracle parity
 # ---------------------------------------------------------------------------
 
 from hypothesis import given, settings, strategies as st
-
-from yamlpyowl_spark.operators.swrl import _parse_template
 
 _names = st.sampled_from(["p", "q", "hasPart", "owns", "rel_x"])
 _vars = st.sampled_from(["?x", "?y", "?z", "?v"])
@@ -230,55 +229,84 @@ def _rules(draw):
     return body, head
 
 
-@settings(max_examples=200, deadline=None)
-@given(_rules())
-def test_encode_parse_template_slot_walk_symmetry(rule):
-    """The driver-side template parser must consume slots in exactly
-    the order the encoder emits them — for ANY rule in the fragment."""
-    body, head = rule
-    key, slots = encode_rule("http://d#", body, head)
-    tb, th, n_slots = _parse_template(key)
-    assert n_slots == len(slots)
-    assert len(tb) == len(body) and len(th) == len(head)
-    # every slot index referenced is in range and each slot is
-    # referenced exactly once
-    seen = []
+_QUOTED = ['"a,b"', '", Esq."', '"-v2"', '"al"', '""']
 
-    def track(atom, is_head):
-        kind = atom[0]
-        if kind == "bi":
-            if atom[3][0] == "c":
-                seen.append(atom[3][1])
-        elif kind == "cls":
-            seen.append(atom[1])
-            if atom[2][0] == "c":
-                seen.append(atom[2][1])
+
+@st.composite
+def _builtin_rules(draw):
+    """Random in-fragment rules over the data properties of
+    ``_literal_rows()``: one or two property atoms bind values of one
+    subject, then builtins of every compile branch read the bound
+    variables (a result variable is fresh, or bound for the check
+    form); the head uses bound variables only."""
+    body, bound = [], ["?x"]
+    for _ in range(draw(st.integers(1, 2))):
+        o = draw(st.sampled_from(["?v", "?w"]))
+        body.append((draw(st.sampled_from(["hasV", "hasW", "hasN"])), ["?x", o]))
+        if o not in bound:
+            bound.append(o)
+    var = st.sampled_from(bound)
+    result = st.one_of(st.sampled_from(["?r", "?t"]), var)
+    num = st.one_of(var, st.sampled_from(["0", "2", "-3", "5"]))
+    text = st.one_of(var, st.sampled_from(_QUOTED))
+    for _ in range(draw(st.integers(1, 2))):
+        kind = draw(st.sampled_from(["arith", "concat", "unary", "substring", "check", "compare"]))
+        if kind == "arith":
+            name = draw(st.sampled_from(["add", "subtract", "multiply", "mod"]))
+            args = [draw(result), draw(num), draw(num)]
+        elif kind == "concat":
+            args = [draw(result)] + draw(st.lists(text, min_size=2, max_size=3))
+            name = "stringConcat"
+        elif kind == "unary":
+            name = draw(st.sampled_from(["stringLength", "upperCase", "lowerCase", "booleanNot"]))
+            args = [draw(result), draw(var)]
+        elif kind == "substring":
+            name = "substring"
+            args = [draw(result), draw(text)] + draw(st.lists(num, min_size=1, max_size=2))
+        elif kind == "check":
+            name = draw(st.sampled_from(["contains", "startsWith", "endsWith"]))
+            args = [draw(text), draw(text)]
         else:
-            seen.append(atom[1])
-            for sub in (atom[2], atom[3]):
-                if sub[0] == "c":
-                    seen.append(sub[1])
-                elif sub[0] == "c2":
-                    seen.extend([sub[1], sub[2]])
-                elif sub[0] == "lit":
-                    seen.extend([sub[1], sub[2]])
-
-    for a in tb:
-        track(a, False)
-    for a in th:
-        track(a, True)
-    assert sorted(seen) == list(range(len(slots)))
+            name = draw(st.sampled_from(sorted(swrl._COMPARE)))
+            args = [draw(var), draw(st.one_of(var, st.sampled_from(["10", "0.5", "-2"])))]
+        body.append((name, args))
+        if args[0].startswith("?") and kind not in ("check", "compare") and args[0] not in bound:
+            bound.append(args[0])
+    var = st.sampled_from(bound)
+    if draw(st.booleans()):
+        head = [(draw(st.sampled_from(["hasV", "hasN", "out"])), [draw(var), draw(var)])]
+    else:
+        head = [("Out", [draw(var)])]
+    return body, head
 
 
-@settings(max_examples=100, deadline=None)
-@given(_rules(), _rules())
-def test_same_key_means_same_shape(r1, r2):
-    """Two rules sharing a template key MUST have identical structure
-    (the basis for decoding every rule of a key with one cached parse)."""
-    k1, s1 = encode_rule("http://a#", *r1)
-    k2, s2 = encode_rule("http://b#", *r2)
-    if k1 == k2:
-        assert len(s1) == len(s2)
+@settings(max_examples=200, deadline=None)
+@given(st.one_of(_rules(), _builtin_rules()))
+def test_compile_rule_numbers_variables_in_binding_order(rule):
+    """``_join`` extends a binding tuple by appending: every variable's
+    index is the number of variables bound before it, and the head
+    reads bound indices only — for ANY rule in the fragment."""
+    body, head = compile_rule("http://d#", *rule)
+    n = 0
+
+    def bind(t):
+        nonlocal n
+        if t[0] == "v" and t[1] >= n:
+            assert t[1] == n
+            n += 1
+
+    for a in body:
+        if a[0] in ("facts", "types"):
+            bind(a[2])
+            bind(a[3])
+        else:
+            terms = a[2] if a[0] == "test" else a[3]
+            assert all(t[1] < n for t in terms if t[0] == "v")
+            if a[0] == "eval":
+                bind(("v", a[2]))
+    assert n == len({x for _, args in rule[0] for x in args if x.startswith("?")})
+    for s, _, o, _, _ in head:
+        assert all(t[1] < n for t in (s, o) if t[0] == "v")
 
 
 _ents = st.sampled_from(["bob", "dresden", "42", "ann"])
@@ -330,6 +358,44 @@ def _class_head(rule):
 def test_chain_document_equals_sequential_oracle(rules, facts, max_iter):
     """The per-document engine, called without Spark, derives exactly
     the oracle's facts, including when ``max_iter`` cuts the rounds."""
+    from yamlpyowl_spark.sources.artifacts import sequential_forward_chain
+
+    D = "http://d#"
+    rows = [
+        (f"{D}rule{i}", V.YPO_RULE_SRC, _rule_src(*r), True, None)
+        for i, r in enumerate(rules)
+    ] + facts
+    want = {r[:5] for r in sequential_forward_chain([r + (D,) for r in rows], max_iter)}
+    assert swrl.chain_document(D, rows, max_iter) == want
+
+
+@st.composite
+def _literal_rows(draw):
+    """Data-property facts whose values exercise the builtins: integers,
+    decimals, booleans, words and strings with commas."""
+    D = "http://d#"
+    values = st.sampled_from(
+        ["0", "1", "2", "-7", "30", "0.5", "true", "false", "alice", "Bob", "al", "a,b", ""]
+    )
+    subj = st.sampled_from(["a", "b", "c"]).map(lambda x: D + x)
+    prop = st.sampled_from(["hasV", "hasW", "hasN"]).map(lambda x: D + x)
+    return [
+        (s, p, v, True, draw(st.sampled_from([None, V.XSD_STRING])))
+        for s, p, v in draw(st.lists(st.tuples(subj, prop, values), min_size=3, max_size=12))
+    ]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(_builtin_rules(), min_size=1, max_size=3),
+    _literal_rows(),
+    st.integers(1, 4),
+)
+def test_chain_document_builtins_equal_sequential_oracle(rules, facts, max_iter):
+    """Every builtin compile branch (arithmetic, n-ary stringConcat, the
+    unary string builtins, 3- and 4-ary substring, the string checks,
+    all six comparisons with var-var operands, quoted constants with
+    commas) derives exactly the oracle's facts."""
     from yamlpyowl_spark.sources.artifacts import sequential_forward_chain
 
     D = "http://d#"
@@ -405,10 +471,10 @@ def test_extended_builtin_codes(spark):
 
 
 def test_builtin_rhs_var_must_be_bound():
-    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, encode_rule
+    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, compile_rule
 
     with pytest.raises(UnsupportedSWRLError, match="binding"):
-        encode_rule(
+        compile_rule(
             "http://d#",
             [("p", ["?x", "?v"]), ("greaterThan", ["?v", "?unbound"])],
             [("q", ["?x", "?x"])],
@@ -468,20 +534,20 @@ def test_arith_builtins_bind_and_check(spark):
 
 
 def test_arith_builtin_rejects_bad_shapes():
-    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, encode_rule
+    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, compile_rule
 
     with pytest.raises(UnsupportedSWRLError, match="3 args"):
-        encode_rule("http://d#", [("p", ["?x", "?v"]), ("add", ["?z", "?v"])],
-                    [("q", ["?x", "?z"])])
+        compile_rule("http://d#", [("p", ["?x", "?v"]), ("add", ["?z", "?v"])],
+                     [("q", ["?x", "?z"])])
     with pytest.raises(UnsupportedSWRLError, match="must be a variable"):
-        encode_rule("http://d#", [("p", ["?x", "?v"]), ("add", ["9", "?v", "1"])],
-                    [("q", ["?x", "?v"])])
+        compile_rule("http://d#", [("p", ["?x", "?v"]), ("add", ["9", "?v", "1"])],
+                     [("q", ["?x", "?v"])])
     with pytest.raises(UnsupportedSWRLError, match="binding"):
-        encode_rule("http://d#", [("p", ["?x", "?v"]), ("add", ["?z", "?u", "1"])],
-                    [("q", ["?x", "?z"])])
+        compile_rule("http://d#", [("p", ["?x", "?v"]), ("add", ["?z", "?u", "1"])],
+                     [("q", ["?x", "?z"])])
     with pytest.raises(UnsupportedSWRLError, match="integer fragment"):
-        encode_rule("http://d#", [("p", ["?x", "?v"]), ("add", ["?z", "?v", "0.5"])],
-                    [("q", ["?x", "?z"])])
+        compile_rule("http://d#", [("p", ["?x", "?v"]), ("add", ["?z", "?v", "0.5"])],
+                     [("q", ["?x", "?z"])])
 
 
 def test_string_builtins_bind_check_and_filter(spark):
@@ -536,23 +602,23 @@ def test_string_builtins_bind_check_and_filter(spark):
 
 
 def test_string_builtin_rejects_bad_shapes():
-    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, encode_rule
+    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, compile_rule
 
     with pytest.raises(UnsupportedSWRLError, match="args"):
-        encode_rule("http://d#", [("p", ["?x", "?v"]), ("stringLength", ["?z"])],
-                    [("q", ["?x", "?z"])])
+        compile_rule("http://d#", [("p", ["?x", "?v"]), ("stringLength", ["?z"])],
+                     [("q", ["?x", "?z"])])
     with pytest.raises(UnsupportedSWRLError, match="must be a variable"):
-        encode_rule("http://d#",
-                    [("p", ["?x", "?v"]), ("upperCase", ['"A"', "?v"])],
-                    [("q", ["?x", "?v"])])
+        compile_rule("http://d#",
+                     [("p", ["?x", "?v"]), ("upperCase", ['"A"', "?v"])],
+                     [("q", ["?x", "?v"])])
     with pytest.raises(UnsupportedSWRLError, match="binding"):
-        encode_rule("http://d#",
-                    [("p", ["?x", "?v"]), ("stringConcat", ["?z", "?u", '"s"'])],
-                    [("q", ["?x", "?z"])])
+        compile_rule("http://d#",
+                     [("p", ["?x", "?v"]), ("stringConcat", ["?z", "?u", '"s"'])],
+                     [("q", ["?x", "?z"])])
     with pytest.raises(UnsupportedSWRLError, match="binding"):
-        encode_rule("http://d#",
-                    [("p", ["?x", "?v"]), ("endsWith", ["?u", '"s"'])],
-                    [("q", ["?x"])])
+        compile_rule("http://d#",
+                     [("p", ["?x", "?v"]), ("endsWith", ["?u", '"s"'])],
+                     [("q", ["?x"])])
 
 
 def test_substring_builtin_integer_fragment(spark):
@@ -612,21 +678,21 @@ def test_substring_builtin_integer_fragment(spark):
 
 
 def test_substring_rejects_float_and_bad_arity():
-    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, encode_rule
+    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, compile_rule
 
     with pytest.raises(UnsupportedSWRLError, match="integer fragment"):
-        encode_rule("http://d#",
-                    [("p", ["?x", "?v"]), ("substring", ["?z", "?v", "1.5"])],
-                    [("q", ["?x", "?z"])])
+        compile_rule("http://d#",
+                     [("p", ["?x", "?v"]), ("substring", ["?z", "?v", "1.5"])],
+                     [("q", ["?x", "?z"])])
     with pytest.raises(UnsupportedSWRLError, match="3 or 4 args"):
-        encode_rule("http://d#",
-                    [("p", ["?x", "?v"]), ("substring", ["?z", "?v"])],
-                    [("q", ["?x", "?z"])])
+        compile_rule("http://d#",
+                     [("p", ["?x", "?v"]), ("substring", ["?z", "?v"])],
+                     [("q", ["?x", "?z"])])
     with pytest.raises(UnsupportedSWRLError, match="3 or 4 args"):
-        encode_rule("http://d#",
-                    [("p", ["?x", "?v"]),
-                     ("substring", ["?z", "?v", "1", "2", "3"])],
-                    [("q", ["?x", "?z"])])
+        compile_rule("http://d#",
+                     [("p", ["?x", "?v"]),
+                      ("substring", ["?z", "?v", "1", "2", "3"])],
+                     [("q", ["?x", "?z"])])
 
 
 # ---------------------------------------------------------------------------
@@ -640,12 +706,12 @@ from hypothesis import given, settings, strategies as hy_st
 @settings(max_examples=300, deadline=None)
 @given(hy_st.text(max_size=120))
 def test_swrl_fuzz_arbitrary_text(src):
-    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, encode_rule
+    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, compile_rule
     from yamlpyowl_spark.parser.document import ParseError, _parse_swrl
 
     try:
         body, head = _parse_swrl(src)
-        encode_rule("http://d#", body, head)
+        compile_rule("http://d#", body, head)
     except (ParseError, UnsupportedSWRLError):
         pass
 
@@ -664,12 +730,12 @@ _RULE_SOUP = hy_st.lists(
 @settings(max_examples=300, deadline=None)
 @given(_RULE_SOUP)
 def test_swrl_fuzz_token_soup(parts):
-    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, encode_rule
+    from yamlpyowl_spark.operators.swrl import UnsupportedSWRLError, compile_rule
     from yamlpyowl_spark.parser.document import ParseError, _parse_swrl
 
     try:
         body, head = _parse_swrl(" ".join(parts))
-        encode_rule("http://d#", body, head)
+        compile_rule("http://d#", body, head)
     except (ParseError, UnsupportedSWRLError):
         pass
 

@@ -115,10 +115,10 @@ OWL_INV_FUNCTIONAL = OWL + "InverseFunctionalProperty"
 RDFS_DOMAIN = V.RDFS + "domain"
 RDFS_RANGE = V.RDFS + "range"
 
-# DL constructs the CSP fragment does NOT reason over: documents using
-# these would previously fall through silently with only deterministic
-# inferences (r2 verdict #4) — now they produce an explicit diagnostic
-# triple (doc_iri ypo:dlUnsupportedConstruct <construct>) or a raise.
+# DL constructs the CSP fragment does NOT reason over produce an
+# explicit diagnostic triple (doc_iri ypo:dlUnsupportedConstruct
+# <construct>) or a raise, never a silent fall-through with only
+# deterministic inferences (r2 verdict #4).
 #
 # History of the shrinking boundary: unqualified cardinality joined in
 # r5; qualified cardinality, hasSelf, disjointWith/propertyDisjointWith
@@ -128,10 +128,8 @@ RDFS_RANGE = V.RDFS + "range"
 # support: ranges the shared facet evaluator (operators/facets) can
 # decide are reasoned over, anything it cannot parse (unknown facet,
 # user-defined datatype, malformed bound) is still flagged loudly.
-# The unconditional set is therefore empty; _FACET_VOCAB below drives
-# the parse-dependent diagnostics.
-UNSUPPORTED_DL_PREDS = frozenset()
-
+# No predicate is unsupported outright; _FACET_VOCAB below drives the
+# parse-dependent diagnostics.
 _FACET_VOCAB = frozenset(
     (_FX.ON_DATATYPE, _FX.WITH_RESTRICTIONS, _FX.ON_DATA_RANGE)
 )
@@ -1107,7 +1105,7 @@ def dl_document(
     facts = dict.fromkeys((s, p, o, il) for s, p, o, il, _ in rows)
     rows = [(s, p, o) for s, p, o, il in facts if not il]
     lit_rows = [(s, p, o) for s, p, o, il in facts if il]
-    unsupported = set(p for _, p, _ in rows if p in UNSUPPORTED_DL_PREDS)
+    unsupported = set()
     # facet vocabulary is CONDITIONALLY supported: a range node the
     # shared evaluator decodes is reasoned over; anything it cannot
     # parse (unknown facet, user datatype, malformed bound) keeps
@@ -1155,9 +1153,8 @@ def dl_model_search(
 
     The supported-fragment boundary is OBSERVABLE, never silent
     (r2 verdict #4): a document using a construct the fragment ignores
-    (a datatype restriction the facet evaluator cannot decode, or a
-    predicate in ``UNSUPPORTED_DL_PREDS``, empty today) yields, per
-    distinct construct, one diagnostic row ``(doc_iri,
+    (a datatype restriction the facet evaluator cannot decode) yields,
+    per distinct construct, one diagnostic row ``(doc_iri,
     ypo:dlUnsupportedConstruct, <construct>)`` in the output
     (``on_unsupported="warn"``, default);
     ``"raise"`` fails the job with :class:`UnsupportedDLError` naming

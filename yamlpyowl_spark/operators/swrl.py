@@ -6,14 +6,14 @@ against the document IRI (the parser emits rules as ``(rule_iri,
 ypo:ruleSrc, src)`` literals), so chaining never crosses ``doc_iri``.
 
 * Driver: :func:`forward_chain` collects the rule-bearing triples once
-  and validates every rule with :func:`encode_rule`, so a rule outside
+  and validates every rule with :func:`compile_rule`, so a rule outside
   the fragment raises (or is skipped with a warning) when
   ``forward_chain`` is called, before any evaluation job. Only the
   documents that carry a valid rule are shuffled, one
   :func:`.isomorph.per_document` group per document.
-* Executor: :func:`chain_document`, plain Python, re-derives the
-  document's rules from its rows and substitutes each rule's slot
-  values into its decoded template (:func:`_parse_template`). Round 0
+* Executor: :func:`chain_document`, plain Python, compiles the
+  document's rules from its rows with the same :func:`compile_rule`
+  walk, straight into the atoms the engine matches. Round 0
   evaluates every rule in full; round r re-joins only the bindings in
   which one body atom matches a fact or a closed type new in round
   r-1, against the facts present at the start of round r, so
@@ -56,7 +56,7 @@ heads which the reference's Pellet path also accepts):
 * builtin atoms      ``greaterThan/lessThan/greaterThanOrEqual/
   lessThanOrEqual/equal/notEqual(?v, const-or-?w)`` (numeric
   comparison; a non-numeric binding drops; r6 adds the OrEqual/equal/
-  notEqual codes and var-var operands);
+  notEqual names and var-var operands);
 * owl:TransitiveProperty — expanded to ``p(?x,?y), p(?y,?z) → p(?x,?z)``;
 * owl:inverseOf      — ``p(?x,?y) → q(?y,?x)`` in both directions.
 
@@ -75,10 +75,8 @@ triple-parity contract is on asserted triples (SURVEY.md §2.5).
 from __future__ import annotations
 
 import operator
-import re
 import warnings
-from functools import lru_cache, partial
-from typing import List, Tuple
+from functools import partial
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -154,49 +152,52 @@ def _boolean_not(x: str):
     return None
 
 
-_BUILTINS = {
-    "greaterThan": "gt",
-    "lessThan": "lt",
-    "greaterThanOrEqual": "ge",
-    "lessThanOrEqual": "le",
-    "equal": "eq",
-    "notEqual": "ne",
-}
-_CMP = {
-    "gt": operator.gt,
-    "lt": operator.lt,
-    "ge": operator.ge,
-    "le": operator.le,
-    "eq": operator.eq,
-    "ne": operator.ne,
+# swrlb comparisons: numeric, a non-numeric binding drops (r6 adds the
+# OrEqual/equal/notEqual names and var-var operands)
+_COMPARE = {
+    name: partial(_num_test, op)
+    for name, op in (
+        ("greaterThan", operator.gt),
+        ("lessThan", operator.lt),
+        ("greaterThanOrEqual", operator.ge),
+        ("lessThanOrEqual", operator.le),
+        ("equal", operator.eq),
+        ("notEqual", operator.ne),
+    )
 }
 # swrlb arithmetic, result-first (r6b). Division stays outside the
 # fragment (its value is non-integral almost surely; a float dialect
 # would hitch engine parity to Java-vs-Python double formatting).
-_ARITH = {"add": "ad", "subtract": "sb", "multiply": "ml", "mod": "md"}
-_AR_FN = {"ad": operator.add, "sb": operator.sub, "ml": operator.mul, "md": _tmod}
+_ARITH = {
+    name: partial(_int_op, fn)
+    for name, fn in (
+        ("add", operator.add),
+        ("subtract", operator.sub),
+        ("multiply", operator.mul),
+        ("mod", _tmod),
+    )
+}
 # swrlb string builtins, result-first (r6c, r6d): stringLength binds
 # the decimal lexical of the CHARACTER count; upperCase/lowerCase follow
 # Python default-locale casing (the corpus dialect is ASCII)
 _STR_FN = {
-    "stringConcat": "sc",
-    "stringLength": "sl",
-    "upperCase": "uc",
-    "lowerCase": "lc",
-    "substring": "ss",
-    "booleanNot": "bn",
+    "stringConcat": lambda *parts: "".join(parts),
+    "stringLength": lambda x: str(len(x)),
+    "upperCase": str.upper,
+    "lowerCase": str.lower,
+    "substring": _substring,
+    "booleanNot": _boolean_not,
 }
-_SF_FN = {
-    "sc": lambda *parts: "".join(parts),
-    "sl": lambda x: str(len(x)),
-    "uc": str.upper,
-    "lc": str.lower,
-    "ss": _substring,
-    "bn": _boolean_not,
+_STR_CHECK = {
+    "contains": operator.contains,
+    "startsWith": str.startswith,
+    "endsWith": str.endswith,
 }
-_STR_CHECK = {"contains": "ct", "startsWith": "sw", "endsWith": "ew"}
-_SCK_FN = {"ct": operator.contains, "sw": str.startswith, "ew": str.endswith}
-_INVALID = "!unsupported"
+
+
+def _int_same(bound: str, r: str) -> bool:
+    # an arithmetic atom whose result is already bound: integer equality
+    return _int(bound) == int(r)
 
 
 def _unquote(a: str) -> str:
@@ -207,26 +208,62 @@ def _unquote(a: str) -> str:
     return a
 
 
-# fixed templates for rules synthesized from property axioms; unit
-# tests assert these equal encode_rule() output for the same shapes
-TRANSITIVE_KEY = "P(v0,v1);P(v1,v2)=>P(v0,v2)"
-INVERSE_KEY = "P(v0,v1)=>P(v1,v0)"
-
-
 class UnsupportedSWRLError(ParseError):
     """A rule uses a construct outside the supported SWRL fragment."""
 
 
+def _int_lexical(a: str, what: str) -> str:
+    try:
+        return str(int(a))
+    except ValueError:
+        raise UnsupportedSWRLError(
+            f"non-integer {what} constant {a!r} (integer fragment)"
+        ) from None
+
+
+def _numeric(a: str) -> str:
+    try:
+        float(a)
+    except ValueError:
+        raise UnsupportedSWRLError(f"non-numeric builtin constant {a!r}") from None
+    return a
+
+
+def _head_literal(o: str):
+    """A head constant's (lexical, datatype) when it reads as a number."""
+    try:
+        return str(int(o)), V.XSD_INTEGER
+    except ValueError:
+        try:
+            return str(float(o)), V.XSD_DOUBLE
+        except ValueError:
+            return None
+
+
+_ARITH_CONST = partial(_int_lexical, what="arithmetic")
+# substring's start/length: XPath INTEGER fragment (a float needs XPath
+# round() parity — loud-out)
+_SUBSTRING_CONST = partial(_int_lexical, what="substring")
+
+
 # --------------------------------------------------------------------------
-# rule encoding: (body, head) atom lists -> (template_key, slots)
+# rule compilation: (body, head) atom lists -> the engine's atoms
 # --------------------------------------------------------------------------
 
 
-def encode_rule(doc_iri: str, body: list, head: list) -> Tuple[str, List[str]]:
-    """Encode one parsed rule as a structural template key plus the
-    flat list of concrete slot values (full IRIs / literal lexical
-    forms). Two rules from different documents with the same structure
-    share a key; :func:`_compile` substitutes the slots back in.
+def compile_rule(doc_iri: str, body: list, head: list):
+    """One parsed rule as the engine's (body, head) atoms, names
+    resolved against ``doc_iri``. Variables are ``("v", i)``, numbered
+    in order of first binding, constants ``("c", value)``.
+
+    Body atoms: ``("facts" | "types", pred, subj, obj)`` is matched
+    against an index, where a constant object is ``("k", ((value,
+    obj_is_literal), ...))`` (a class atom reads the closed types as
+    ``(inst, rdf:type, cls)`` facts); ``("test", fn, terms)`` filters;
+    ``("eval", fn, out, terms, same)`` binds ``out`` to ``fn(terms)``,
+    or keeps the binding if ``same(out, fn(terms))`` when ``out`` is
+    already bound. Head atoms: ``(subj, pred, obj, obj_is_literal,
+    obj_datatype)`` with terms in the subject and object.
 
     Raises :class:`UnsupportedSWRLError` on rules outside the fragment
     (validated up front so a bad rule can never abort a running
@@ -234,44 +271,35 @@ def encode_rule(doc_iri: str, body: list, head: list) -> Tuple[str, List[str]]:
     """
     varmap: dict = {}
 
-    def v(a: str) -> str:
-        if a not in varmap:
-            varmap[a] = len(varmap)
-        return f"v{varmap[a]}"
+    def var(a: str):
+        return ("v", varmap.setdefault(a, len(varmap)))
 
-    sig, slots = [], []
+    def operand(name: str, args: list, a: str, const=_unquote):
+        # a builtin reads a variable only once an atom has bound it;
+        # with no ``const``, a constant fails the same check
+        if a.startswith("?") or const is None:
+            if a not in varmap:
+                raise UnsupportedSWRLError(
+                    f"builtin {name}({', '.join(args)}) must follow an atom binding {a}"
+                )
+            return ("v", varmap[a])
+        return ("c", const(a))
+
+    def result(name: str, args: list):
+        if not args[0].startswith("?"):
+            raise UnsupportedSWRLError(
+                f"builtin {name}({', '.join(args)}): the result argument must be a variable"
+            )
+
+    cbody = []
     for name, args in body:
         if name in _ARITH:
             if len(args) != 3:
                 raise UnsupportedSWRLError(f"builtin {name} needs 3 args, got {args}")
-            out, a1, a2 = args
-            if not out.startswith("?"):
-                raise UnsupportedSWRLError(
-                    f"builtin {name}({', '.join(args)}): the result argument "
-                    "must be a variable"
-                )
-            opsigs = []
-            for a in (a1, a2):
-                if a.startswith("?"):
-                    if a not in varmap:
-                        raise UnsupportedSWRLError(
-                            f"builtin {name}({', '.join(args)}) must follow "
-                            f"an atom binding {a}"
-                        )
-                    opsigs.append(v(a))
-                else:
-                    try:
-                        slots.append(str(int(a)))
-                    except ValueError:
-                        raise UnsupportedSWRLError(
-                            f"non-integer arithmetic constant {a!r} "
-                            "(integer fragment)"
-                        )
-                    opsigs.append("C")
-            # out NEW at this point in the walk -> binding form; out
-            # already bound -> equality check (eval mirrors via its own
-            # bound-set walk)
-            sig.append(f"{_ARITH[name]}({v(out)},{opsigs[0]},{opsigs[1]})")
+            result(name, args)
+            terms = [operand(name, args, a, _ARITH_CONST) for a in args[1:]]
+            # a result NEW at this point binds, one already bound checks
+            cbody.append(("eval", _ARITH[name], var(args[0])[1], terms, _int_same))
         elif name in _STR_FN:
             if name == "stringConcat":
                 ok, want = len(args) >= 3, ">= 3"
@@ -280,211 +308,73 @@ def encode_rule(doc_iri: str, body: list, head: list) -> Tuple[str, List[str]]:
             else:
                 ok, want = len(args) == 2, "2"
             if not ok:
-                raise UnsupportedSWRLError(
-                    f"builtin {name} needs {want} args, got {args}"
-                )
-            out = args[0]
-            if not out.startswith("?"):
-                raise UnsupportedSWRLError(
-                    f"builtin {name}({', '.join(args)}): the result argument "
-                    "must be a variable"
-                )
-            opsigs = []
-            for pos, a in enumerate(args[1:]):
-                if a.startswith("?"):
-                    if a not in varmap:
-                        raise UnsupportedSWRLError(
-                            f"builtin {name}({', '.join(args)}) must follow "
-                            f"an atom binding {a}"
-                        )
-                    opsigs.append(v(a))
-                else:
-                    if name == "substring" and pos >= 1:
-                        # XPath INTEGER fragment: a float start/length
-                        # needs XPath round() parity — loud-out
-                        try:
-                            slots.append(str(int(a)))
-                        except ValueError:
-                            raise UnsupportedSWRLError(
-                                f"non-integer substring constant {a!r} "
-                                "(integer fragment)"
-                            )
-                    else:
-                        slots.append(_unquote(a))
-                    opsigs.append("C")
-            sig.append(f"{_STR_FN[name]}({v(out)},{','.join(opsigs)})")
+                raise UnsupportedSWRLError(f"builtin {name} needs {want} args, got {args}")
+            result(name, args)
+            int_from = 2 if name == "substring" else len(args)  # start/length
+            terms = [
+                operand(name, args, a, _SUBSTRING_CONST if i >= int_from else _unquote)
+                for i, a in enumerate(args[1:], 1)
+            ]
+            cbody.append(("eval", _STR_FN[name], var(args[0])[1], terms, operator.eq))
         elif name in _STR_CHECK:
             if len(args) != 2:
                 raise UnsupportedSWRLError(f"builtin {name} needs 2 args, got {args}")
-            opsigs = []
-            for a in args:
-                if a.startswith("?"):
-                    if a not in varmap:
-                        raise UnsupportedSWRLError(
-                            f"builtin {name}({', '.join(args)}) must follow "
-                            f"an atom binding {a}"
-                        )
-                    opsigs.append(v(a))
-                else:
-                    slots.append(_unquote(a))
-                    opsigs.append("C")
-            sig.append(f"{_STR_CHECK[name]}({opsigs[0]},{opsigs[1]})")
-        elif name in _BUILTINS:
+            cbody.append(("test", _STR_CHECK[name], [operand(name, args, a) for a in args]))
+        elif name in _COMPARE:
             if len(args) != 2:
                 raise UnsupportedSWRLError(f"builtin {name} needs 2 args, got {args}")
-            var, rhs = args
-            if not var.startswith("?") or var not in varmap:
-                raise UnsupportedSWRLError(
-                    f"builtin {name}({', '.join(args)}) must follow an atom binding {var}"
-                )
-            if rhs.startswith("?"):
-                # var-var comparison (r6): both sides must already be
-                # bound by earlier atoms
-                if rhs not in varmap:
-                    raise UnsupportedSWRLError(
-                        f"builtin {name}({', '.join(args)}) must follow an "
-                        f"atom binding {rhs}"
-                    )
-                sig.append(f"{_BUILTINS[name]}({v(var)},{v(rhs)})")
-            else:
-                try:
-                    float(rhs)
-                except ValueError:
-                    raise UnsupportedSWRLError(f"non-numeric builtin constant {rhs!r}")
-                sig.append(f"{_BUILTINS[name]}({v(var)},C)")
-                slots.append(rhs)
+            terms = [operand(name, args, args[0], None), operand(name, args, args[1], _numeric)]
+            cbody.append(("test", _COMPARE[name], terms))
         elif len(args) == 1:
             a = args[0]
-            slots.append(doc_iri + name)
-            if a.startswith("?"):
-                sig.append(f"T({v(a)})")
-            else:
-                sig.append("T(C)")
-                slots.append(doc_iri + a)
+            t = var(a) if a.startswith("?") else ("c", doc_iri + a)
+            cbody.append(("types", V.RDF_TYPE, t, ("k", ((doc_iri + name, False),))))
         elif len(args) == 2:
             s, o = args
-            slots.append(doc_iri + name)
-            if s.startswith("?"):
-                ssig = v(s)
-            else:
-                ssig = "C"
-                slots.append(doc_iri + s)
-            if o.startswith("?"):
-                osig = v(o)
-            else:
-                # constant object matches a literal lexical form OR a
-                # local entity name — keep both resolutions as slots
-                osig = "C"
-                slots.extend([o, doc_iri + o])
-            sig.append(f"P({ssig},{osig})")
+            st = var(s) if s.startswith("?") else ("c", doc_iri + s)
+            # a constant object matches a literal lexical form OR a
+            # local entity name
+            ot = var(o) if o.startswith("?") else ("k", ((o, True), (doc_iri + o, False)))
+            cbody.append(("facts", doc_iri + name, st, ot))
         else:
             raise UnsupportedSWRLError(f"atom {name}({', '.join(args)}) has arity {len(args)}")
-
-    if not sig:
+    if not cbody:
         raise UnsupportedSWRLError("rule has an empty body")
 
-    hsig = []
+    def bound(a: str):
+        if not a.startswith("?"):
+            return ("c", doc_iri + a)
+        if a not in varmap:
+            raise UnsupportedSWRLError(f"head variable {a} not bound in body")
+        return ("v", varmap[a])
+
+    chead = []
     for name, args in head:
-        if name in _BUILTINS:
+        if name in _COMPARE:
             raise UnsupportedSWRLError(f"builtin {name} not allowed in rule head")
         if len(args) == 1:
-            a = args[0]
-            slots.append(doc_iri + name)
-            if a.startswith("?"):
-                if a not in varmap:
-                    raise UnsupportedSWRLError(f"head variable {a} not bound in body")
-                hsig.append(f"T({v(a)})")
-            else:
-                hsig.append("T(CE)")
-                slots.append(doc_iri + a)
+            chead.append((bound(args[0]), V.RDF_TYPE, ("c", doc_iri + name), False, None))
         elif len(args) == 2:
             s, o = args
-            slots.append(doc_iri + name)
-            if s.startswith("?"):
-                if s not in varmap:
-                    raise UnsupportedSWRLError(f"head variable {s} not bound in body")
-                ssig = v(s)
+            st = bound(s)
+            lit = None if o.startswith("?") else _head_literal(o)
+            if lit is None:
+                chead.append((st, doc_iri + name, bound(o), False, None))
             else:
-                ssig = "CE"
-                slots.append(doc_iri + s)
-            if o.startswith("?"):
-                if o not in varmap:
-                    raise UnsupportedSWRLError(f"head variable {o} not bound in body")
-                osig = v(o)
-            else:
-                lit = None
-                try:
-                    lit = (str(int(o)), V.XSD_INTEGER)
-                except ValueError:
-                    try:
-                        lit = (str(float(o)), V.XSD_DOUBLE)
-                    except ValueError:
-                        pass
-                if lit is not None:
-                    osig = "CL"
-                    slots.extend(lit)
-                else:
-                    osig = "CE"
-                    slots.append(doc_iri + o)
-            hsig.append(f"P({ssig},{osig})")
+                chead.append((st, doc_iri + name, ("c", lit[0]), True, lit[1]))
         else:
             raise UnsupportedSWRLError(f"head atom {name}({', '.join(args)}) has arity {len(args)}")
-    if not hsig:
+    if not chead:
         raise UnsupportedSWRLError("rule has an empty head")
-
-    return ";".join(sig) + "=>" + ";".join(hsig), slots
-
-
-_ATOM_RE = re.compile(r"(P|T|gt|lt|ge|le|eq|ne|ad|sb|ml|md|sc|sl|uc|lc|ss|bn|ct|sw|ew)\(([^)]*)\)")
+    return cbody, chead
 
 
-@lru_cache(maxsize=4096)
-def _parse_template(key: str):
-    """Inverse of :func:`encode_rule`'s key: atom descriptors with
-    slot indices assigned by the identical walk. Cached: the documents
-    of a corpus share a few rule shapes (callers never mutate the
-    result)."""
-    body_s, head_s = key.split("=>")
-    slot = 0
-
-    def term(a: str, two: str = None):
-        # a variable, or a constant taking the next slot — or the next
-        # two: a body object's ("c2": lexical, IRI) or a head literal's
-        # ("lit": lexical, datatype)
-        nonlocal slot
-        if a[0] == "v":
-            return ("v", int(a[1:]))
-        slot += 2 if two else 1
-        return (two, slot - 2, slot - 1) if two else ("c", slot - 1)
-
-    body = []
-    for m in _ATOM_RE.finditer(body_s):
-        kind, args = m.group(1), m.group(2).split(",")
-        if kind in _CMP:
-            body.append(("bi", kind, int(args[0][1:]), term(args[1])))
-        elif kind in _AR_FN:
-            body.append(("ar", kind, int(args[0][1:]), term(args[1]), term(args[2])))
-        elif kind in _SF_FN:
-            body.append(("sf", kind, int(args[0][1:]), [term(a) for a in args[1:]]))
-        elif kind in _SCK_FN:
-            body.append(("sck", kind, term(args[0]), term(args[1])))
-        elif kind == "T":
-            body.append(("cls", term("C")[1], term(args[0])))
-        else:
-            body.append(("prop", term("C")[1], term(args[0]), term(args[1], "c2")))
-    head = []
-    for m in _ATOM_RE.finditer(head_s):
-        kind, args = m.group(1), m.group(2).split(",")
-        if kind == "T":
-            head.append(("cls", term("C")[1], term(args[0])))
-        else:
-            lit = "lit" if args[1] == "CL" else None
-            head.append(("prop", term("C")[1], term(args[0]), term(args[1], lit)))
-    return body, head, slot
+# the rules that property axioms stand for, written as rule atoms
+_XY, _YX, _YZ, _XZ = ["?x", "?y"], ["?y", "?x"], ["?y", "?z"], ["?x", "?z"]
 
 
 # --------------------------------------------------------------------------
-# rule table
+# rule sources
 # --------------------------------------------------------------------------
 
 
@@ -502,16 +392,15 @@ def _rule_rel(triples: DataFrame) -> DataFrame:
     )
 
 
-def _local_rule_rows(rel_rows) -> list:
-    """The sorted (doc_iri, template_key, slots) rule list of distinct
-    ``(doc_iri, pred, subj, obj)`` rows — the collected ``_rule_rel``
-    rows on the driver, a document's rows in :func:`chain_document`:
-    one row per distinct rule src, plus the rules synthesized from
-    owl:TransitiveProperty and owl:inverseOf axioms (inverseOf fires
-    both directions); other rows are ignored. An invalid rule becomes
-    the ``!unsupported`` diagnostic row with ``slots = [reason, src]``."""
-    out = []
-    seen_srcs = set()
+def _doc_rules(rel_rows):
+    """The rules of distinct ``(doc_iri, pred, subj, obj)`` rows — the
+    collected ``_rule_rel`` rows on the driver, a document's rows in
+    :func:`chain_document` — as ``(rules, bad)``: ``(doc_iri, (body,
+    head))`` per distinct rule src and per rule synthesized from an
+    owl:TransitiveProperty or owl:inverseOf axiom (inverseOf fires both
+    directions), and the sorted ``(doc_iri, reason, src)`` of the rule
+    srcs :func:`compile_rule` rejects; other rows are ignored."""
+    rules, bad, seen_srcs = [], [], set()
     for d, p, s, o in rel_rows:
         if p == V.YPO_RULE_SRC:
             # two rule NODES (distinct subj) can carry the same src text
@@ -519,74 +408,20 @@ def _local_rule_rows(rel_rows) -> list:
                 continue
             seen_srcs.add((d, o))
             try:
-                key, slots = encode_rule(d, *_parse_swrl(o))
-            except Exception as e:  # noqa: BLE001 — recorded as a row
-                key, slots = _INVALID, [f"{type(e).__name__}: {e}", o]
-            out.append((d, key, list(slots)))
+                rules.append((d, compile_rule(d, *_parse_swrl(o))))
+            except Exception as e:  # noqa: BLE001 — reported by the driver
+                bad.append((d, f"{type(e).__name__}: {e}", o))
         elif p == V.OWL_INVERSE_OF:
-            out.append((d, INVERSE_KEY, [o, s]))
-            out.append((d, INVERSE_KEY, [s, o]))
+            rules.append((d, compile_rule("", [(o, _XY)], [(s, _YX)])))
+            rules.append((d, compile_rule("", [(s, _XY)], [(o, _YX)])))
         elif p == V.RDF_TYPE and o == V.OWL_TRANSITIVE:
-            out.append((d, TRANSITIVE_KEY, [s, s, s]))
-    out.sort()
-    return out
+            rules.append((d, compile_rule("", [(s, _XY), (s, _YZ)], [(s, _XZ)])))
+    return rules, sorted(bad)
 
 
 # --------------------------------------------------------------------------
 # per-document engine: plain Python, one call per document
 # --------------------------------------------------------------------------
-
-
-def _compile(key: str, slots: list):
-    """One rule as (body, head), its slot values substituted into the
-    atoms :func:`_parse_template` decodes from ``key``. Variables stay
-    ``("v", i)``, numbered in order of first binding.
-
-    Body atoms: ``("facts" | "types", pred, subj, obj)`` is matched
-    against an index, where a constant object is ``("k", ((value,
-    obj_is_literal), ...))`` (a class atom reads the closed types as
-    ``(inst, rdf:type, cls)`` facts); ``("test", fn, terms)`` filters;
-    ``("eval", fn, out, terms, same)`` binds ``out`` to ``fn(terms)``,
-    or keeps the binding if ``same(out, fn(terms))`` when ``out`` is
-    already bound. Head atoms: ``(subj, pred, obj, obj_is_literal,
-    obj_datatype)`` with terms in the subject and object."""
-    body_t, head_t, _ = _parse_template(key)
-
-    def sub(t):
-        return t if t[0] == "v" else (t[0],) + tuple(slots[i] for i in t[1:])
-
-    body = []
-    for a in body_t:
-        kind = a[0]
-        if kind == "prop":
-            o = sub(a[3])
-            if o[0] == "c2":  # a literal's lexical form OR the entity IRI
-                o = ("k", ((o[1], True), (o[2], False)))
-            body.append(("facts", slots[a[1]], sub(a[2]), o))
-        elif kind == "cls":
-            cls = ("k", ((slots[a[1]], False),))
-            body.append(("types", V.RDF_TYPE, sub(a[2]), cls))
-        elif kind == "bi":
-            body.append(("test", partial(_num_test, _CMP[a[1]]), [("v", a[2]), sub(a[3])]))
-        elif kind == "sck":
-            body.append(("test", _SCK_FN[a[1]], [sub(a[2]), sub(a[3])]))
-        elif kind == "ar":
-            same = lambda bound, r: _int(bound) == int(r)  # noqa: E731
-            fn = partial(_int_op, _AR_FN[a[1]])
-            body.append(("eval", fn, a[2], [sub(a[3]), sub(a[4])], same))
-        else:  # sf
-            body.append(("eval", _SF_FN[a[1]], a[2], [sub(t) for t in a[3]], operator.eq))
-    head = []
-    for a in head_t:
-        if a[0] == "cls":
-            head.append((sub(a[2]), V.RDF_TYPE, ("c", slots[a[1]]), False, None))
-        else:
-            o = sub(a[3])
-            if o[0] == "lit":
-                head.append((sub(a[2]), slots[a[1]], ("c", o[1]), True, o[2]))
-            else:
-                head.append((sub(a[2]), slots[a[1]], o, False, None))
-    return body, head
 
 
 def _val(t, b: tuple) -> str:
@@ -709,11 +544,7 @@ def chain_document(doc_iri: str, rows, max_iter: int = 15) -> set:
     not among its non-blank facts. Rules that fail validation are
     dropped (the driver has already raised or warned)."""
     rows = set(rows)
-    rules = [
-        _compile(key, slots)
-        for _, key, slots in _local_rule_rows({(doc_iri, p, s, o) for s, p, o, _, _ in rows})
-        if key != _INVALID
-    ]
+    rules = [r for _, r in _doc_rules({(doc_iri, p, s, o) for s, p, o, _, _ in rows})[0]]
     known = {r for r in rows if not r[0].startswith("_:") and not r[2].startswith("_:")}
     sup = _superclasses(known)
     known_types = _memberships(known, sup)
@@ -769,15 +600,14 @@ def forward_chain(
     if on_unsupported not in ("raise", "skip"):
         raise ValueError(f"on_unsupported must be raise|skip: {on_unsupported!r}")
     spark = triples.sparkSession
-    local_rules = _local_rule_rows(_rule_rel(triples).collect())
-    bad = [(d, slots) for d, k, slots in local_rules if k == _INVALID]
+    rules, bad = _doc_rules(_rule_rel(triples).collect())
     if bad:
-        msgs = [f"{d}: {slots[0]} in rule {slots[1]!r}" for d, slots in bad[:5]]
+        msgs = [f"{d}: {why} in rule {src!r}" for d, why, src in bad[:5]]
         msg = "; ".join(msgs) + (f" (+{len(bad) - 5} more)" if len(bad) > 5 else "")
         if on_unsupported == "raise":
             raise UnsupportedSWRLError("unsupported SWRL fragment: " + msg)
         warnings.warn("skipping unsupported SWRL rules: " + msg)
-    docs = sorted({d for d, k, _ in local_rules if k != _INVALID})
+    docs = sorted({d for d, _ in rules})
     if not docs:
         return arrow_local_df(spark, [], FACT_SCHEMA)
     rule_docs = arrow_local_df(spark, [(d,) for d in docs], "doc_iri string")
