@@ -12,7 +12,9 @@ from yamlpyowl_spark.schema import SOURCE_SCHEMA
 from yamlpyowl_spark.plans.pipeline import KGPipeline
 from yamlpyowl_spark.sources.fixtures import load_fixture_texts, reference_available
 
-pytestmark = pytest.mark.skipif(
+# only the zebra fixture and the tests that read it need the reference
+# mount; every other test builds its document inline
+needs_reference = pytest.mark.skipif(
     not reference_available(), reason="reference fixtures not mounted"
 )
 
@@ -53,6 +55,8 @@ BASE_PROPS = {"drinks", "lives_in", "owns", "smokes", "has_color"}
 
 @pytest.fixture(scope="module")
 def zebra_rows():
+    if not reference_available():
+        pytest.skip("reference fixtures not mounted")
     text = load_fixture_texts()["examples/einsteins_zebra_riddle.owl.yml"]
     res = parse_document(text)
     return [(t[0], t[1], t[2]) for t in res.triples if not t[3]]
@@ -84,6 +88,7 @@ def test_zebra_inverse_images(zebra_rows):
     assert (Z + "zebra", Z + "inv_owns", Z + "Japanese") in inferred
 
 
+@needs_reference
 def test_distributed_solve_via_spark(spark):
     text = load_fixture_texts()["examples/einsteins_zebra_riddle.owl.yml"]
     src = spark.createDataFrame(
@@ -139,6 +144,7 @@ def test_no_csp_doc_is_noop():
     assert _solve_doc(rows) == set()
 
 
+@needs_reference
 def test_sync_reasoner_solves_zebra(spark):
     # the reference's own flow: OntologyManager + sync_reasoner
     # (tests/test_core.py:186, 263)
@@ -166,6 +172,7 @@ def test_sync_reasoner_solves_zebra(spark):
     assert (Z + "house_1", Z + "house_2") in lt
 
 
+@needs_reference
 def test_facade_zebra_parity_assertions(spark):
     """The reference's exact post-reasoner surface (tests/test_core.py:
     171-263): n.Pet in n.dog.is_a, n.Ukrainian.drinks == n.tea,
@@ -195,7 +202,7 @@ def test_facade_zebra_parity_assertions(spark):
 def test_corrupt_inputs_do_not_hang_or_crash():
     """Cyclic RDF lists and dangling restriction nodes must degrade to
     no-ops, never hang an executor task."""
-    from yamlpyowl_spark.operators.dlreason import OWL_EQUIVALENT_CLASS, OWL_ONE_OF
+    from yamlpyowl_spark.vocab import OWL_EQUIVALENT_CLASS, OWL_ONE_OF
 
     E = "http://ex.org/bad#"
     FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
@@ -222,22 +229,22 @@ def test_step_cap_degrades_to_deterministic_only():
     # a large unconstrained CSP trips max_steps -> only OneOf
     # memberships come back (conservative: no over-claimed entailments)
     E = "http://ex.org/big#"
-    from yamlpyowl_spark.operators import dlreason as dl
+    from yamlpyowl_spark import vocab as V
 
     members = [f"{E}m{i}" for i in range(10)]
     rows = []
     # enum class over 10 members
-    rows.append((E + "C", dl.OWL_EQUIVALENT_CLASS, "_:e0"))
-    rows.append(("_:e0", dl.OWL_ONE_OF, "_:l0"))
+    rows.append((E + "C", V.OWL_EQUIVALENT_CLASS, "_:e0"))
+    rows.append(("_:e0", V.OWL_ONE_OF, "_:l0"))
     for i, m in enumerate(members):
-        rows.append((f"_:l{i}", dl.RDF_FIRST, m))
-        rows.append((f"_:l{i}", dl.RDF_REST, f"_:l{i+1}" if i < 9 else dl.RDF_NIL))
-        rows.append((m, dl.V.RDF_TYPE, dl.OWL_THING))
+        rows.append((f"_:l{i}", V.RDF_FIRST, m))
+        rows.append((f"_:l{i}", V.RDF_REST, f"_:l{i+1}" if i < 9 else V.RDF_NIL))
+        rows.append((m, V.RDF_TYPE, V.OWL_THING))
     # functional+invfunctional prop over the enum in both slots
-    rows.append((E + "p", dl.V.RDF_TYPE, dl.OWL_FUNCTIONAL))
-    rows.append((E + "p", dl.V.RDF_TYPE, dl.OWL_INV_FUNCTIONAL))
-    rows.append((E + "p", dl.RDFS_DOMAIN, E + "C"))
-    rows.append((E + "p", dl.RDFS_RANGE, E + "C"))
+    rows.append((E + "p", V.RDF_TYPE, V.OWL_FUNCTIONAL))
+    rows.append((E + "p", V.RDF_TYPE, V.OWL_INVERSE_FUNCTIONAL))
+    rows.append((E + "p", V.RDFS_DOMAIN, E + "C"))
+    rows.append((E + "p", V.RDFS_RANGE, E + "C"))
     stats = {}
     inferred = _solve_doc(rows, max_steps=50, stats=stats)
     assert stats["steps"] > 50 or stats["n_models"] >= 8
@@ -245,6 +252,7 @@ def test_step_cap_degrades_to_deterministic_only():
     assert preds == {RDF_TYPE}  # memberships only, no property claims
 
 
+@needs_reference
 def test_many_documents_solve_in_parallel(spark):
     """The applyInPandas fan-out: N independent copies of the puzzle
     under distinct doc_iris all solve, one CSP per group."""
@@ -349,11 +357,8 @@ def test_unsupported_construct_is_loud(spark):
     # loud boundary moved to the datatype-restriction vocabulary —
     # hand-authorable constructs neither reasoner draws conclusions
     # from
-    from yamlpyowl_spark.operators.dlreason import (
-        OWL,
-        UnsupportedDLError,
-        YPO_DL_UNSUPPORTED,
-    )
+    from yamlpyowl_spark.vocab import OWL
+    from yamlpyowl_spark.operators.dlreason import UnsupportedDLError, YPO_DL_UNSUPPORTED
 
     assert _no_dl_diagnostic(OWL + "minCardinality")
     assert _no_dl_diagnostic(OWL + "cardinality")
@@ -396,7 +401,7 @@ CE = "http://ex.org/card#"
 
 def _enum(cls, *members):
     """RDF-encode `cls ≡ OneOf{members}`."""
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL_EQUIVALENT_CLASS, OWL_ONE_OF, RDF_FIRST, RDF_REST, RDF_NIL,
     )
 
@@ -416,7 +421,7 @@ def _enum(cls, *members):
 def test_cardinality_exactly_one_forces_unique_value():
     # `q exactly 1` on m with a one-member range: q(m) = h1 holds in
     # every model — entailed (min side prunes the Nothing branch)
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ON_PROPERTY, RDFS_RANGE,
     )
 
@@ -435,7 +440,7 @@ def test_cardinality_exactly_one_forces_unique_value():
 def test_max_cardinality_alone_does_not_force_existence():
     # `q max 1` admits the no-value model: with two range candidates
     # plus Nothing, models disagree — nothing entailed
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ON_PROPERTY, RDFS_RANGE,
     )
 
@@ -455,7 +460,7 @@ def test_max_cardinality_violation_prunes_models():
     # two asserted q-successors DECLARED different + `q max 1` is a
     # certain violation: no model exists (non-UNA: without the
     # AllDifferent axiom the two names could merge and satisfy max 1)
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ALL_DIFFERENT, OWL_DISTINCT_MEMBERS, OWL_ON_PROPERTY,
         RDFS_RANGE, RDF_FIRST, RDF_REST, RDF_NIL,
     )
@@ -486,7 +491,7 @@ def test_max_cardinality_violation_prunes_models():
 
 
 def test_min_cardinality_two_on_single_valued_prop_unsat():
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ON_PROPERTY, RDFS_RANGE,
     )
 
@@ -518,7 +523,7 @@ def test_qualified_exactly_one_entails_the_single_c_member():
     # `q exactly 1 Warm` where Warm = OneOf{h1}: every model must give
     # m exactly one Warm successor — with a single candidate, q(m)=h1
     # is entailed (the Nothing branch fails the lower bound)
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ON_PROPERTY, RDFS_RANGE,
     )
 
@@ -539,7 +544,7 @@ def test_qualified_exactly_one_entails_the_single_c_member():
 def test_qualified_exactly_one_with_two_members_entails_nothing():
     # two Warm candidates: models disagree on which — no entailment,
     # but models DO exist (the restriction is satisfiable)
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ON_PROPERTY, RDFS_RANGE,
     )
 
@@ -563,7 +568,7 @@ def test_max_qualified_counts_only_c_successors():
     # two asserted successors declared different, but only ONE is in
     # Cold: `q max 1 Cold` is satisfied (the unqualified max 1 would
     # be violated) — models exist
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ALL_DIFFERENT, OWL_DISTINCT_MEMBERS, OWL_ON_PROPERTY,
         RDFS_RANGE, RDF_FIRST, RDF_REST, RDF_NIL,
     )
@@ -599,7 +604,7 @@ def test_max_qualified_counts_only_c_successors():
 def test_min_qualified_two_prunes_single_valued_models():
     # `q min 2 Warm` can never hold in the single-valued
     # representation with one asserted successor: unsat
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ON_PROPERTY, RDFS_RANGE,
     )
 
@@ -625,12 +630,8 @@ def test_min_qualified_two_prunes_single_valued_models():
 def test_allvaluesfrom_supported():
     # p only Good (+ p some House to force existence) pins p(a) = h1 —
     # allValuesFrom is now inside the fragment, not a diagnostic
-    from yamlpyowl_spark.operators.dlreason import (
-        OWL,
-        OWL_ALL_VALUES_FROM,
-        OWL_ON_PROPERTY,
-        OWL_SOME_VALUES_FROM,
-    )
+    from yamlpyowl_spark.vocab import OWL, OWL_ON_PROPERTY, OWL_SOME_VALUES_FROM
+    from yamlpyowl_spark.operators.dlreason import OWL_ALL_VALUES_FROM
 
     assert _no_dl_diagnostic(OWL_ALL_VALUES_FROM)
     U = "http://ex.org/only#"
@@ -691,7 +692,7 @@ def test_allvaluesfrom_supported():
 def test_has_self_entails_self_loop():
     # `p hasSelf` on n with p functional over Person={n}: every model
     # must set p(n) = n (NOTHING and non-self branches fail) — entailed
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ON_PROPERTY, RDFS_DOMAIN, RDFS_RANGE,
     )
 
@@ -709,7 +710,7 @@ def test_has_self_entails_self_loop():
 
 
 def test_irreflexive_asserted_self_loop_is_unsat():
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, RDFS_DOMAIN, RDFS_RANGE,
     )
 
@@ -728,7 +729,7 @@ def test_irreflexive_asserted_self_loop_is_unsat():
 
 def test_irreflexive_prunes_self_assignments():
     # no assertion: the CSP may still assign p(x) — but never x itself
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, RDFS_DOMAIN, RDFS_RANGE,
     )
 
@@ -747,7 +748,7 @@ def test_irreflexive_prunes_self_assignments():
 
 
 def test_asymmetric_prunes_reverse_assignment():
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, RDFS_DOMAIN, RDFS_RANGE,
     )
 
@@ -776,7 +777,7 @@ def test_asymmetric_prunes_reverse_assignment():
 
 def _card1(subject, prop, rnode):
     """RDF-encode `subject rdf:type [onProperty prop, cardinality 1]`."""
-    from yamlpyowl_spark.operators.dlreason import OWL, OWL_ON_PROPERTY
+    from yamlpyowl_spark.vocab import OWL, OWL_ON_PROPERTY
 
     return [
         (subject, RDF_TYPE, rnode),
@@ -789,7 +790,7 @@ def test_disjoint_with_restriction_defined_class_prunes_and_entails():
     # A ⊥ B, B ≡ hasCol.value(red), x ∈ A, x under `hasCol exactly 1`
     # over Color = {red, blue}: the red model would put x in both A and
     # B → pruned; Nothing pruned by the cardinality → entail blue
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_EQUIVALENT_CLASS, OWL_ON_PROPERTY, RDFS_RANGE,
     )
 
@@ -813,7 +814,7 @@ def test_disjoint_with_restriction_defined_class_prunes_and_entails():
 
 
 def test_disjoint_asserted_both_sides_is_unsat():
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, RDFS_DOMAIN, RDFS_RANGE,
     )
 
@@ -835,7 +836,7 @@ def test_disjoint_unknown_membership_never_prunes():
     # B has no enumeration, no assertions and no defining restriction:
     # membership is UNKNOWN for every entity — the axiom must not
     # shrink the model set (three-valued semantics, non-UNA-safe)
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, RDFS_DOMAIN, RDFS_RANGE,
     )
 
@@ -856,9 +857,10 @@ def test_disjoint_unknown_membership_never_prunes():
 
 
 def test_property_disjoint_prunes_equal_values_and_entails():
-    # p1(x) = red asserted, p1 ⊥p p2, x under `p2 exactly 1` over
+    # p1(x) = red asserted, p1 ⊥p p2 (pairwise or as an n-ary
+    # AllDisjointProperties axiom), x under `p2 exactly 1` over
     # {red, blue}: the p2(x) = red model violates disjointness → blue
-    from yamlpyowl_spark.operators.dlreason import OWL, RDFS_RANGE
+    from yamlpyowl_spark.vocab import OWL, RDFS_RANGE, RDF_FIRST, RDF_REST, RDF_NIL
 
     base = [
         *_enum(CE + "Color", CE + "red", CE + "blue"),
@@ -868,15 +870,23 @@ def test_property_disjoint_prunes_equal_values_and_entails():
     ]
     inferred = _solve_doc(base)
     assert not {t for t in inferred if t[1] == CE + "p2"}
-    inferred = _solve_doc(
-        base + [(CE + "p1", OWL + "propertyDisjointWith", CE + "p2")]
-    )
-    assert (CE + "x", CE + "p2", CE + "blue") in inferred
-    assert (CE + "x", CE + "p2", CE + "red") not in inferred
+    pairwise = [(CE + "p1", OWL + "propertyDisjointWith", CE + "p2")]
+    n_ary = [
+        ("_:adp", RDF_TYPE, OWL + "AllDisjointProperties"),
+        ("_:adp", OWL + "members", "_:m0"),
+        ("_:m0", RDF_FIRST, CE + "p1"),
+        ("_:m0", RDF_REST, "_:m1"),
+        ("_:m1", RDF_FIRST, CE + "p2"),
+        ("_:m1", RDF_REST, RDF_NIL),
+    ]
+    for axiom in (pairwise, n_ary):
+        inferred = _solve_doc(base + axiom)
+        assert (CE + "x", CE + "p2", CE + "blue") in inferred
+        assert (CE + "x", CE + "p2", CE + "red") not in inferred
 
 
 def test_property_disjoint_asserted_violation_is_unsat():
-    from yamlpyowl_spark.operators.dlreason import OWL, RDFS_RANGE
+    from yamlpyowl_spark.vocab import OWL, RDFS_RANGE
 
     rows = [
         *_enum(CE + "Color", CE + "red", CE + "blue"),
@@ -898,7 +908,7 @@ def test_property_disjoint_asserted_violation_is_unsat():
 
 def _key(cls, *props):
     """RDF-encode `cls owl:hasKey (props)`."""
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, RDF_FIRST, RDF_REST, RDF_NIL,
     )
 
@@ -915,12 +925,11 @@ def _key(cls, *props):
     return out
 
 
-def _alldiff(*members):
-    from yamlpyowl_spark.operators.dlreason import (
-        OWL_ALL_DIFFERENT, OWL_DISTINCT_MEMBERS, RDF_FIRST, RDF_REST, RDF_NIL,
-    )
+def _alldiff(*members, by="distinctMembers"):
+    """RDF-encode `AllDifferent(members)`, the list under `owl:<by>`."""
+    from yamlpyowl_spark.vocab import OWL, OWL_ALL_DIFFERENT, RDF_FIRST, RDF_REST, RDF_NIL
 
-    out = [("_:ad", RDF_TYPE, OWL_ALL_DIFFERENT), ("_:ad", OWL_DISTINCT_MEMBERS, "_:ad0")]
+    out = [("_:ad", RDF_TYPE, OWL_ALL_DIFFERENT), ("_:ad", OWL + by, "_:ad0")]
     for i, mem in enumerate(members):
         nxt = f"_:ad{i + 1}" if i + 1 < len(members) else RDF_NIL
         out += [(f"_:ad{i}", RDF_FIRST, mem), (f"_:ad{i}", RDF_REST, nxt)]
@@ -931,7 +940,7 @@ def test_haskey_prunes_shared_key_value_and_entails():
     # Person = {x, y} keyed on hasID over ID = {id1, id2}; y hasID id1
     # asserted; x under `hasID exactly 1`; x ≠ y declared. The id1
     # model makes x,y share the key → pruned; entail x hasID id2.
-    from yamlpyowl_spark.operators.dlreason import OWL, RDFS_RANGE
+    from yamlpyowl_spark.vocab import OWL, RDFS_RANGE
 
     base = [
         *_enum(CE + "Person", CE + "x", CE + "y"),
@@ -1005,7 +1014,7 @@ def test_haskey_unknown_membership_never_prunes():
 
 def test_disjoint_union_prunes_via_pairwise_decomposition():
     # Parent disjointUnionOf (A, B); x asserted in both → unsat
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, RDF_FIRST, RDF_REST, RDF_NIL, RDFS_DOMAIN, RDFS_RANGE,
     )
 
@@ -1026,7 +1035,7 @@ def test_disjoint_union_prunes_via_pairwise_decomposition():
 
 
 def test_all_disjoint_classes_asserted_overlap_is_unsat():
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, RDF_FIRST, RDF_REST, RDF_NIL,
     )
 
@@ -1050,7 +1059,7 @@ def test_all_disjoint_classes_asserted_overlap_is_unsat():
 
 
 def test_npa_asserted_denied_fact_is_unsat():
-    from yamlpyowl_spark.operators.dlreason import OWL
+    from yamlpyowl_spark.vocab import OWL
 
     stats = {}
     _solve_doc(
@@ -1068,7 +1077,7 @@ def test_npa_asserted_denied_fact_is_unsat():
 
 def test_npa_prunes_model_assignments_and_entails():
     # `p exactly 1` over Val = {v1, v2}; NPA denies p(x, v1) → v2
-    from yamlpyowl_spark.operators.dlreason import OWL, RDFS_RANGE
+    from yamlpyowl_spark.vocab import OWL, RDFS_RANGE
 
     base = [
         *_enum(CE + "Val", CE + "v1", CE + "v2"),
@@ -1089,7 +1098,7 @@ def test_npa_prunes_model_assignments_and_entails():
 def test_pairwise_differentfrom_prunes_like_alldifferent():
     # r6b: `h1 owl:differentFrom h2` is a 2-member distinctness group —
     # same certain-violation pruning as the AllDifferent axiom form
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ON_PROPERTY, RDFS_RANGE,
     )
 
@@ -1106,6 +1115,11 @@ def test_pairwise_differentfrom_prunes_like_alldifferent():
     stats = {}
     _solve_doc(base + [(CE + "h1", OWL + "differentFrom", CE + "h2")], stats=stats)
     assert stats.get("n_models", -1) == 0
+    # an AllDifferent axiom may list its members with owl:members
+    # instead of owl:distinctMembers
+    stats_members = {}
+    _solve_doc(base + _alldiff(CE + "h1", CE + "h2", by="members"), stats=stats_members)
+    assert stats_members.get("n_models", -1) == 0
     stats2 = {}
     _solve_doc(base, stats=stats2)
     assert stats2.get("n_models", 0) > 0
@@ -1121,7 +1135,7 @@ XSD_NS = "http://www.w3.org/2001/XMLSchema#"
 def _facet_range(node, base, facet_rows):
     """Entity rows + literal rows for `node onDatatype base;
     withRestrictions (...)` — returns (ent_rows, lit_rows)."""
-    from yamlpyowl_spark.operators.dlreason import OWL, RDF_FIRST, RDF_REST, RDF_NIL
+    from yamlpyowl_spark.vocab import OWL, RDF_FIRST, RDF_REST, RDF_NIL
 
     ent = [
         (node, OWL + "onDatatype", base),
@@ -1140,7 +1154,7 @@ def _facet_range(node, base, facet_rows):
 
 def _csp_scaffold():
     """A minimal var-bearing doc so _solve_doc actually searches."""
-    from yamlpyowl_spark.operators.dlreason import OWL, RDFS_DOMAIN, RDFS_RANGE
+    from yamlpyowl_spark.vocab import OWL, RDFS_DOMAIN, RDFS_RANGE
 
     return [
         *_enum(CE + "Person", CE + "a", CE + "b"),
@@ -1153,7 +1167,8 @@ def _csp_scaffold():
 def test_avf_facet_violation_prunes_all_models():
     # x typed by [∀hasAge.(integer < 65)] with hasAge "70": the data
     # value is outside the range in EVERY model → unsat (Pellet raises)
-    from yamlpyowl_spark.operators.dlreason import OWL, OWL_ON_PROPERTY, _solve_doc
+    from yamlpyowl_spark.vocab import OWL, OWL_ON_PROPERTY
+    from yamlpyowl_spark.operators.dlreason import _solve_doc
 
     ent_r, lit_r = _facet_range("_:dr", XSD_NS + "integer",
                                 [(XSD_NS + "maxExclusive", "65")])
@@ -1175,7 +1190,8 @@ def test_avf_facet_violation_prunes_all_models():
 def test_svf_facet_witness_decides_models():
     # x typed by [∃hasAge.(integer ≥ 18)]: "30" witnesses (models
     # survive); "7" fails and the conservative dialect withholds models
-    from yamlpyowl_spark.operators.dlreason import OWL, OWL_ON_PROPERTY, OWL_SOME_VALUES_FROM, _solve_doc
+    from yamlpyowl_spark.vocab import OWL, OWL_ON_PROPERTY, OWL_SOME_VALUES_FROM
+    from yamlpyowl_spark.operators.dlreason import _solve_doc
 
     ent_r, lit_r = _facet_range("_:dr", XSD_NS + "integer",
                                 [(XSD_NS + "minInclusive", "18")])
@@ -1198,7 +1214,8 @@ def test_max_qualified_data_range_counts_canonical_values():
     # [hasAge max 1 over (integer ≥ 0)]: "30" + "40" = two provably
     # different in-range values → unsat; "30" + "30.00" denote ONE
     # canonical value → fine
-    from yamlpyowl_spark.operators.dlreason import OWL, OWL_ON_PROPERTY, _solve_doc
+    from yamlpyowl_spark.vocab import OWL, OWL_ON_PROPERTY
+    from yamlpyowl_spark.operators.dlreason import _solve_doc
 
     ent_r, lit_r = _facet_range("_:dr", XSD_NS + "integer",
                                 [(XSD_NS + "minInclusive", "0")])
@@ -1223,7 +1240,8 @@ def test_max_qualified_data_range_counts_canonical_values():
 def test_parseable_facet_range_not_flagged_unparseable_still_is(spark):
     # a decodable range produces NO dlUnsupportedConstruct diagnostic;
     # an unknown facet on the same shape still flags loudly
-    from yamlpyowl_spark.operators.dlreason import OWL, YPO_DL_UNSUPPORTED, dl_model_search
+    from yamlpyowl_spark.vocab import OWL
+    from yamlpyowl_spark.operators.dlreason import YPO_DL_UNSUPPORTED, dl_model_search
 
     E2 = "http://ex.org/facetdoc#"
     schema = ("subj string, pred string, obj string, obj_is_literal boolean, "
@@ -1252,9 +1270,9 @@ def test_backtracking_recheck_after_prune():
     (not treated as cached-clean) after the backtrack assigns h2;
     injectivity then pins b away from h2. Exact model set asserted —
     a stale-verdict bug would add or drop a model."""
-    from yamlpyowl_spark.operators.dlreason import (
+    from yamlpyowl_spark.vocab import (
         OWL, OWL_ALL_DIFFERENT, OWL_DISTINCT_MEMBERS, OWL_FUNCTIONAL,
-        OWL_HAS_VALUE, OWL_INV_FUNCTIONAL, OWL_ON_PROPERTY, OWL_NOTHING,
+        OWL_HAS_VALUE, OWL_INVERSE_FUNCTIONAL, OWL_ON_PROPERTY, OWL_NOTHING,
         RDF_FIRST, RDF_NIL, RDF_REST, RDFS_DOMAIN, RDFS_RANGE,
     )
 
@@ -1263,7 +1281,7 @@ def test_backtracking_recheck_after_prune():
         *_enum(CE + "Man", CE + "a", CE + "b"),
         *_enum(CE + "House", CE + "h1", CE + "h2"),
         (P, RDF_TYPE, OWL_FUNCTIONAL),
-        (P, RDF_TYPE, OWL_INV_FUNCTIONAL),
+        (P, RDF_TYPE, OWL_INVERSE_FUNCTIONAL),
         (P, RDFS_DOMAIN, CE + "Man"),
         (P, RDFS_RANGE, CE + "House"),
         (CE + "a", RDF_TYPE, "_:r"),

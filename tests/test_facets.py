@@ -3,32 +3,17 @@
 
 import pytest
 
+from yamlpyowl_spark import vocab as V
 from yamlpyowl_spark.operators import facets as FX
+from yamlpyowl_spark.operators.owldoc import DocModel
 
-XSD = FX.XSD
-OWL = FX.OWL
+XSD = V.XSD
+OWL = V.OWL
 
 
-class _M:
-    """Minimal doc model: .obj/.rdf_list/.spo over (s, p, o) rows."""
-
-    def __init__(self, rows):
-        self.spo = {}
-        for s, p, o in rows:
-            self.spo.setdefault((s, p), []).append(o)
-
-    def obj(self, s, p):
-        v = self.spo.get((s, p))
-        return v[0] if v else None
-
-    def rdf_list(self, node):
-        out = []
-        while node and node != FX.RDF + "nil":
-            head = self.obj(node, FX.RDF_FIRST)
-            if head is not None:
-                out.append(head)
-            node = self.obj(node, FX.RDF_REST)
-        return out
+def _M(rows):
+    """The doc model of (s, p, o) rows; facet bounds are the literals."""
+    return DocModel((s, p, o, p in FX.FACET_PREDS) for s, p, o in rows)
 
 
 def _range_model(base, facet_rows):
@@ -38,8 +23,8 @@ def _range_model(base, facet_rows):
     ]
     for i, (facet, bound) in enumerate(facet_rows):
         rows += [
-            (f"_:l{i}", FX.RDF_FIRST, f"_:f{i}"),
-            (f"_:l{i}", FX.RDF_REST, f"_:l{i + 1}" if i + 1 < len(facet_rows) else FX.RDF + "nil"),
+            (f"_:l{i}", V.RDF_FIRST, f"_:f{i}"),
+            (f"_:l{i}", V.RDF_REST, f"_:l{i + 1}" if i + 1 < len(facet_rows) else V.RDF_NIL),
             (f"_:f{i}", facet, bound),
         ]
     return _M(rows)

@@ -4,16 +4,8 @@ operator on one representative per content class."""
 
 import pytest
 
-from yamlpyowl_spark.operators.dlreason import (
-    OWL,
-    OWL_ON_CLASS,
-    OWL_ON_PROPERTY,
-    RDF_FIRST,
-    RDF_NIL,
-    RDF_REST,
-    RDFS_RANGE,
-    dl_model_search,
-)
+from yamlpyowl_spark.operators.dlreason import OWL_ON_CLASS, dl_model_search
+from yamlpyowl_spark.vocab import OWL, OWL_ON_PROPERTY, RDF_FIRST, RDF_NIL, RDF_REST, RDFS_RANGE
 from yamlpyowl_spark.operators.isomorph import reason_per_isomorph
 from yamlpyowl_spark.operators.owlrl import owlrl_materialize
 from yamlpyowl_spark import vocab as V

@@ -549,6 +549,15 @@ def test_negative_property_assertion_violation():
         T(E + "a", E + "p", E + "b"),
     ))
     assert (E + "a", V.YPO + "propertyViolation", E + "p", False) in got
+    # a data NPA names its denied literal with owl:targetValue
+    got = _infer_doc(rows(
+        T("_:npa", V.RDF_TYPE, OWL + "NegativePropertyAssertion"),
+        T("_:npa", OWL + "sourceIndividual", E + "a"),
+        T("_:npa", OWL + "assertionProperty", E + "age"),
+        T("_:npa", OWL + "targetValue", "42", True),
+        T(E + "a", E + "age", "42", True),
+    ))
+    assert (E + "a", V.YPO + "propertyViolation", E + "age", False) in got
 
 
 def test_negative_property_assertion_catches_derived_fact():

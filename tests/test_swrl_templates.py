@@ -46,14 +46,12 @@ def test_synth_keys_match_encoder():
     def text(src):
         return compile_rule("D#", *_parse_swrl(src))
 
-    rules, bad = swrl._doc_rules([("D#", V.RDF_TYPE, "D#p", V.OWL_TRANSITIVE)])
-    assert not bad
-    assert rules == [("D#", text("p(?x, ?y), p(?y, ?z) -> p(?x, ?z)"))]
-    rules, bad = swrl._doc_rules([("D#", V.OWL_INVERSE_OF, "D#q", "D#p")])
-    assert not bad
+    rules = list(swrl._doc_rules([("D#", V.RDF_TYPE, "D#p", V.OWL_TRANSITIVE)]))
+    assert rules == [("D#", text("p(?x, ?y), p(?y, ?z) -> p(?x, ?z)"), None)]
+    rules = list(swrl._doc_rules([("D#", V.OWL_INVERSE_OF, "D#q", "D#p")]))
     assert rules == [
-        ("D#", text("p(?x, ?y) -> q(?y, ?x)")),
-        ("D#", text("q(?x, ?y) -> p(?y, ?x)")),
+        ("D#", text("p(?x, ?y) -> q(?y, ?x)"), None),
+        ("D#", text("q(?x, ?y) -> p(?y, ?x)"), None),
     ]
 
 
@@ -63,9 +61,9 @@ def test_hundred_docs_one_template(spark):
         rows.extend(_doc(f"http://ex.org/d{i}#"))
     triples = spark.createDataFrame(rows, TRIPLE_COLS)
 
-    rules, bad = swrl._doc_rules(swrl._rule_rel(triples).collect())
+    rules = list(swrl._doc_rules(swrl._rule_rel(triples).collect()))
     # 120 documents, 120 rule instances, each compiled for its document
-    assert not bad
+    assert all(rule and why is None for _, rule, why in rules)
     assert len(rules) == 120
 
     inferred = forward_chain(triples)

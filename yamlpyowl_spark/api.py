@@ -26,6 +26,7 @@ from typing import Optional, Set
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .operators.owldoc import DocModel
 from .operators.sparql import make_query as _make_query
 from .operators.swrl import forward_chain
 from .parser.document import DocumentParser
@@ -423,32 +424,18 @@ class OntologyManager:
     # owlready-shaped read surface: om.onto / om.world / expression decode
     # ------------------------------------------------------------------
 
-    def _blank_map(self) -> dict:
-        """(subj, pred) → [obj] for every blank-node-subject triple of
-        this (single) document — collected once, cached; anonymous class
-        expressions and RDF lists are decoded driver-side from it.
-        Mutations/reasoning never rewrite existing blank nodes, so the
-        cache stays valid across them."""
+    def _blank_model(self) -> DocModel:
+        """The blank-node-subject triples of this (single) document —
+        collected once, cached; anonymous class expressions and RDF
+        lists are decoded driver-side from them. Mutations/reasoning
+        never rewrite existing blank nodes, so the cache stays valid
+        across them."""
         if getattr(self, "_blank_cache", None) is None:
-            m: dict = {}
-            for r in self.triples.filter(F.col("subj").startswith("_:")).collect():
-                m.setdefault((r["subj"], r["pred"]), []).append(r["obj"])
-            self._blank_cache = m
+            rows = self.triples.filter(F.col("subj").startswith("_:"))
+            self._blank_cache = DocModel(
+                rows.select("subj", "pred", "obj", "obj_is_literal").collect()
+            )
         return self._blank_cache
-
-    def _rdf_list(self, head: str) -> list:
-        from . import vocab as V
-
-        m = self._blank_map()
-        out, seen = [], set()
-        while head and head != V.RDF_NIL and head not in seen:
-            seen.add(head)
-            first = m.get((head, V.RDF_FIRST))
-            if first:
-                out.append(first[0])
-            rest = m.get((head, V.RDF_REST))
-            head = rest[0] if rest else None
-        return out
 
     def _resolve_ref(self, ref: str):
         """IRI or blank-node ref → EntityHandle or ClassConstruct."""
@@ -461,36 +448,33 @@ class OntologyManager:
             if local in self.n:
                 return getattr(self.n, local)
             return EntityHandle(local, ref, "entity", self)
-        m = self._blank_map()
+        m = self._blank_model()
         for key, kind in (
             (V.OWL_UNION_OF, "Or"),
             (V.OWL_INTERSECTION_OF, "And"),
             (V.OWL_ONE_OF, "OneOf"),
         ):
-            head = m.get((ref, key))
-            if head:
-                return ClassConstruct(
-                    kind, [self._resolve_ref(x) for x in self._rdf_list(head[0])]
-                )
-        comp = m.get((ref, V.OWL_COMPLEMENT_OF))
-        if comp:
-            return ClassConstruct("Not", [self._resolve_ref(comp[0])])
-        on_p = m.get((ref, V.OWL_ON_PROPERTY))
-        if on_p:
-            prop = self._resolve_ref(on_p[0])
-            sv = m.get((ref, V.OWL_SOME_VALUES_FROM))
-            if sv:
-                return Restriction("some", prop, self._resolve_ref(sv[0]))
-            av = m.get((ref, V.OWL + "allValuesFrom"))
-            if av:
-                return Restriction("only", prop, self._resolve_ref(av[0]))
-            hv = m.get((ref, V.OWL_HAS_VALUE))
-            if hv:
-                return Restriction("value", prop, self._resolve_ref(hv[0]))
-        inv = m.get((ref, V.OWL_INVERSE_OF))
-        if inv:
+            head = m.obj(ref, key)
+            if head is not None:
+                return ClassConstruct(kind, [self._resolve_ref(x) for x in m.rdf_list(head)])
+        comp = m.obj(ref, V.OWL_COMPLEMENT_OF)
+        if comp is not None:
+            return ClassConstruct("Not", [self._resolve_ref(comp)])
+        on_p = m.obj(ref, V.OWL_ON_PROPERTY)
+        if on_p is not None:
+            prop = self._resolve_ref(on_p)
+            for key, kind in (
+                (V.OWL_SOME_VALUES_FROM, "some"),
+                (V.OWL + "allValuesFrom", "only"),
+                (V.OWL_HAS_VALUE, "value"),
+            ):
+                filler = m.obj(ref, key)
+                if filler is not None:
+                    return Restriction(kind, prop, self._resolve_ref(filler))
+        inv = m.obj(ref, V.OWL_INVERSE_OF)
+        if inv is not None:
             # anonymous Inverse(p) property node inside a restriction
-            return ClassConstruct("Inverse", [self._resolve_ref(inv[0])])
+            return ClassConstruct("Inverse", [self._resolve_ref(inv)])
         return EntityHandle(ref, ref, "restriction", self)
 
     @property

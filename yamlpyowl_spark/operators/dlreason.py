@@ -17,7 +17,9 @@ Per document:
 
 1. decode enumerated classes (``C equivalentClass [oneOf l]``),
    functional / inverse-functional properties, ``inverseOf`` pairs,
-   domains / ranges, asserted facts, ``AllDifferent`` axioms, and
+   domains / ranges, asserted facts, ``AllDifferent`` axioms (read
+   through :class:`.owldoc.DocModel`; the axioms shared with
+   :mod:`owlrl` come from :func:`.owldoc.axioms`), and
    restriction blank-node trees (``someValuesFrom`` / ``hasValue`` /
    ``allValuesFrom``, possibly over anonymous ``Inverse(p)``
    properties);
@@ -94,26 +96,7 @@ from pyspark.sql import DataFrame, functions as F
 from .. import vocab as V
 from . import facets as _FX
 from .isomorph import per_document
-
-RDF_FIRST = V.RDF + "first"
-RDF_REST = V.RDF + "rest"
-RDF_NIL = V.RDF + "nil"
-OWL = "http://www.w3.org/2002/07/owl#"
-OWL_EQUIVALENT_CLASS = OWL + "equivalentClass"
-OWL_ONE_OF = OWL + "oneOf"
-OWL_ON_PROPERTY = OWL + "onProperty"
-OWL_SOME_VALUES_FROM = OWL + "someValuesFrom"
-OWL_ALL_VALUES_FROM = OWL + "allValuesFrom"
-OWL_HAS_VALUE = OWL + "hasValue"
-OWL_ALL_DIFFERENT = OWL + "AllDifferent"
-OWL_DISTINCT_MEMBERS = OWL + "distinctMembers"
-OWL_NAMED_INDIVIDUAL = OWL + "NamedIndividual"
-OWL_NOTHING = OWL + "Nothing"
-OWL_THING = OWL + "Thing"
-OWL_FUNCTIONAL = OWL + "FunctionalProperty"
-OWL_INV_FUNCTIONAL = OWL + "InverseFunctionalProperty"
-RDFS_DOMAIN = V.RDFS + "domain"
-RDFS_RANGE = V.RDFS + "range"
+from .owldoc import DocModel, axioms
 
 # DL constructs the CSP fragment does NOT reason over produce an
 # explicit diagnostic triple (doc_iri ypo:dlUnsupportedConstruct
@@ -134,19 +117,20 @@ _FACET_VOCAB = frozenset(
     (_FX.ON_DATATYPE, _FX.WITH_RESTRICTIONS, _FX.ON_DATA_RANGE)
 )
 
-OWL_CARDINALITY = OWL + "cardinality"
-OWL_MIN_CARDINALITY = OWL + "minCardinality"
-OWL_MAX_CARDINALITY = OWL + "maxCardinality"
-OWL_QUALIFIED_CARDINALITY = OWL + "qualifiedCardinality"
-OWL_MIN_QUALIFIED_CARDINALITY = OWL + "minQualifiedCardinality"
-OWL_MAX_QUALIFIED_CARDINALITY = OWL + "maxQualifiedCardinality"
-OWL_ON_CLASS = OWL + "onClass"
-OWL_HAS_SELF = OWL + "hasSelf"
-OWL_IRREFLEXIVE = OWL + "IrreflexiveProperty"
-OWL_ASYMMETRIC = OWL + "AsymmetricProperty"
+OWL_ALL_VALUES_FROM = V.OWL + "allValuesFrom"
+OWL_CARDINALITY = V.OWL + "cardinality"
+OWL_MIN_CARDINALITY = V.OWL + "minCardinality"
+OWL_MAX_CARDINALITY = V.OWL + "maxCardinality"
+OWL_QUALIFIED_CARDINALITY = V.OWL + "qualifiedCardinality"
+OWL_MIN_QUALIFIED_CARDINALITY = V.OWL + "minQualifiedCardinality"
+OWL_MAX_QUALIFIED_CARDINALITY = V.OWL + "maxQualifiedCardinality"
+OWL_ON_CLASS = V.OWL + "onClass"
+OWL_HAS_SELF = V.OWL + "hasSelf"
+OWL_IRREFLEXIVE = V.OWL + "IrreflexiveProperty"
+OWL_ASYMMETRIC = V.OWL + "AsymmetricProperty"
 
 
-def _card_int(m: "_DocModel", node: str, key: str) -> Optional[int]:
+def _card_int(m: DocModel, node: str, key: str) -> Optional[int]:
     v = m.obj(node, key)
     if v is None:
         return None
@@ -164,137 +148,68 @@ class UnsupportedDLError(ValueError):
     (mirror of swrl.UnsupportedSWRLError for the model-search side)."""
 
 
-class _DocModel:
-    """Decoded view of one document's triples. The CSP core builds it
-    over entity triples only; the facet path (r6c) builds a second,
-    combined instance (``fm``) that also holds the literal rows —
-    facet bounds and data values."""
-
-    def __init__(self, rows: List[Tuple[str, str, str]]):
-        self.spo: Dict[Tuple[str, str], List[str]] = {}
-        self.po: Dict[Tuple[str, str], List[str]] = {}
-        for s, p, o in rows:
-            self.spo.setdefault((s, p), []).append(o)
-            self.po.setdefault((p, o), []).append(s)
-
-    def objs(self, s: str, p: str) -> List[str]:
-        return self.spo.get((s, p), [])
-
-    def obj(self, s: str, p: str) -> Optional[str]:
-        v = self.spo.get((s, p))
-        return v[0] if v else None
-
-    def subjects(self, p: str, o: str) -> List[str]:
-        return self.po.get((p, o), [])
-
-    def rdf_list(self, node: str) -> List[str]:
-        out, seen = [], set()
-        while node and node != RDF_NIL:
-            if node in seen:  # corrupt/cyclic list must not hang a task
-                break
-            seen.add(node)
-            head = self.obj(node, RDF_FIRST)
-            if head is not None:
-                out.append(head)
-            node = self.obj(node, RDF_REST)
-        return out
+def _model(rows, lit_rows=()) -> DocModel:
+    """The model of entity ``rows`` then literal ``lit_rows``, both
+    ``(subj, pred, obj)`` tuples."""
+    return DocModel([*((s, p, o, False) for s, p, o in rows), *((s, p, o, True) for s, p, o in lit_rows)])
 
 
-def _decode(rows):
-    """→ (enums, functional, invfunctional, inverse_pairs, domains,
-    ranges, facts, restrictions, all_different)"""
-    m = _DocModel(rows)
-
+def _decode(m: DocModel):
+    """→ (enums, functional, invfunctional, inverse_of, domains, ranges,
+    facts, restrictions, irreflexive, asymmetric, equiv_restr, npas,
+    axioms)"""
+    # enumerated classes (C equivalentClass [oneOf l]) and the
+    # restriction-DEFINED classes (C equivalentClass [onProperty ...])
+    # whose membership is dynamic — decided per model via `holds`
     enums: Dict[str, List[str]] = {}
-    for (s, p), objs in list(m.spo.items()):
-        if p != OWL_EQUIVALENT_CLASS:
+    equiv_restr: Dict[str, str] = {}
+    for (s, p), objs in m.spo.items():
+        if p != V.OWL_EQUIVALENT_CLASS:
             continue
-        for o in objs:
-            one = m.obj(o, OWL_ONE_OF)
+        for o, _ in objs:
+            one = m.obj(o, V.OWL_ONE_OF)
             if one:
                 enums[s] = m.rdf_list(one)
+            if not s.startswith("_:") and o.startswith("_:") and m.obj(o, V.OWL_ON_PROPERTY):
+                equiv_restr[s] = o
 
-    functional = {s for s in m.subjects(V.RDF_TYPE, OWL_FUNCTIONAL)}
-    invfunctional = {s for s in m.subjects(V.RDF_TYPE, OWL_INV_FUNCTIONAL)}
+    functional = set(m.subjects(V.RDF_TYPE, V.OWL_FUNCTIONAL))
+    invfunctional = set(m.subjects(V.RDF_TYPE, V.OWL_INVERSE_FUNCTIONAL))
     # named_inverse: declared property↔property pairs only — anonymous
     # Inverse(p) blank nodes (from restriction trees) must NOT shadow
     # the declared inverse of p
     inverse_of: Dict[str, str] = {}
     for (s, p), objs in m.spo.items():
         if p == V.OWL_INVERSE_OF:
-            for o in objs:
+            for o, _ in objs:
                 if not s.startswith("_:"):
                     inverse_of[s] = o
                     inverse_of.setdefault(o, s)
 
-    domains = {s: m.obj(s, RDFS_DOMAIN) for s in functional | invfunctional}
-    ranges = {s: m.obj(s, RDFS_RANGE) for s in functional | invfunctional}
+    domains = {s: m.obj(s, V.RDFS_DOMAIN) for s in functional | invfunctional}
+    ranges = {s: m.obj(s, V.RDFS_RANGE) for s in functional | invfunctional}
 
     # restriction trees: individual rdf:type _:r  /  class subClassOf _:r
     restrictions: List[Tuple[str, str]] = []  # (subject entity/class-member, blank root)
-    members_of: Dict[str, List[str]] = {}
-    for cls, mem in enums.items():
-        members_of[cls] = mem
     for (s, p), objs in m.spo.items():
         if p == V.RDF_TYPE and not s.startswith("_:"):
-            for o in objs:
-                if o.startswith("_:") and m.obj(o, OWL_ON_PROPERTY):
+            for o, _ in objs:
+                if o.startswith("_:") and m.obj(o, V.OWL_ON_PROPERTY):
                     restrictions.append((s, o))
         elif p == V.RDFS_SUBCLASSOF and not s.startswith("_:"):
-            for o in objs:
-                if o.startswith("_:") and m.obj(o, OWL_ON_PROPERTY):
-                    for member in members_of.get(s, []):
+            for o, _ in objs:
+                if o.startswith("_:") and m.obj(o, V.OWL_ON_PROPERTY):
+                    for member in enums.get(s, []):
                         restrictions.append((member, o))
 
-    # disjointness axioms (r6): class pairs, property pairs, and the
-    # restriction-DEFINED classes (C equivalentClass [onProperty ...])
-    # whose membership is dynamic — decided per model via `holds`
-    disjoint_pairs: List[Tuple[str, str]] = []
-    prop_disjoint: List[Tuple[str, str]] = []
-    equiv_restr: Dict[str, str] = {}
-    keys: List[Tuple[str, List[str]]] = []  # C owl:hasKey (p1..pn)
-    for (s, p), objs in m.spo.items():
-        if s.startswith("_:"):
-            continue
-        for o in objs:
-            if p == OWL + "disjointWith" and not o.startswith("_:"):
-                disjoint_pairs.append((s, o))
-            elif p == OWL + "propertyDisjointWith" and not o.startswith("_:"):
-                prop_disjoint.append((s, o))
-            elif p == OWL + "disjointUnionOf" and o.startswith("_:"):
-                # r6b: the pairwise-disjointness half of cls-duo (the
-                # Ci ⊑ C half lives in owlrl's cax-sco feed)
-                parts = [c for c in m.rdf_list(o) if not c.startswith("_:")]
-                for i1 in range(len(parts)):
-                    for i2 in range(i1 + 1, len(parts)):
-                        disjoint_pairs.append((parts[i1], parts[i2]))
-            elif p == OWL + "hasKey":
-                ps = m.rdf_list(o) if o.startswith("_:") else [o]
-                if ps and not any(k.startswith("_:") for k in ps):
-                    keys.append((s, ps))
-            elif p == OWL_EQUIVALENT_CLASS and o.startswith("_:"):
-                if m.obj(o, OWL_ON_PROPERTY):
-                    equiv_restr[s] = o
-
-    # n-ary axiom nodes (blank subjects typed with the axiom class)
+    # disjointness, keys, distinctness groups and NPAs: the decode shared
+    # with owlrl. An NPA prunes on its (first) targetIndividual — data
+    # targets are literals, outside the CSP.
+    ax = axioms(m)
     npas: List[Tuple[str, str, str]] = []
-    for node in m.subjects(V.RDF_TYPE, OWL + "AllDisjointClasses"):
-        lst = m.obj(node, OWL + "members")
-        members = [c for c in (m.rdf_list(lst) if lst else []) if not c.startswith("_:")]
-        for i1 in range(len(members)):
-            for i2 in range(i1 + 1, len(members)):
-                disjoint_pairs.append((members[i1], members[i2]))
-    for node in m.subjects(V.RDF_TYPE, OWL + "AllDisjointProperties"):
-        lst = m.obj(node, OWL + "members")
-        members = [c for c in (m.rdf_list(lst) if lst else []) if not c.startswith("_:")]
-        for i1 in range(len(members)):
-            for i2 in range(i1 + 1, len(members)):
-                prop_disjoint.append((members[i1], members[i2]))
-    for node in m.subjects(V.RDF_TYPE, OWL + "NegativePropertyAssertion"):
-        src = m.obj(node, OWL + "sourceIndividual")
-        ap = m.obj(node, OWL + "assertionProperty")
-        tgt = m.obj(node, OWL + "targetIndividual")
-        if src and ap and tgt:
+    for node, src, ap in ax.npas:
+        tgt = m.obj(node, V.OWL + "targetIndividual")
+        if tgt:
             npas.append((src, ap, tgt))
 
     # asserted entity facts for the declared properties — including the
@@ -303,42 +218,29 @@ def _decode(rows):
     # disjoint-property pairs route through val() too, so their asserted
     # facts must reach the ground-fact map
     props = functional | invfunctional | set(inverse_of)
-    for p1, p2 in prop_disjoint:
+    for p1, p2 in ax.prop_disjoint:
         props.add(p1)
         props.add(p2)
-    for _cls, ps in keys:
+    for _cls, ps in ax.keys:
         props.update(ps)
     for _src, ap, _tgt in npas:
         props.add(ap)
     for _s, rnode in restrictions:
-        on_p = m.obj(rnode, OWL_ON_PROPERTY)
+        on_p = m.obj(rnode, V.OWL_ON_PROPERTY)
         if on_p and not on_p.startswith("_:"):
             props.add(on_p)
     facts: Dict[Tuple[str, str], str] = {}
     for (s, p), objs in m.spo.items():
         if p in props:
-            for o in objs:
+            for o, _ in objs:
                 facts[(p, s)] = o
-
-    all_different: List[List[str]] = []
-    for ad in m.subjects(V.RDF_TYPE, OWL_ALL_DIFFERENT):
-        lst = m.obj(ad, OWL_DISTINCT_MEMBERS) or m.obj(ad, OWL + "members")
-        if lst:
-            all_different.append(m.rdf_list(lst))
-    # pairwise owl:differentFrom = a 2-member AllDifferent group (r6b)
-    for (s, p), objs in m.spo.items():
-        if p == OWL + "differentFrom" and not s.startswith("_:"):
-            for o in objs:
-                if not o.startswith("_:"):
-                    all_different.append([s, o])
 
     irreflexive = set(m.subjects(V.RDF_TYPE, OWL_IRREFLEXIVE))
     asymmetric = set(m.subjects(V.RDF_TYPE, OWL_ASYMMETRIC))
 
     return (
-        m, enums, functional, invfunctional, inverse_of, domains, ranges,
-        facts, restrictions, all_different, irreflexive, asymmetric,
-        disjoint_pairs, prop_disjoint, equiv_restr, keys, npas,
+        enums, functional, invfunctional, inverse_of, domains, ranges, facts,
+        restrictions, irreflexive, asymmetric, equiv_restr, npas, ax,
     )
 
 
@@ -364,7 +266,8 @@ def _solve_doc(
     lit_facts: Dict[Tuple[str, str], List[str]] = {}
     for s_l, p_l, o_l in lit_rows:
         lit_facts.setdefault((p_l, s_l), []).append(o_l)
-    fm = _DocModel([*rows, *lit_rows])
+    m = _model(rows)
+    fm = _model(rows, lit_rows) if lit_rows else m
 
     _rng_memo: dict = {}
     _RNG_MISS = object()
@@ -389,24 +292,10 @@ def _solve_doc(
         return r
 
     (
-        m,
-        enums,
-        functional,
-        invfunctional,
-        inverse_of,
-        domains,
-        ranges,
-        facts,
-        restrictions,
-        all_different,
-        irreflexive,
-        asymmetric,
-        disjoint_pairs,
-        prop_disjoint,
-        equiv_restr,
-        keys,
-        npas,
-    ) = _decode(rows)
+        enums, functional, invfunctional, inverse_of, domains, ranges, facts,
+        restrictions, irreflexive, asymmetric, equiv_restr, npas, ax,
+    ) = _decode(m)
+    disjoint_pairs, prop_disjoint, keys = ax.disjoint, ax.prop_disjoint, ax.keys
 
     inferred: Set[Tuple[str, str, str]] = set()
 
@@ -436,7 +325,7 @@ def _solve_doc(
     # single-valued representation; the min side of `exactly 1` is
     # enforced by the cardinality checker pruning the Nothing branch)
     for s, rnode in sorted(restrictions):
-        on_p = m.obj(rnode, OWL_ON_PROPERTY)
+        on_p = m.obj(rnode, V.OWL_ON_PROPERTY)
         if not on_p or on_p.startswith("_:") or (on_p, s) in variables:
             continue
         if inverse_of.get(on_p) in var_props:
@@ -449,7 +338,7 @@ def _solve_doc(
         if eff_max == 1 or (qmaxc == 1 and on_c is not None):
             # (qualified) max-1: the single-valued representation over
             # the property's enumerated range
-            rng_cls = m.obj(on_p, RDFS_RANGE)
+            rng_cls = m.obj(on_p, V.RDFS_RANGE)
             if rng_cls in enums:
                 var_props.add(on_p)
                 variables[(on_p, s)] = list(enums[rng_cls])
@@ -475,10 +364,10 @@ def _solve_doc(
     pinned: Set[Tuple[str, str]] = set()
     for (p, s), o in facts.items():
         if (p, s) in variables:
-            variables[(p, s)] = [] if o == OWL_NOTHING else [o]
+            variables[(p, s)] = [] if o == V.OWL_NOTHING else [o]
             pinned.add((p, s))
         q = inverse_of.get(p)
-        if q is not None and o != OWL_NOTHING and (q, o) in variables:
+        if q is not None and o != V.OWL_NOTHING and (q, o) in variables:
             variables[(q, o)] = [s]
             pinned.add((q, o))
 
@@ -515,7 +404,7 @@ def _solve_doc(
 
     def val(p: str, s: str):
         """Current value of p(s): assigned var, else ground fact, else
-        via declared inverse; None if unknown, OWL_NOTHING if absent."""
+        via declared inverse; None if unknown, owl:Nothing if absent."""
         if (p, s) in variables:
             return _rd((p, s))
         if (p, s) in ground:
@@ -534,7 +423,7 @@ def _solve_doc(
             for qv in qvars:
                 if _rd(qv) is None and s in variables[qv]:
                     return None
-            return OWL_NOTHING
+            return V.OWL_NOTHING
         return None
 
     def prop_subjects(p: str) -> List[str]:
@@ -589,7 +478,7 @@ def _solve_doc(
         """True/False/None(=unknown) — does `entity` satisfy the class
         expression rooted at `node`?"""
         if not node.startswith("_:"):
-            if node == OWL_THING:
+            if node == V.OWL_THING:
                 return True
             if node in enums:
                 return entity in enums[node]
@@ -600,7 +489,7 @@ def _solve_doc(
             return entity in ts or None
         dec = _node_decode.get(node)
         if dec is None:
-            on_p0 = m.obj(node, OWL_ON_PROPERTY)
+            on_p0 = m.obj(node, V.OWL_ON_PROPERTY)
             # anonymous Inverse(q): on_p is a blank node with owl:inverseOf q
             iq = (
                 m.obj(on_p0, V.OWL_INVERSE_OF)
@@ -610,10 +499,10 @@ def _solve_doc(
             dec = (
                 on_p0,
                 iq,
-                m.obj(node, OWL_HAS_VALUE),
+                m.obj(node, V.OWL_HAS_VALUE),
                 m.obj(node, OWL_HAS_SELF),
                 m.obj(node, OWL_ALL_VALUES_FROM),
-                m.obj(node, OWL_SOME_VALUES_FROM),
+                m.obj(node, V.OWL_SOME_VALUES_FROM),
             )
             _node_decode[node] = dec
         on_p, inv_q, hv, hs, av, sv = dec
@@ -642,7 +531,7 @@ def _solve_doc(
             # class-expression recursion below.
             rng_av = data_range_of(av)
             if rng_av is not None:
-                if m.objs(entity, on_p):
+                if (entity, on_p) in m.spo:
                     return False  # entity value under a data-only range
                 return all(
                     _FX.literal_in_range(lex, rng_av)
@@ -668,7 +557,7 @@ def _solve_doc(
             got = val(on_p, entity)
             if got is None:
                 return None
-            if got == OWL_NOTHING:
+            if got == V.OWL_NOTHING:
                 return True
             return holds(got, av)
         if sv is not None:
@@ -693,7 +582,7 @@ def _solve_doc(
                     got = val(r, entity)
                     if got is None:
                         return None
-                    if got == OWL_NOTHING:
+                    if got == V.OWL_NOTHING:
                         return False
                     return holds(got, sv)
                 # fallback: enumerate candidate subjects y of q
@@ -713,7 +602,7 @@ def _solve_doc(
             got = val(on_p, entity)
             if got is None:
                 return None
-            if got == OWL_NOTHING:
+            if got == V.OWL_NOTHING:
                 return False
             return holds(got, sv)
         # bounds read through fm: hand-authored cardinality numbers
@@ -743,19 +632,19 @@ def _solve_doc(
                 return None  # inverse cardinality: undecidable here
             lo = card if card is not None else minc
             hi = card if card is not None else maxc
-            names = set(m.objs(entity, on_p))
+            names = {o for o, _ in m.spo.get((entity, on_p), ())}
             unknown = False
             if (on_p, entity) in variables:
                 a = _rd((on_p, entity))
                 if a is None:
                     unknown = True
-                elif a != OWL_NOTHING:
+                elif a != V.OWL_NOTHING:
                     names.add(a)
             elif inverse_of.get(on_p) is not None:
                 got = val(on_p, entity)
                 if got is None:
                     unknown = True
-                elif got != OWL_NOTHING:
+                elif got != V.OWL_NOTHING:
                     names.add(got)
             if hi is not None and _max_distinct(names) > hi:
                 return False
@@ -798,19 +687,19 @@ def _solve_doc(
                 return True
             lo = qcard if qcard is not None else qmin
             hi = qcard if qcard is not None else qmax
-            names = set(m.objs(entity, on_p))
+            names = {o for o, _ in m.spo.get((entity, on_p), ())}
             unknown = False
             if (on_p, entity) in variables:
                 a = _rd((on_p, entity))
                 if a is None:
                     unknown = True
-                elif a != OWL_NOTHING:
+                elif a != V.OWL_NOTHING:
                     names.add(a)
             elif inverse_of.get(on_p) is not None:
                 got = val(on_p, entity)
                 if got is None:
                     unknown = True
-                elif got != OWL_NOTHING:
+                elif got != V.OWL_NOTHING:
                     names.add(got)
             member = {y: holds(y, on_c) for y in names}
             provably = [y for y, h in member.items() if h is True]
@@ -830,7 +719,7 @@ def _solve_doc(
     # when s1 and s2 are explicitly declared different — so the
     # injectivity (all-diff) constraint applies exactly between subject
     # pairs covered by an owl:AllDifferent axiom, never by name alone
-    diff_sets = [set(g) for g in all_different]
+    diff_sets = [set(g) for g in ax.different]
 
     def declared_different(a: str, b: str) -> bool:
         return a != b and any(a in g and b in g for g in diff_sets)
@@ -857,7 +746,7 @@ def _solve_doc(
         individuals.update(members)
     for (s, p), objs in m.spo.items():
         if p == V.RDF_TYPE and not s.startswith("_:"):
-            if any(not o.startswith("_:") for o in objs):
+            if any(not o.startswith("_:") for o, _ in objs):
                 individuals.add(s)
 
     static_unsat = False
@@ -885,7 +774,7 @@ def _solve_doc(
     for p1, p2 in prop_disjoint:
         for (s, p), objs in m.spo.items():
             if p == p1 and not s.startswith("_:"):
-                if set(objs) & set(m.objs(s, p2)):
+                if {o for o, _ in objs} & set(m.objs(s, p2)):
                     static_unsat = True
 
     pd_subjects: List[Tuple[str, str, str]] = []
@@ -968,7 +857,7 @@ def _solve_doc(
                 return False
         for p1, p2, x in pd_subjects:
             v1 = val(p1, x)
-            if v1 is None or v1 == OWL_NOTHING:
+            if v1 is None or v1 == V.OWL_NOTHING:
                 continue
             if v1 == val(p2, x):
                 return False
@@ -983,7 +872,7 @@ def _solve_doc(
             shared_all = True
             for p in ps:
                 va = val(p, a)
-                if va is None or va == OWL_NOTHING or va != val(p, b):
+                if va is None or va == V.OWL_NOTHING or va != val(p, b):
                     shared_all = False
                     break
             if shared_all:
@@ -1002,14 +891,14 @@ def _solve_doc(
         for p in asymmetric:
             for s in prop_subjects(p):
                 got = val(p, s)
-                if got not in (None, OWL_NOTHING) and got != s:
+                if got not in (None, V.OWL_NOTHING) and got != s:
                     if val(p, got) == s:
                         return False
         for p, group in alldiff_groups.items():
             by_val: Dict[str, List[str]] = {}
             for v in group:
                 a = assignment[v]
-                if a is None or a == OWL_NOTHING:
+                if a is None or a == V.OWL_NOTHING:
                     continue
                 for other_subj in by_val.get(a, ()):
                     if declared_different(v[1], other_subj):
@@ -1045,11 +934,11 @@ def _solve_doc(
             models.append(dict(assignment))
             return
         var = order[i]
-        # OWL_NOTHING = "no value" (open world: a functional prop need
+        # owl:Nothing = "no value" (open world: a functional prop need
         # not have a value unless a some-restriction forces one, in
         # which case consistent() prunes the branch) — except for vars
         # pinned by an asserted fact, which certainly HAVE that value
-        cands = variables[var] if var in pinned else variables[var] + [OWL_NOTHING]
+        cands = variables[var] if var in pinned else variables[var] + [V.OWL_NOTHING]
         for cand in cands:
             steps += 1
             if steps > max_steps:
@@ -1077,7 +966,7 @@ def _solve_doc(
         for model in models:
             fs = set()
             for (p, s), o in model.items():
-                if o and o != OWL_NOTHING:
+                if o and o != V.OWL_NOTHING:
                     fs.add((s, p, o))
                     q = inverse_of.get(p)
                     if q is not None and not q.startswith("_:"):
@@ -1112,7 +1001,7 @@ def dl_document(
     # the loud diagnostic naming the construct
     facet_nodes = {(s, p, o) for s, p, o in rows if p in _FACET_VOCAB}
     if facet_nodes:
-        fm = _DocModel(rows + lit_rows)
+        fm = _model(rows, lit_rows)
         for s, p, o in facet_nodes:
             if p == _FX.ON_DATA_RANGE:
                 ok = (

@@ -41,19 +41,16 @@ import re
 from decimal import Decimal, InvalidOperation
 from typing import Optional, Tuple
 
-XSD = "http://www.w3.org/2001/XMLSchema#"
-OWL = "http://www.w3.org/2002/07/owl#"
-RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-RDF_FIRST = RDF + "first"
-RDF_REST = RDF + "rest"
+from .. import vocab as V
+from .owldoc import DocModel
 
-ON_DATATYPE = OWL + "onDatatype"
-WITH_RESTRICTIONS = OWL + "withRestrictions"
-ON_DATA_RANGE = OWL + "onDataRange"
+ON_DATATYPE = V.OWL + "onDatatype"
+WITH_RESTRICTIONS = V.OWL + "withRestrictions"
+ON_DATA_RANGE = V.OWL + "onDataRange"
 
 # base datatypes with a decidable order / lexical space here
 _NUMERIC = frozenset(
-    XSD + n
+    V.XSD + n
     for n in (
         "integer",
         "int",
@@ -76,33 +73,33 @@ _NUMERIC = frozenset(
 _INTEGRAL = frozenset(d for d in _NUMERIC if "decimal" not in d and "float" not in d and "double" not in d)
 # IEEE bases whose lexical space includes NaN/INF/-INF (xsd:decimal's
 # does not)
-_FLOATY = frozenset((XSD + "float", XSD + "double"))
-_STRINGY = frozenset(XSD + n for n in ("string", "normalizedString", "token", "anyURI", "language", "Name", "NCName"))
-_TEMPORAL = frozenset(XSD + n for n in ("dateTime", "date", "time"))
+_FLOATY = frozenset((V.XSD + "float", V.XSD + "double"))
+_STRINGY = frozenset(V.XSD + n for n in ("string", "normalizedString", "token", "anyURI", "language", "Name", "NCName"))
+_TEMPORAL = frozenset(V.XSD + n for n in ("dateTime", "date", "time"))
 SUPPORTED_BASES = _NUMERIC | _STRINGY | _TEMPORAL
 
 _ORDER_FACETS = frozenset(
-    XSD + n for n in ("minInclusive", "maxInclusive", "minExclusive", "maxExclusive")
+    V.XSD + n for n in ("minInclusive", "maxInclusive", "minExclusive", "maxExclusive")
 )
-_LENGTH_FACETS = frozenset(XSD + n for n in ("length", "minLength", "maxLength"))
-_PATTERN = XSD + "pattern"
+_LENGTH_FACETS = frozenset(V.XSD + n for n in ("length", "minLength", "maxLength"))
+_PATTERN = V.XSD + "pattern"
 FACET_PREDS = _ORDER_FACETS | _LENGTH_FACETS | frozenset((_PATTERN,))
 
 # range-table bounds for the bounded integer types: value-space
 # membership, not just lexical shape (xsd:byte "999" is ill-typed)
 _INT_BOUNDS = {
-    XSD + "byte": (-128, 127),
-    XSD + "short": (-32768, 32767),
-    XSD + "int": (-(2**31), 2**31 - 1),
-    XSD + "long": (-(2**63), 2**63 - 1),
-    XSD + "unsignedByte": (0, 255),
-    XSD + "unsignedShort": (0, 65535),
-    XSD + "unsignedInt": (0, 2**32 - 1),
-    XSD + "unsignedLong": (0, 2**64 - 1),
-    XSD + "nonNegativeInteger": (0, None),
-    XSD + "positiveInteger": (1, None),
-    XSD + "nonPositiveInteger": (None, 0),
-    XSD + "negativeInteger": (None, -1),
+    V.XSD + "byte": (-128, 127),
+    V.XSD + "short": (-32768, 32767),
+    V.XSD + "int": (-(2**31), 2**31 - 1),
+    V.XSD + "long": (-(2**63), 2**63 - 1),
+    V.XSD + "unsignedByte": (0, 255),
+    V.XSD + "unsignedShort": (0, 65535),
+    V.XSD + "unsignedInt": (0, 2**32 - 1),
+    V.XSD + "unsignedLong": (0, 2**64 - 1),
+    V.XSD + "nonNegativeInteger": (0, None),
+    V.XSD + "positiveInteger": (1, None),
+    V.XSD + "nonPositiveInteger": (None, 0),
+    V.XSD + "negativeInteger": (None, -1),
 }
 
 
@@ -138,9 +135,9 @@ def canon(lex: str, base_dt: str):
 
         s = lex.strip().replace("Z", "+00:00")
         try:
-            if base_dt == XSD + "date":
+            if base_dt == V.XSD + "date":
                 return _dt.date.fromisoformat(s)
-            if base_dt == XSD + "time":
+            if base_dt == V.XSD + "time":
                 return _dt.time.fromisoformat(s)
             return _dt.datetime.fromisoformat(s)
         except ValueError:
@@ -150,13 +147,12 @@ def canon(lex: str, base_dt: str):
     return None
 
 
-def parse_data_range(m, node: str) -> Optional[Tuple[str, Tuple[Tuple[str, str], ...]]]:
+def parse_data_range(m: DocModel, node: str) -> Optional[Tuple[str, Tuple[Tuple[str, str], ...]]]:
     """Decode the datatype-restriction rooted at blank node ``node``
-    from a doc model ``m`` (duck-typed: ``.obj(s, p)``,
-    ``.rdf_list(node)``, and a ``.spo`` dict keyed ``(s, p)``).
-    Returns ``(base_datatype, ((facet_iri, bound_lexical), ...))`` or
-    ``None`` when any component is outside the supported vocabulary —
-    the caller keeps its loud unsupported-construct path."""
+    of the document ``m``. Returns ``(base_datatype, ((facet_iri,
+    bound_lexical), ...))`` or ``None`` when any component is outside
+    the supported vocabulary — the caller keeps its loud
+    unsupported-construct path."""
     base = m.obj(node, ON_DATATYPE)
     lst = m.obj(node, WITH_RESTRICTIONS)
     if base is None or lst is None or base not in SUPPORTED_BASES:
@@ -166,7 +162,7 @@ def parse_data_range(m, node: str) -> Optional[Tuple[str, Tuple[Tuple[str, str],
         member_preds = [p for (s, p) in m.spo if s == member]
         got_one = False
         for p in member_preds:
-            if p in (RDF_FIRST, RDF_REST):
+            if p in (V.RDF_FIRST, V.RDF_REST):
                 continue
             if p not in FACET_PREDS:
                 return None  # unknown facet — stay loud
@@ -210,7 +206,7 @@ def literal_in_range(lex: str, rng: Tuple[str, Tuple[Tuple[str, str], ...]]) -> 
     for facet, bound in facets:
         if facet in _ORDER_FACETS:
             b = canon(bound, base)
-            name = facet[len(XSD):]
+            name = facet[len(V.XSD):]
             if isinstance(v, float) and v != v:
                 # NaN is unordered under every XSD order facet
                 return False
@@ -234,7 +230,7 @@ def literal_in_range(lex: str, rng: Tuple[str, Tuple[Tuple[str, str], ...]]) -> 
         elif facet in _LENGTH_FACETS:
             n = len(lex)
             b2 = int(bound)
-            name = facet[len(XSD):]
+            name = facet[len(V.XSD):]
             if name == "length" and n != b2:
                 return False
             if name == "minLength" and n < b2:

@@ -88,7 +88,10 @@ document-local, so :func:`owlrl_materialize` hands each document to
 :func:`.isomorph.per_document` (one Arrow-batched group per document,
 deduplicated on the JVM inside the ``doc_iri`` stage) and the payload
 is :func:`owlrl_document`, plain-Python graph walking over that
-document's triples that runs without a Spark session. No join,
+document's :class:`.owldoc.DocModel` that runs without a Spark
+session; the disjointness, key, distinctness and negative-assertion
+axioms come from the decode it shares with :mod:`dlreason`
+(:func:`.owldoc.axioms`). No join,
 row-level shuffle or driver loop grows with the corpus.
 
 OWL RL is the W3C profile DESIGNED for rule-based forward
@@ -99,6 +102,7 @@ it stays behind :mod:`dlreason`'s loud unsupported-construct boundary.
 
 from __future__ import annotations
 
+from itertools import combinations
 from typing import Dict, List, Optional, Set, Tuple
 
 from pyspark.sql import DataFrame
@@ -106,33 +110,7 @@ from pyspark.sql import DataFrame
 from .. import vocab as V
 from . import facets as _FX
 from .isomorph import per_document
-
-OWL = "http://www.w3.org/2002/07/owl#"
-
-
-class _Doc:
-    def __init__(self, rows):
-        # rows: (subj, pred, obj, obj_is_literal)
-        self.spo: Dict[Tuple[str, str], List[Tuple[str, bool]]] = {}
-        for s, p, o, il in rows:
-            self.spo.setdefault((s, p), []).append((o, il))
-
-    def objs(self, s: str, p: str) -> List[str]:
-        return [o for o, _ in self.spo.get((s, p), [])]
-
-    def obj(self, s: str, p: str) -> Optional[str]:
-        v = self.spo.get((s, p))
-        return v[0][0] if v else None
-
-    def rdf_list(self, node: str) -> List[str]:
-        out, seen = [], set()
-        while node and node != V.RDF_NIL and node not in seen:
-            seen.add(node)
-            head = self.obj(node, V.RDF_FIRST)
-            if head is not None:
-                out.append(head)
-            node = self.obj(node, V.RDF_REST)
-        return out
+from .owldoc import AXIOM_PREDS, DocModel, axioms, reach
 
 
 def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
@@ -140,7 +118,7 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
     (subj, pred, obj, obj_is_literal) triples: entity triples (types,
     equivalences, subClassOf, object-property facts) plus
     literal-valued facts propagated by prp-spo1."""
-    m = _Doc(rows)
+    m = DocModel(rows)
 
     # ---- indexes ----------------------------------------------------
     # property facts p -> {(x, o_lexical)}
@@ -160,12 +138,17 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
     inv_pairs: List[Tuple[str, str]] = []
     subprop: Dict[str, Set[str]] = {}
     chains: List[Tuple[str, List[str]]] = []
-    disjoint: List[Tuple[str, str]] = []
-    prop_disjoint: List[Tuple[str, str]] = []
-    keys: List[Tuple[str, List[str]]] = []  # C owl:hasKey (p1..pn)
     same_pairs: List[Tuple[str, str]] = []  # asserted owl:sameAs
-    du_subclass: List[Tuple[str, str]] = []  # (part, whole) cls-duo edges
-    diff_pairs: List[Tuple[str, str]] = []  # owl:differentFrom (eq-diff1)
+    # disjointness, keys, differentFrom / AllDifferent and negative
+    # property assertions: the decode shared with dlreason
+    ax = axioms(m)
+    disjoint, prop_disjoint, keys = ax.disjoint, ax.prop_disjoint, ax.keys
+    # eq-diff1 pairs over the named members of each distinctness group
+    diff_pairs = [pair for g in ax.different for pair in combinations(
+        [x for x in g if not x.startswith("_:")], 2)]
+    # cls-duo: C ≡ C1 ⊔ ... ⊔ Cn with parts pairwise disjoint ⇒ Ci ⊑ C
+    # edges (feeding cax-sco); the disjoint pairs are in ax.disjoint
+    du_subclass = [(c, whole) for whole, parts in ax.unions for c in parts]
 
     for (s, p), objs in m.spo.items():
         if p == V.RDF_TYPE:
@@ -174,23 +157,25 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
                     individuals.add(s)
                 if not o.startswith("_:") and not s.startswith("_:"):
                     types.setdefault(s, set()).add(o)
-        elif p == V.RDFS_SUBCLASSOF and not s.startswith("_:"):
+        elif s.startswith("_:") or p in AXIOM_PREDS:
+            continue
+        elif p == V.RDFS_SUBCLASSOF:
             for o, il in objs:
                 if o.startswith("_:"):
                     sub_exprs.append((s, o))
                 else:
                     sub.setdefault(s, set()).add(o)
-        elif p == V.OWL_EQUIVALENT_CLASS and not s.startswith("_:"):
+        elif p == V.OWL_EQUIVALENT_CLASS:
             for o, il in objs:
                 if o.startswith("_:"):
                     eq_exprs.append((s, o))
                 else:
                     named_eq.append((s, o))
-        elif p == V.RDFS_DOMAIN and not s.startswith("_:"):
+        elif p == V.RDFS_DOMAIN:
             o = objs[0][0]
             if not o.startswith("_:"):
                 domains[s] = o
-        elif p == V.RDFS_RANGE and not s.startswith("_:"):
+        elif p == V.RDFS_RANGE:
             o = objs[0][0]
             if not o.startswith("_:") and not o.startswith(V.XSD):
                 ranges[s] = o
@@ -199,15 +184,15 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
                 # (checked post-fixpoint; unparseable → skipped here,
                 # dlreason owns the unsupported diagnostic)
                 range_drs[s] = o
-        elif p == V.OWL_INVERSE_OF and not s.startswith("_:"):
+        elif p == V.OWL_INVERSE_OF:
             for o, il in objs:
                 if not o.startswith("_:"):
                     inv_pairs.append((s, o))
-        elif p == V.RDFS_SUBPROPERTYOF and not s.startswith("_:"):
+        elif p == V.RDFS_SUBPROPERTYOF:
             for o, il in objs:
                 if not o.startswith("_:"):
                     subprop.setdefault(s, set()).add(o)
-        elif p == OWL + "equivalentProperty" and not s.startswith("_:"):
+        elif p == V.OWL + "equivalentProperty":
             # prp-eqp1/eqp2: p ≡ q ⇔ p ⊑ q and q ⊑ p — fold into the
             # sub-property propagation graph (facts flow both ways,
             # closing transitively through mixed ⊑/≡ chains)
@@ -215,43 +200,11 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
                 if not o.startswith("_:"):
                     subprop.setdefault(s, set()).add(o)
                     subprop.setdefault(o, set()).add(s)
-        elif p == OWL + "disjointWith" and not s.startswith("_:"):
-            for o, il in objs:
-                if not o.startswith("_:"):
-                    disjoint.append((s, o))
-        elif p == OWL + "propertyDisjointWith" and not s.startswith("_:"):
-            for o, il in objs:
-                if not o.startswith("_:"):
-                    prop_disjoint.append((s, o))
-        elif p == OWL + "hasKey" and not s.startswith("_:"):
-            # prp-key parse: the object is an RDF list of named
-            # properties (a bare named property is accepted as a
-            # 1-element key for hand-authored facts)
-            for o, il in objs:
-                ps = m.rdf_list(o) if o.startswith("_:") else [o]
-                if ps and not any(k.startswith("_:") for k in ps):
-                    keys.append((s, ps))
-        elif p == OWL + "disjointUnionOf" and not s.startswith("_:"):
-            # cls-duo decomposition: C ≡ C1 ⊔ ... ⊔ Cn with parts
-            # pairwise disjoint ⇒ Ci ⊑ C edges (feeding cax-sco) and
-            # pairwise disjointWith pairs (feeding cax-dw)
-            for o, il in objs:
-                if o.startswith("_:"):
-                    parts = [c for c in m.rdf_list(o) if not c.startswith("_:")]
-                    for c in parts:
-                        du_subclass.append((c, s))
-                    for i1 in range(len(parts)):
-                        for i2 in range(i1 + 1, len(parts)):
-                            disjoint.append((parts[i1], parts[i2]))
-        elif p == OWL + "sameAs" and not s.startswith("_:"):
+        elif p == V.OWL + "sameAs":
             for o, il in objs:
                 if not o.startswith("_:"):
                     same_pairs.append((s, o))
-        elif p == OWL + "differentFrom" and not s.startswith("_:"):
-            for o, il in objs:
-                if not o.startswith("_:"):
-                    diff_pairs.append((s, o))
-        elif p == OWL + "complementOf" and not s.startswith("_:"):
+        elif p == V.OWL_COMPLEMENT_OF:
             # cls-com: c1 complementOf c2 ⇒ provable co-membership is an
             # inconsistency — exactly the cax-dw check, so fold into the
             # disjoint pair list (named complements only; expression
@@ -259,7 +212,7 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
             for o, il in objs:
                 if not o.startswith("_:"):
                     disjoint.append((s, o))
-        elif p == OWL + "propertyChainAxiom" and not s.startswith("_:"):
+        elif p == V.OWL + "propertyChainAxiom":
             for o, il in objs:
                 if o.startswith("_:"):
                     chain = m.rdf_list(o)
@@ -268,8 +221,7 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
                     ):
                         chains.append((s, chain))
         elif (
-            not s.startswith("_:")
-            and not p.startswith("_:")
+            not p.startswith("_:")
             # ypo: diagnostic rows are OUTPUTS, never rule inputs — on a
             # fixpoint re-pass they must not enter the fact base (eq-rep
             # would copy a violation onto merged twins, subproperty
@@ -280,41 +232,6 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
                 facts.setdefault(p, set()).add((s, o))
                 pf.setdefault(p, set()).add((s, o, il))
 
-    # n-ary disjointness axioms (cax-adc / prp-adp) and negative
-    # property assertions live on blank nodes typed with the axiom
-    # class — decompose members lists into the same pairwise checks
-    npa_nodes: List[str] = []
-    for (s0, p0), objs0 in m.spo.items():
-        if p0 != V.RDF_TYPE:
-            continue
-        typeset = {o for o, _ in objs0}
-        if OWL + "NegativePropertyAssertion" in typeset:
-            npa_nodes.append(s0)
-        if OWL + "AllDifferent" in typeset:
-            lst = m.obj(s0, OWL + "distinctMembers") or m.obj(s0, OWL + "members")
-            members = [
-                c for c in (m.rdf_list(lst) if lst else []) if not c.startswith("_:")
-            ]
-            for i1 in range(len(members)):
-                for i2 in range(i1 + 1, len(members)):
-                    diff_pairs.append((members[i1], members[i2]))
-        if (
-            OWL + "AllDisjointClasses" in typeset
-            or OWL + "AllDisjointProperties" in typeset
-        ):
-            lst = m.obj(s0, OWL + "members")
-            members = [
-                c for c in (m.rdf_list(lst) if lst else []) if not c.startswith("_:")
-            ]
-            tgt = (
-                disjoint
-                if OWL + "AllDisjointClasses" in typeset
-                else prop_disjoint
-            )
-            for i1 in range(len(members)):
-                for i2 in range(i1 + 1, len(members)):
-                    tgt.append((members[i1], members[i2]))
-
     # disjointUnionOf part-edges join the named subclass graph BEFORE
     # any closure is taken, so filler checks and cax-sco see them
     for part, whole in du_subclass:
@@ -322,15 +239,7 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
 
     # subClassOf closure for filler checks (tiny per doc)
     def closed_types(x: str) -> Set[str]:
-        out = set(types.get(x, ()))
-        frontier = list(out)
-        while frontier:
-            c = frontier.pop()
-            for up in sub.get(c, ()):
-                if up not in out:
-                    out.add(up)
-                    frontier.append(up)
-        return out
+        return reach(sub, types.get(x, ()))
 
     # ---- expression evaluation -------------------------------------
     def members_of(node: str, depth: int = 0) -> Optional[Set[str]]:
@@ -473,20 +382,12 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
                     types.setdefault(x, set()).add(cls)
 
     # equivalence closure over named classes (sym + trans, minus self)
-    adj: Dict[str, Set[str]] = {}
+    eq_adj: Dict[str, Set[str]] = {}
     for a, b in named_eq:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    for start in adj:
-        seen = {start}
-        frontier = [start]
-        while frontier:
-            c = frontier.pop()
-            for nxt in adj.get(c, ()):
-                if nxt not in seen:
-                    seen.add(nxt)
-                    frontier.append(nxt)
-        for other in seen - {start}:
+        eq_adj.setdefault(a, set()).add(b)
+        eq_adj.setdefault(b, set()).add(a)
+    for start in eq_adj:
+        for other in reach(eq_adj, [start]) - {start}:
             if other not in {o for o, _ in m.spo.get((start, V.OWL_EQUIVALENT_CLASS), ())}:
                 inferred.add((start, V.OWL_EQUIVALENT_CLASS, other, False))
 
@@ -522,16 +423,7 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
 
     # transitively close the sub-property graph once (scm-spo is used
     # for propagation, not emitted as triples)
-    subprop_closed: Dict[str, Set[str]] = {}
-    for p0 in subprop:
-        seen, frontier = set(), [p0]
-        while frontier:
-            c = frontier.pop()
-            for up in subprop.get(c, ()):
-                if up not in seen and up != p0:
-                    seen.add(up)
-                    frontier.append(up)
-        subprop_closed[p0] = seen
+    subprop_closed = {p0: reach(subprop, ups) - {p0} for p0, ups in subprop.items()}
 
     if trans or sym or inv_pairs or subprop_closed or chains:
         asserted = {p: set(v) for p, v in pf.items()}
@@ -654,28 +546,20 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
             mid_sub.setdefault(s2, set()).add(o2)
 
     def closed_mid(x: str) -> Set[str]:
-        out = set(mid_types.get(x, ()))
-        frontier = list(out)
-        while frontier:
-            c = frontier.pop()
-            for up in mid_sub.get(c, ()):
-                if up not in out:
-                    out.add(up)
-                    frontier.append(up)
-        return out
+        return reach(mid_sub, mid_types.get(x, ()))
 
     derived_same: List[Tuple[str, str]] = []
     for cls, expr in eq_exprs + sub_exprs:
         on_p = m.obj(expr, V.OWL_ON_PROPERTY)
         if not on_p or on_p.startswith("_:"):
             continue
-        avf = m.obj(expr, OWL + "allValuesFrom")
-        maxc = m.obj(expr, OWL + "maxCardinality")
+        avf = m.obj(expr, V.OWL + "allValuesFrom")
+        maxc = m.obj(expr, V.OWL + "maxCardinality")
         qual = None
         if maxc is None:
-            maxc = m.obj(expr, OWL + "maxQualifiedCardinality")
+            maxc = m.obj(expr, V.OWL + "maxQualifiedCardinality")
             if maxc is not None:
-                qual = m.obj(expr, OWL + "onClass")
+                qual = m.obj(expr, V.OWL + "onClass")
                 if qual == V.OWL_THING:
                     qual = None
         if avf is None and maxc is None:
@@ -740,9 +624,9 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
                     for y2 in qs[1:]:
                         derived_same.append((qs[0], y2))
     for p, ts in types.items():
-        fp = OWL + "FunctionalProperty" in ts or V.OWL_FUNCTIONAL in ts
+        fp = V.OWL + "FunctionalProperty" in ts or V.OWL_FUNCTIONAL in ts
         ifp = (
-            OWL + "InverseFunctionalProperty" in ts
+            V.OWL + "InverseFunctionalProperty" in ts
             or V.OWL_INVERSE_FUNCTIONAL in ts
         )
         if not fp and not ifp:
@@ -773,10 +657,6 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
     # share members, and an equivalent of a subclass inherits upward
     # too); owl:/rdf: vocabulary classes are not user classes and stay
     # out
-    eq_adj: Dict[str, Set[str]] = {}
-    for a, b in named_eq:
-        eq_adj.setdefault(a, set()).add(b)
-        eq_adj.setdefault(b, set()).add(a)
     # the closure graph must include subClassOf edges inferred EARLIER
     # in this pass (domain subsumption adds C ⊑ D to `inferred`, not
     # `sub`) — otherwise members typed C miss D, an incompleteness
@@ -785,6 +665,8 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
     for s2, p2, o2, _il in inferred:
         if p2 == V.RDFS_SUBCLASSOF and not o2.startswith("_:"):
             sub_all.setdefault(s2, set()).add(o2)
+    for c, eqs in eq_adj.items():
+        sub_all.setdefault(c, set()).update(eqs)
     all_types: Dict[str, Set[str]] = {x: set(ts) for x, ts in types.items()}
     for s2, p2, o2, _il in inferred:
         if p2 == V.RDF_TYPE:
@@ -792,15 +674,7 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
     for x, ts in all_types.items():
         if x.startswith("_:"):
             continue
-        closed: Set[str] = set()
-        frontier = [c for c in ts]
-        while frontier:
-            c = frontier.pop()
-            for up in (*sub_all.get(c, ()), *eq_adj.get(c, ())):
-                if up not in closed and up not in ts:
-                    closed.add(up)
-                    frontier.append(up)
-        for up in closed:
+        for up in reach(sub_all, ts) - ts:
             if up != V.OWL_THING and not up.startswith(V.OWL) and not up.startswith(V.RDF):
                 inferred.add((x, V.RDF_TYPE, up, False))
 
@@ -905,7 +779,7 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
             for a in mem:
                 for b in mem:
                     if a != b and (a, b) not in asserted_same:
-                        inferred.add((a, OWL + "sameAs", b, False))
+                        inferred.add((a, V.OWL + "sameAs", b, False))
             # eq-rep-s / eq-rep-o over the post-fixpoint fact base
             for p, cur in pf.items():
                 for s2, o, il in list(cur):
@@ -949,8 +823,8 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
     # ypo:propertyViolation diagnostics over the POST-fixpoint fact
     # base (a violation introduced by symmetry/inverse/chain
     # propagation is caught, not just asserted ones)
-    irreflexive = {x for x, ts in types.items() if OWL + "IrreflexiveProperty" in ts}
-    asymmetric = {x for x, ts in types.items() if OWL + "AsymmetricProperty" in ts}
+    irreflexive = {x for x, ts in types.items() if V.OWL + "IrreflexiveProperty" in ts}
+    asymmetric = {x for x, ts in types.items() if V.OWL + "AsymmetricProperty" in ts}
     for p in irreflexive:
         for s, o, il in pf.get(p, ()):
             if not il and s == o:
@@ -974,13 +848,9 @@ def _infer_doc(rows) -> Set[Tuple[str, str, str, bool]]:
     # — surfaced as the same loud propertyViolation diagnostics,
     # checked over the POST-fixpoint base (a chain/inverse-derived
     # denied fact is caught too)
-    for node in sorted(npa_nodes):
-        src = m.obj(node, OWL + "sourceIndividual")
-        ap = m.obj(node, OWL + "assertionProperty")
-        if not src or not ap:
-            continue
-        tgts = list(m.spo.get((node, OWL + "targetIndividual"), ()))
-        tgts += list(m.spo.get((node, OWL + "targetValue"), ()))
+    for node, src, ap in ax.npas:
+        tgts = list(m.spo.get((node, V.OWL + "targetIndividual"), ()))
+        tgts += list(m.spo.get((node, V.OWL + "targetValue"), ()))
         for o, il in tgts:
             if (src, o, il) in pf.get(ap, ()):
                 inferred.add((src, V.YPO + "propertyViolation", ap, False))

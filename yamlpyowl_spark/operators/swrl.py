@@ -85,6 +85,7 @@ from ..parser.document import _parse_swrl
 from ..parser.model import ParseError
 from ..schema import FACT_SCHEMA, arrow_local_df
 from .isomorph import per_document
+from .owldoc import reach
 
 _I64 = 2**63
 _I32 = 2**31
@@ -393,14 +394,14 @@ def _rule_rel(triples: DataFrame) -> DataFrame:
 
 
 def _doc_rules(rel_rows):
-    """The rules of distinct ``(doc_iri, pred, subj, obj)`` rows — the
-    collected ``_rule_rel`` rows on the driver, a document's rows in
-    :func:`chain_document` — as ``(rules, bad)``: ``(doc_iri, (body,
-    head))`` per distinct rule src and per rule synthesized from an
-    owl:TransitiveProperty or owl:inverseOf axiom (inverseOf fires both
-    directions), and the sorted ``(doc_iri, reason, src)`` of the rule
-    srcs :func:`compile_rule` rejects; other rows are ignored."""
-    rules, bad, seen_srcs = [], [], set()
+    """Compile the rules of distinct ``(doc_iri, pred, subj, obj)`` rows
+    — the collected ``_rule_rel`` rows on the driver, a document's rows
+    in :func:`chain_document` — one at a time: yields ``(doc_iri,
+    (body, head), None)`` per distinct rule src and per rule synthesized
+    from an owl:TransitiveProperty or owl:inverseOf axiom (inverseOf
+    fires both directions), and ``(doc_iri, None, (reason, src))`` per
+    rule src :func:`compile_rule` rejects; other rows are ignored."""
+    seen_srcs = set()
     for d, p, s, o in rel_rows:
         if p == V.YPO_RULE_SRC:
             # two rule NODES (distinct subj) can carry the same src text
@@ -408,15 +409,14 @@ def _doc_rules(rel_rows):
                 continue
             seen_srcs.add((d, o))
             try:
-                rules.append((d, compile_rule(d, *_parse_swrl(o))))
+                yield d, compile_rule(d, *_parse_swrl(o)), None
             except Exception as e:  # noqa: BLE001 — reported by the driver
-                bad.append((d, f"{type(e).__name__}: {e}", o))
+                yield d, None, (f"{type(e).__name__}: {e}", o)
         elif p == V.OWL_INVERSE_OF:
-            rules.append((d, compile_rule("", [(o, _XY)], [(s, _YX)])))
-            rules.append((d, compile_rule("", [(s, _XY)], [(o, _YX)])))
+            yield d, compile_rule("", [(o, _XY)], [(s, _YX)]), None
+            yield d, compile_rule("", [(s, _XY)], [(o, _YX)]), None
         elif p == V.RDF_TYPE and o == V.OWL_TRANSITIVE:
-            rules.append((d, compile_rule("", [(s, _XY), (s, _YZ)], [(s, _XZ)])))
-    return rules, sorted(bad)
+            yield d, compile_rule("", [(s, _XY), (s, _YZ)], [(s, _XZ)]), None
 
 
 # --------------------------------------------------------------------------
@@ -513,16 +513,7 @@ def _superclasses(rows) -> dict:
     for s, p, o, _, _ in rows:
         if p == V.RDFS_SUBCLASSOF:
             up.setdefault(s, set()).add(o)
-    closure = {}
-    for c, parents in up.items():
-        seen, todo = set(), list(parents)
-        while todo:
-            x = todo.pop()
-            if x not in seen:
-                seen.add(x)
-                todo.extend(up.get(x, ()))
-        closure[c] = seen
-    return closure
+    return {c: reach(up, parents) for c, parents in up.items()}
 
 
 def _memberships(rows, sup: dict) -> set:
@@ -544,7 +535,7 @@ def chain_document(doc_iri: str, rows, max_iter: int = 15) -> set:
     not among its non-blank facts. Rules that fail validation are
     dropped (the driver has already raised or warned)."""
     rows = set(rows)
-    rules = [r for _, r in _doc_rules({(doc_iri, p, s, o) for s, p, o, _, _ in rows})[0]]
+    rules = [r for _, r, _ in _doc_rules({(doc_iri, p, s, o) for s, p, o, _, _ in rows}) if r]
     known = {r for r in rows if not r[0].startswith("_:") and not r[2].startswith("_:")}
     sup = _superclasses(known)
     known_types = _memberships(known, sup)
@@ -600,17 +591,24 @@ def forward_chain(
     if on_unsupported not in ("raise", "skip"):
         raise ValueError(f"on_unsupported must be raise|skip: {on_unsupported!r}")
     spark = triples.sparkSession
-    rules, bad = _doc_rules(_rule_rel(triples).collect())
+    # the driver keeps only the documents with a valid rule and the
+    # rejected srcs, never the compiled rules themselves
+    docs, bad = set(), []
+    for d, rule, why in _doc_rules(_rule_rel(triples).collect()):
+        if rule:
+            docs.add(d)
+        else:
+            bad.append((d, *why))
+    bad.sort()
     if bad:
         msgs = [f"{d}: {why} in rule {src!r}" for d, why, src in bad[:5]]
         msg = "; ".join(msgs) + (f" (+{len(bad) - 5} more)" if len(bad) > 5 else "")
         if on_unsupported == "raise":
             raise UnsupportedSWRLError("unsupported SWRL fragment: " + msg)
         warnings.warn("skipping unsupported SWRL rules: " + msg)
-    docs = sorted({d for d, _ in rules})
     if not docs:
         return arrow_local_df(spark, [], FACT_SCHEMA)
-    rule_docs = arrow_local_df(spark, [(d,) for d in docs], "doc_iri string")
+    rule_docs = arrow_local_df(spark, [(d,) for d in sorted(docs)], "doc_iri string")
     return per_document(
         triples.join(F.broadcast(rule_docs), "doc_iri", "left_semi"),
         partial(chain_document, max_iter=max_iter),

@@ -1910,16 +1910,8 @@ def _register_dlreason():
 
     @_q("kg_dl_qualified", qual_sql)
     def kg_dl_qualified(spark, sf_dir):
-        from .operators.dlreason import (
-            OWL,
-            OWL_ON_CLASS,
-            OWL_ON_PROPERTY,
-            RDF_FIRST,
-            RDF_NIL,
-            RDF_REST,
-            RDFS_RANGE,
-            dl_model_search,
-        )
+        from .operators.dlreason import OWL_ON_CLASS, dl_model_search
+        from .vocab import OWL, OWL_ON_PROPERTY, RDF_FIRST, RDF_NIL, RDF_REST, RDFS_RANGE
 
         def enum(cls, *members):
             tag = cls
@@ -1986,15 +1978,8 @@ def _register_dlreason():
 
     @_q("kg_dl_disjoint", dj_sql)
     def kg_dl_disjoint(spark, sf_dir):
-        from .operators.dlreason import (
-            OWL,
-            OWL_ON_PROPERTY,
-            RDF_FIRST,
-            RDF_NIL,
-            RDF_REST,
-            RDFS_RANGE,
-            dl_model_search,
-        )
+        from .operators.dlreason import dl_model_search
+        from .vocab import OWL, OWL_ON_PROPERTY, RDF_FIRST, RDF_NIL, RDF_REST, RDFS_RANGE
 
         def enum(cls, *members):
             e, rows = f"_:e_{cls}", []
@@ -2061,17 +2046,8 @@ def _register_dlreason():
 
     @_q("kg_dl_key", ky_sql)
     def kg_dl_key(spark, sf_dir):
-        from .operators.dlreason import (
-            OWL,
-            OWL_ALL_DIFFERENT,
-            OWL_DISTINCT_MEMBERS,
-            OWL_ON_PROPERTY,
-            RDF_FIRST,
-            RDF_NIL,
-            RDF_REST,
-            RDFS_RANGE,
-            dl_model_search,
-        )
+        from .operators.dlreason import dl_model_search
+        from .vocab import OWL, OWL_ALL_DIFFERENT, OWL_DISTINCT_MEMBERS, OWL_ON_PROPERTY, RDF_FIRST, RDF_NIL, RDF_REST, RDFS_RANGE
 
         def rdf_list(tag, *items):
             rows = []
